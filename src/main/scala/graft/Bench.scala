@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -104,10 +104,10 @@ object Bench {
       elapsed
     }
 
-    def materialize(name: String): Double = timed(name) {
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
+    def noop(name: String)(df: => DataFrame): Double =
+      timed(name)(df.write.format("noop").mode("overwrite").save())
+    def materialize(name: String): Double =
+      noop(name)(SparkEntry.queries(name)(spark, sfDir))
 
     // JVM / codegen / parquet-footer warm-up (not reported):
     // q_count_total touches the relational scan path, q_fingerprint the
@@ -233,259 +233,15 @@ object Bench {
         SparkEntry.queries.keys.toSeq
       else headline.filter(SparkEntry.queries.contains)
     val names = base.sorted.filter(n => only.forall(_.contains(n)))
-    // The near-dup pair list is a session-shared materialized
-    // intermediate (Dedup.sharedJaccardPairs) consumed by the whole
-    // jaccard family; build it up front and bill it as its OWN entry,
-    // so family queries measure their incremental cost instead of
-    // whichever one sorts first silently absorbing the ~40 s build.
-    val family = Set("q_ngram_jaccard", "q_dedup_components", "q_cc_sizes",
-      "q_dedup_canonical", "q_triangles", "q_pagerank", "q_pagerank_step",
-      "q_prep_pipeline", "q_kcore", "q_lsh_recall",
-      "q_dedup_aware_split", "q_leakage_guard", "q_crossmodal_dedup",
-      "q_dup_rate_by_source", "q_simhash_recall", "q_dedup_apply",
-      "q_softdedup", "q_dup_assortativity", "q_dedup_funnel",
-      "q_corpus_release")
-    // Consumers of the materialized postings layer BELOW the pair list
-    // (the pair-list build itself is one of them).
-    val postingsFamily = family ++ Set("q_dedup_minhash", "q_jaccard_prefix",
-      "q_minhash_error", "q_containment", "q_contamination",
-      "q_ngram_novelty", "q_release_delta",
-      // the theta family reads sourceShingles = postings ⋈ source, so
-      // the postings build must be billed up front, not inside
-      // shared_theta_sketch / the delta's sketch legs
-      "q_theta_sketch", "q_theta_setops", "q_theta_matrix",
-      "q_theta_delta", "q_stream_theta_delta",
-      // r14: the release twin's v1 stores and the contamination twin's
-      // eval index are postings-table filters now — same billing rule
-      "q_stream_release", "q_stream_contamination")
-    val sharedPostings: Seq[(String, Double)] =
-      if (names.exists(postingsFamily.contains)) {
-        val t = timed("shared_shingle_postings") {
-          graft.ops.Dedup.sharedShinglePostings(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_shingle_postings  $t%9.3f s")
-        Seq("shared_shingle_postings" -> t)
-      } else Seq.empty
-    // per-doc bigram-LM perplexity: one tokenize+shingle+LM-train
-    // chain shared by q_lm_perplexity and q_perplexity_buckets (was
-    // re-derived per consumer — the slowest bench entry twice over)
-    val perplexityFamily =
-      Set("q_lm_perplexity", "q_perplexity_buckets", "q_doremi_step",
-        "q_quality_ablate")
-    val sharedPerplexity: Seq[(String, Double)] =
-      if (names.exists(perplexityFamily.contains)) {
-        val t = timed("shared_perplexity") {
-          graft.ops.TextAnalysis.sharedPerplexity(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_perplexity        $t%9.3f s")
-        Seq("shared_perplexity" -> t)
-      } else Seq.empty
-    // the BM25 score table for the fixed retrieval query: one
-    // tokenize+explode pass shared by q_bm25, q_rrf_fusion, and
-    // q_query_expansion (whose feedback set is its top-FbDocs)
-    val bm25Family = Set("q_bm25", "q_rrf_fusion", "q_query_expansion")
-    val sharedBm25: Seq[(String, Double)] =
-      if (names.exists(bm25Family.contains)) {
-        val t = timed("shared_bm25") {
-          graft.ops.TextAnalysis.bm25Scores(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_bm25              $t%9.3f s")
-        Seq("shared_bm25" -> t)
-      } else Seq.empty
-    // the IVF probed-assignment table (the vector index): one
-    // quantizer-train + assign pass shared by the whole IVF family
-    val ivfFamily = Set("q_sim_ann", "q_ann_recall", "q_dedup_embedding_ivf",
-      "q_ivf_pq_search", "q_label_propagation", "q_bitext_mine",
-      "q_contrastive_pairs", "q_knn_graph", "q_semantic_outliers",
-      "q_cluster_balance", "q_embedding_drift",
-      "q_ivf_retrain", "q_stream_ivf_retrain",
-      "q_ann_graph", "q_ann_graph_recall",
-      "q_ann_graph2", "q_ann_graph2_recall")
-    val sharedIvf: Seq[(String, Double)] =
-      if (names.exists(ivfFamily.contains)) {
-        val t = timed("shared_ivf_probed") {
-          graft.functions.CosineSim.register(spark)
-          graft.ops.Similarity.sharedIvfProbed(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_ivf_probed        $t%9.3f s")
-        Seq("shared_ivf_probed" -> t)
-      } else Seq.empty
-    // the IVF candidate-pair edge list (the index's candidate output):
-    // one bucket self-join + cosine pass shared by the ANN family
-    val ivfCandFamily = Set("q_sim_ann", "q_ann_recall", "q_ann_graph",
-      "q_ann_graph_recall", "q_ann_graph2", "q_ann_graph2_recall",
-      "q_knn_graph")
-    val sharedIvfCand: Seq[(String, Double)] =
-      if (names.exists(ivfCandFamily.contains)) {
-        val t = timed("shared_ivf_cand") {
-          graft.ops.Similarity.sharedIvfCand(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_ivf_cand          $t%9.3f s")
-        Seq("shared_ivf_cand" -> t)
-      } else Seq.empty
-    // the full-corpus PQ code table (the stored PQ index): one
-    // quantize+encode pass shared by the PQ query family
-    val pqFamily = Set("q_pq_encode", "q_pq_search", "q_ivf_pq_search")
-    val sharedPq: Seq[(String, Double)] =
-      if (names.exists(pqFamily.contains)) {
-        val t = timed("shared_pq_codes") {
-          graft.ops.Similarity.sharedPqCodes(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_pq_codes          $t%9.3f s")
-        Seq("shared_pq_codes" -> t)
-      } else Seq.empty
-    // the 16-byte-per-doc image hash table: one real-decode pass
-    // shared by q_image_phash and q_crossmodal_dedup
-    val phashFamily = Set("q_image_phash", "q_crossmodal_dedup")
-    val sharedPhash: Seq[(String, Double)] =
-      if (names.exists(phashFamily.contains)) {
-        val t = timed("shared_phash") {
-          graft.ops.Multimodal.sharedPhash(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_phash             $t%9.3f s")
-        Seq("shared_phash" -> t)
-      } else Seq.empty
-    // the DSIR log-weight table: one bigram explode + LM fit shared by
-    // the score surface, the apply census, and the release capstone
-    val dsirFamily = Set("q_dsir", "q_dsir_apply", "q_corpus_release")
-    val sharedDsir: Seq[(String, Double)] =
-      if (names.exists(dsirFamily.contains)) {
-        val t = timed("shared_dsir_logw") {
-          graft.ops.TextAnalysis.dsirLogw(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_dsir_logw         $t%9.3f s")
-        Seq("shared_dsir_logw" -> t)
-      } else Seq.empty
-    // the SemDeDup cluster assignment: one n·K centroid pass shared by
-    // q_semdedup's self-join sides, the funnel's semantic stage, and
-    // the release capstone
-    val semFamily = Set("q_semdedup", "q_dedup_funnel", "q_corpus_release")
-    val sharedSem: Seq[(String, Double)] =
-      if (names.exists(semFamily.contains)) {
-        val t = timed("shared_semdedup") {
-          graft.functions.CosineSim.register(spark)
-          graft.ops.Similarity.sharedSemdedupAssigned(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_semdedup          $t%9.3f s")
-        Seq("shared_semdedup" -> t)
-      } else Seq.empty
-    // the banded MinHash est-pair table (the sketch index output):
-    // one signature + band self-join + estimate pass shared by the
-    // candidate query and both quality audits
-    val mhFamily = Set("q_dedup_minhash", "q_minhash_error", "q_lsh_recall",
-      "q_release_delta")
-    val sharedMh: Seq[(String, Double)] =
-      if (names.exists(mhFamily.contains)) {
-        val t = timed("shared_minhash_pairs") {
-          graft.ops.Dedup.sharedMinhashEstPairs(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_minhash_pairs     $t%9.3f s")
-        Seq("shared_minhash_pairs" -> t)
-      } else Seq.empty
-    // the suffix-rank table (7 prefix-doubling rounds): the stored
-    // index q_span_dedup_exact's census scans — billed separately so
-    // the query measures its incremental census cost (the build is
-    // what a production exact-dedup job materializes once per corpus)
-    val saFamily = Set("q_span_dedup_exact", "q_dup_spectrum", "q_contam_span",
-      "q_decontam_span")
-    val sharedSa: Seq[(String, Double)] =
-      if (names.exists(saFamily.contains)) {
-        val t = timed("shared_span_sa") {
-          graft.ops.SpanExact.saRanks(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_span_sa           $t%9.3f s")
-        // the fused group pass + adjacent-group LCP table — shared by
-        // the dup_len census AND the contamination chain (round-10)
-        val t2 = timed("shared_span_adj") {
-          graft.ops.SpanExact.saAdjacency(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_span_adj          $t2%9.3f s")
-        Seq("shared_span_sa" -> t, "shared_span_adj" -> t2)
-      } else Seq.empty
-    // the per-source KMV sketch artifact (round-11): one postings
-    // aggregate shared by all three theta sketch legs
-    val thetaFamily = Set("q_theta_sketch", "q_theta_setops",
-      "q_theta_matrix")
-    val sharedTheta: Seq[(String, Double)] =
-      if (names.exists(thetaFamily.contains)) {
-        val t = timed("shared_theta_sketch") {
-          graft.ops.Govern.sharedThetaSketches(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_theta_sketch      $t%9.3f s")
-        Seq("shared_theta_sketch" -> t)
-      } else Seq.empty
-    // the deterministic preference-pair table shared by the pair dump
-    // and the arena leaderboard (round-11 late)
-    val prefFamily = Set("q_pref_pairs", "q_arena_bt")
-    val sharedPref: Seq[(String, Double)] =
-      if (names.exists(prefFamily.contains)) {
-        val t = timed("shared_pref_pairs") {
-          graft.ops.Pref.prefPairs(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_pref_pairs        $t%9.3f s")
-        Seq("shared_pref_pairs" -> t)
-      } else Seq.empty
-    // the capped SimHash band table shared by the pair query and its
-    // recall audit
-    val shFamily = Set("q_dedup_simhash", "q_simhash_recall")
-    val sharedSh: Seq[(String, Double)] =
-      if (names.exists(shFamily.contains)) {
-        val t = timed("shared_simhash_bands") {
-          graft.ops.Dedup.simhashLiveBands(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_simhash_bands     $t%9.3f s")
-        Seq("shared_simhash_bands" -> t)
-      } else Seq.empty
-    val shared: Seq[(String, Double)] =
-      sharedPostings ++ sharedPerplexity ++ sharedBm25 ++ sharedIvf ++ sharedPq ++
-        sharedIvfCand ++ sharedPhash ++ sharedDsir ++ sharedSem ++
-        sharedMh ++ sharedSa ++ sharedTheta ++ sharedPref ++ sharedSh ++ (
-      if (names.exists(family.contains)) {
-        val t = timed("shared_jaccard_pairs") {
-          graft.ops.Dedup.sharedJaccardPairs(spark, sfDir, 0.6)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_jaccard_pairs     $t%9.3f s")
-        Seq("shared_jaccard_pairs" -> t)
-      } else Seq.empty) ++ (
-      // basket incidences: same discipline — build up front, bill as
-      // their own entries so the basket queries measure incremental cost
-      if (names.contains("q_assoc_rules")) {
-        val t = timed("shared_order_baskets") {
-          graft.ops.Baskets.orderItems(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_order_baskets     $t%9.3f s")
-        Seq("shared_order_baskets" -> t)
-      } else Seq.empty) ++ (
-      if (names.contains("q_cooccur")) {
-        val t = timed("shared_cust_baskets") {
-          graft.ops.Baskets.custItems(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_cust_baskets      $t%9.3f s")
-        Seq("shared_cust_baskets" -> t)
-      } else Seq.empty)
-    val results = shared ++ names.map { n =>
-      val t = materialize(n)
+    def report(n: String, t: Double): (String, Double) = {
       System.err.println(f"[bench] $n%-24s $t%9.3f s")
       n -> t
     }
+    // shared tables first, each billed as its own entry (see [[shared]])
+    val results =
+      shared.filter(e => names.exists(e.consumers))
+        .map(e => report(e.name, noop(e.name)(e.build(spark, sfDir)))) ++
+        names.map(n => report(n, materialize(n)))
     spark.stop()
     // Persist the first-look result BEFORE the repin fork: the fork
     // adds minutes of wall, and a bench killed mid-repin by an outer
@@ -594,6 +350,101 @@ object Bench {
       System.err.println(s"[bench] could not write BENCH_METRICS.json: ${e.getMessage}")
     }
     println(jline(top10))
+  }
+
+  /** A session-shared materialized table (see [[graft.ops.Scratch]]):
+    * when any selected query is in `consumers`, Bench builds it up
+    * front and bills it as its OWN `name` entry, so the consumers
+    * measure their incremental cost instead of whichever one sorts
+    * first silently absorbing the build.
+    */
+  private[graft] final case class Shared(name: String, consumers: Set[String],
+      build: (SparkSession, String) => DataFrame)
+
+  /** Every shared table, in build order. */
+  private[graft] val shared: Seq[Shared] = {
+    import graft.ops._
+    // the near-dup pair list (Dedup.sharedJaccardPairs), consumed by
+    // the whole jaccard family
+    val family = Set("q_ngram_jaccard", "q_dedup_components", "q_cc_sizes",
+      "q_dedup_canonical", "q_triangles", "q_pagerank", "q_pagerank_step",
+      "q_prep_pipeline", "q_kcore", "q_lsh_recall",
+      "q_dedup_aware_split", "q_leakage_guard", "q_crossmodal_dedup",
+      "q_dup_rate_by_source", "q_simhash_recall", "q_dedup_apply",
+      "q_softdedup", "q_dup_assortativity", "q_dedup_funnel",
+      "q_corpus_release")
+    // consumers of the postings layer BELOW the pair list (the
+    // pair-list build itself is one of them)
+    val postingsFamily = family ++ Set("q_dedup_minhash", "q_jaccard_prefix",
+      "q_minhash_error", "q_containment", "q_contamination",
+      "q_ngram_novelty", "q_release_delta",
+      // the theta family reads sourceShingles = postings ⋈ source, so
+      // the postings build must be billed up front, not inside
+      // shared_theta_sketch / the delta's sketch legs
+      "q_theta_sketch", "q_theta_setops", "q_theta_matrix",
+      "q_theta_delta", "q_stream_theta_delta",
+      // r14: the release twin's v1 stores and the contamination twin's
+      // eval index are postings-table filters now — same billing rule
+      "q_stream_release", "q_stream_contamination")
+    // the suffix-rank table (the stored index the exact-span census
+    // scans) and the fused group pass + adjacent-group LCP table shared
+    // by the dup_len census and the contamination chain
+    val saFamily = Set("q_span_dedup_exact", "q_dup_spectrum", "q_contam_span",
+      "q_decontam_span")
+    def cosine(build: (SparkSession, String) => DataFrame)(s: SparkSession, dir: String) = {
+      graft.functions.CosineSim.register(s)
+      build(s, dir)
+    }
+    Seq(
+      Shared("shared_shingle_postings", postingsFamily, Dedup.sharedShinglePostings),
+      // per-doc bigram-LM perplexity: one tokenize+shingle+LM-train chain
+      Shared("shared_perplexity", Set("q_lm_perplexity", "q_perplexity_buckets",
+        "q_doremi_step", "q_quality_ablate"), TextAnalysis.sharedPerplexity),
+      // the BM25 score table for the fixed retrieval query (q_query_expansion's
+      // feedback set is its top-FbDocs)
+      Shared("shared_bm25", Set("q_bm25", "q_rrf_fusion", "q_query_expansion"),
+        TextAnalysis.bm25Scores),
+      // the IVF probed-assignment table (the vector index)
+      Shared("shared_ivf_probed", Set("q_sim_ann", "q_ann_recall",
+        "q_dedup_embedding_ivf", "q_ivf_pq_search", "q_label_propagation",
+        "q_bitext_mine", "q_contrastive_pairs", "q_knn_graph",
+        "q_semantic_outliers", "q_cluster_balance", "q_embedding_drift",
+        "q_ivf_retrain", "q_stream_ivf_retrain", "q_ann_graph",
+        "q_ann_graph_recall", "q_ann_graph2", "q_ann_graph2_recall"),
+        cosine(Similarity.sharedIvfProbed)),
+      // the IVF candidate-pair edge list (the index's candidate output)
+      Shared("shared_ivf_cand", Set("q_sim_ann", "q_ann_recall", "q_ann_graph",
+        "q_ann_graph_recall", "q_ann_graph2", "q_ann_graph2_recall",
+        "q_knn_graph"), Similarity.sharedIvfCand),
+      // the full-corpus PQ code table (the stored PQ index)
+      Shared("shared_pq_codes", Set("q_pq_encode", "q_pq_search", "q_ivf_pq_search"),
+        Similarity.sharedPqCodes),
+      // the 16-byte-per-doc image hash table: one real-decode pass
+      Shared("shared_phash", Set("q_image_phash", "q_crossmodal_dedup"),
+        Multimodal.sharedPhash),
+      // the DSIR log-weight table: one bigram explode + LM fit
+      Shared("shared_dsir_logw", Set("q_dsir", "q_dsir_apply", "q_corpus_release"),
+        TextAnalysis.dsirLogw),
+      // the SemDeDup cluster assignment: one n·K centroid pass
+      Shared("shared_semdedup", Set("q_semdedup", "q_dedup_funnel", "q_corpus_release"),
+        cosine(Similarity.sharedSemdedupAssigned)),
+      // the banded MinHash est-pair table (the sketch index output)
+      Shared("shared_minhash_pairs", Set("q_dedup_minhash", "q_minhash_error",
+        "q_lsh_recall", "q_release_delta"), Dedup.sharedMinhashEstPairs),
+      Shared("shared_span_sa", saFamily, SpanExact.saRanks),
+      Shared("shared_span_adj", saFamily, SpanExact.saAdjacency),
+      // the per-source KMV sketch artifact shared by all three theta legs
+      Shared("shared_theta_sketch", Set("q_theta_sketch", "q_theta_setops",
+        "q_theta_matrix"), Govern.sharedThetaSketches),
+      // the deterministic preference-pair table
+      Shared("shared_pref_pairs", Set("q_pref_pairs", "q_arena_bt"), Pref.prefPairs),
+      // the capped SimHash band table shared by the pair query and its audit
+      Shared("shared_simhash_bands", Set("q_dedup_simhash", "q_simhash_recall"),
+        Dedup.simhashLiveBands),
+      Shared("shared_jaccard_pairs", family, Dedup.sharedJaccardPairs(_, _, 0.6)),
+      // basket incidences
+      Shared("shared_order_baskets", Set("q_assoc_rules"), Baskets.orderItems),
+      Shared("shared_cust_baskets", Set("q_cooccur"), Baskets.custItems))
   }
 
   /** Fork a fresh JVM running ONLY the flagged entries and return

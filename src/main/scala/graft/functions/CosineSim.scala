@@ -63,9 +63,12 @@ object CosineSim {
   val info = new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim")
 
   /** Per-session SQL registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    if (!reg.functionExists(FunctionIdentifier("cosine_sim")))
+      reg.createOrReplaceTempFunction(
+        "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
+  }
 }
 
 /** `SparkSessionExtensions` hook so library users get the native

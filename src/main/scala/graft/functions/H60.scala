@@ -2,6 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -48,32 +49,28 @@ object H60 {
 
 /** Session registration for the engine's native expressions. */
 object Registry {
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim" -> (exprs => CosineSim(exprs(0), exprs(1))),
+    "h60" -> (exprs => H60(exprs.head)),
+    "bottom_k_ids" ->
+      (exprs => BottomKIds(exprs(0), exprs(1), exprs(2)).toAggregateExpression()),
+    "top_k_by_score" ->
+      (exprs => TopKByScore(exprs(0), exprs(1), exprs(2)).toAggregateExpression()),
+    "kmv_min_k" -> (exprs => KmvMinK(exprs(0), exprs(1)).toAggregateExpression()),
+    "mg_topk" -> (exprs => MisraGries(exprs(0), exprs(1)).toAggregateExpression()),
+    "array_lcp_from" ->
+      (exprs => ArrayLcpFrom(exprs(0), exprs(1), exprs(2), exprs(3))))
+
+  /** Register the functions this session lacks — idempotent, so the
+    * per-read calls (every `Tables(...)`) neither rebuild the registry
+    * entries nor log a "replaced a previously registered function"
+    * WARN each time.
+    */
   def ensure(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "h60", exprs => H60(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "bottom_k_ids",
-      exprs => BottomKIds(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "top_k_by_score",
-      exprs => TopKByScore(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "kmv_min_k",
-      exprs => KmvMinK(exprs(0), exprs(1)).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "mg_topk",
-      exprs => MisraGries(exprs(0), exprs(1)).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "array_lcp_from",
-      exprs => ArrayLcpFrom(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "scala_udf")
+    for ((name, build) <- builders
+         if !reg.functionExists(FunctionIdentifier(name)))
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
     // session-local optimizer rule (spark-submit users get it via
     // GraftExtensions.injectOptimizerRule instead)
     val exp = spark.experimental

@@ -256,54 +256,25 @@ object Dedup {
     * prep capstone, the plain pair query). Recomputing the shingle+join chain
     * per consumer multiplied a ~40 s upstream cost across the bench
     * (r2: ~285 s of a 439 s total), so it is materialized ONCE per
-    * (corpus dir, threshold) as write-once parquet in engine scratch
-    * space and every consumer reads the file. This mirrors what a
-    * production pipeline does anyway: the similarity join's output is
-    * a first-class intermediate table, not a per-query subplan. The
-    * round-trip is exact (long, long, double), so every oracle hash is
-    * unchanged; correctness runs remain per-query independent because
-    * the file is a pure deterministic function of the same inputs.
+    * (corpus dir, threshold) through [[Scratch.materialize]] and every
+    * consumer reads the file. This mirrors what a production pipeline
+    * does anyway: the similarity join's output is a first-class
+    * intermediate table, not a per-query subplan. The round-trip is
+    * exact (long, long, double), so every oracle hash is unchanged;
+    * correctness runs remain per-query independent because the file is
+    * a pure deterministic function of the same inputs.
     *
-    * Deliberate contract deviation: a family BUILDER's first call per
-    * session EXECUTES the materialization (and the small df-stats job
-    * inside [[jaccardPairs]]) instead of staying lazy — the price of a
-    * real intermediate table. Plan-only tooling (Explain, plan lints)
-    * therefore sees the READ side of the family queries; the build
-    * side's plan is audited once through q_ngram_jaccard's oracle and
-    * the OpsSpec dispatch/property tests.
+    * Deliberate contract deviation, shared by every Scratch-backed
+    * builder: the first call per session EXECUTES the materialization
+    * (and the small df-stats job inside [[jaccardPairs]]) instead of
+    * staying lazy — the price of a real intermediate table. Plan-only
+    * tooling (Explain, plan lints) therefore sees the READ side of the
+    * family queries; the build side's plan is audited once through
+    * q_ngram_jaccard's oracle and the OpsSpec dispatch/property tests.
     */
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
-
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory("graft-shared-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(): Unit
-      }
-      rm(d.toFile)
-    }))
-    d
-  }
-
-  def sharedJaccardPairs(s: SparkSession, dir: String, threshold: Double): DataFrame = {
-    val key = (s.sparkContext.applicationId, dir, threshold)
-    val path = pairsMemo.getOrElseUpdate(key, {
-      // Path must be injective in the FULL memo key: a 128-bit md5 of
-      // the dir (not String.hashCode — 32 bits collide) plus the
-      // applicationId, so a second session in the same JVM never
-      // overwrites files a first session's lazy frames still read.
-      val dirTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-      val p = scratchRoot.resolve(
-        s"pairs_${s.sparkContext.applicationId}_${dirTag}_t${(threshold * 1000).toInt}")
-        .toString
-      jaccardPairsFromPostings(sharedShinglePostings(s, dir), threshold)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+  def sharedJaccardPairs(s: SparkSession, dir: String, threshold: Double): DataFrame =
+    Scratch.materialize(s, s"jaccard_pairs|$dir|t$threshold")(
+      jaccardPairsFromPostings(sharedShinglePostings(s, dir), threshold))
 
   /** The distinct (doc_id, 60-bit shingle hash) postings table, the
     * layer BELOW [[sharedJaccardPairs]] in the same materialized-
@@ -318,22 +289,9 @@ object Dedup {
     * takes per-doc minima and the audits count distinct hashes, so
     * every consumer is unchanged by the dedup.
     */
-  private val postingsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  def sharedShinglePostings(s: SparkSession, dir: String): DataFrame = {
-    val key = (s.sparkContext.applicationId, dir)
-    val path = postingsMemo.getOrElseUpdate(key, {
-      val dirTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-      val p = scratchRoot.resolve(
-        s"postings_${s.sparkContext.applicationId}_$dirTag").toString
-      shingleHashes(Tables(s, dir, "documents"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+  def sharedShinglePostings(s: SparkSession, dir: String): DataFrame =
+    Scratch.materialize(s, s"shingle_postings|$dir")(
+      shingleHashes(Tables(s, dir, "documents")))
 
   /** 60-bit SimHash signatures with their 4×15-bit band keys —
     * (doc_id, simhash, band, key), one definition shared by

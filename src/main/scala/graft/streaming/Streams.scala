@@ -123,23 +123,6 @@ object Streams {
     }
   }
 
-  /** Finite-drain runner for the foreachBatch twins (round-9 drain-
-    * floor result, measured by [[DrainAb]]): `Trigger.AvailableNow` +
-    * awaitTermination plans the whole staged backlog up front (one
-    * listing; batches still split by maxFilesPerTrigger, so batch
-    * composition and bids are unchanged) and terminates itself,
-    * skipping the idle progress-poll cycle `processAllAvailable` pays
-    * per drain — measured −0.2 s/twin on both a near-zero-work twin
-    * (forget 1.80→1.59 s) and a real-work one (watermark 2.02→1.83 s)
-    * at sf0.1. Default ON for these twins;
-    * [[AvailableNowConf]]=false restores the old drain. The
-    * stateful-window memory-sink twins (watermark eviction, timeout
-    * sessionization, stream-stream joins) deliberately KEEP
-    * processAllAvailable — their final-eviction semantics depend on
-    * the default trigger's extra cycle.
-    */
-  val AvailableNowConf = "spark.graft.streaming.availableNow"
-
   /** Run independent per-batch sink writes concurrently (guide §2.6:
     * actions are only sequential because the driver calls them
     * sequentially — tiny micro-batch jobs are scheduling-latency
@@ -200,16 +183,25 @@ object Streams {
       } finally { pool.shutdown(); () }
     }
 
-  private def drain(spark: SparkSession,
-      w: org.apache.spark.sql.streaming.DataStreamWriter[Row]): Unit =
-    if (spark.conf.get(AvailableNowConf, "true").toBoolean) {
-      val q = w.trigger(
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try { q.awaitTermination(); () } finally q.stop()
-    } else {
-      val q = w.start()
-      try q.processAllAvailable() finally q.stop()
-    }
+  /** Finite-drain runner for the foreachBatch twins (round-9 drain-
+    * floor result, BENCH_SCALING "Round-9 drain floor"):
+    * `Trigger.AvailableNow` + awaitTermination plans the whole staged
+    * backlog up front (one listing; batches still split by
+    * maxFilesPerTrigger, so batch composition and bids are unchanged)
+    * and terminates itself, skipping the idle progress-poll cycle
+    * `processAllAvailable` pays per drain — measured −0.2 s/twin on
+    * both a near-zero-work twin (forget 1.80→1.59 s) and a real-work
+    * one (watermark 2.02→1.83 s) at sf0.1. The stateful-window
+    * memory-sink twins (watermark eviction, timeout sessionization,
+    * stream-stream joins) never come here and deliberately KEEP
+    * processAllAvailable — their final-eviction semantics depend on
+    * the default trigger's extra cycle.
+    */
+  private def drain(w: org.apache.spark.sql.streaming.DataStreamWriter[Row]): Unit = {
+    val q = w.trigger(
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try { q.awaitTermination(); () } finally q.stop()
+  }
 
   private def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
@@ -304,7 +296,7 @@ object Streams {
       shards: Int = 3): DataFrame = {
     // the CANONICAL documents staging projection — watermark, doremi,
     // crossmodal and contamination all stage this exact frame, so the
-    // stageMemo key coincides and the shard files are built once per
+    // staging cache key coincides and the shard files are built once per
     // session for the whole documents-twin family
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
@@ -750,7 +742,7 @@ object Streams {
     val keptDir = s"$workDir/kept"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val hashed = batch.withColumn("h", md5(col("text")))
@@ -820,7 +812,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         // cache: consumed by bands, the estimate join, and the store
@@ -963,7 +955,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // the reference branch keys on the BATCH ID (deterministic and
@@ -1051,7 +1043,7 @@ object Streams {
     val lm = spark.read.schema("bg STRING, p DOUBLE").parquet(s"$workDir/lm")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // a micro-batch arrives as ONE staged file = one partition —
@@ -1127,7 +1119,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // per-bid overwrite: foreachBatch is at-least-once, the
@@ -1195,7 +1187,7 @@ object Streams {
       val schema = spark.read.parquet(srcDir).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      drain(spark, stream.writeStream
+      drain(stream.writeStream
         .option("checkpointLocation", s"$workDir/ckpt")
         .foreachBatch { (batch: Dataset[Row], bid: Long) =>
           // one OVERWRITTEN directory per batch id: foreachBatch is
@@ -1303,7 +1295,7 @@ object Streams {
       val schema = spark.read.parquet(srcDir).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      drain(spark, stream.writeStream
+      drain(stream.writeStream
         .option("checkpointLocation", s"$workDir/ckpt")
         .foreachBatch { (batch: Dataset[Row], bid: Long) =>
           // a micro-batch arrives as ONE staged file = one partition —
@@ -1387,7 +1379,7 @@ object Streams {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
         .where(col("doc_id") % 50 =!= 0)
-      drain(spark, stream.writeStream
+      drain(stream.writeStream
         .option("checkpointLocation", s"$workDir/ckpt")
         .foreachBatch { (batch: Dataset[Row], bid: Long) =>
           Dedup.shingleHashes(batch.toDF())
@@ -1440,7 +1432,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val b = batch.toDF()
@@ -1497,7 +1489,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val g = TextAnalysis.ngramHashes(
@@ -1604,7 +1596,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val b = batch.toDF()
@@ -1701,7 +1693,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         batch.toDF()
@@ -1929,7 +1921,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // one staged file = one partition — spread the shingle work
@@ -2123,7 +2115,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         import spark.implicits._
@@ -2235,23 +2227,16 @@ object Streams {
       s"could not set mtime on $dst — batch ordering would be undefined")
   }
 
-  /** Session-scoped staged-shard cache (the [[graft.ops.Scratch]]
-    * discipline at the staging layer): 8 of the 10 slowest bench
-    * entries were foreachBatch twins whose wall was dominated by
-    * staging + drain machinery, and twins sharing a source re-staged
-    * the same deterministic shard files per query. Keyed by
-    * (applicationId, caller key, n, keyCol); the staged directory is
-    * built once and every later twin just symlinks its own
-    * `workDir/stream` onto it — per-query checkpoints stay private,
-    * only the immutable source files are shared.
+  /** Resolved staging roots, keyed by the conf value (and route). The
+    * staged-shard cache itself is [[graft.ops.Scratch.once]] under
+    * these roots: 8 of the 10 slowest bench entries were foreachBatch
+    * twins whose wall was dominated by staging + drain machinery, and
+    * twins sharing a source re-staged the same deterministic shard
+    * files per query. The staged directory is built once per (session,
+    * root, caller key, n, keyCol, schema) and every later twin reads
+    * it — per-query checkpoints stay private, only the immutable source
+    * files are shared.
     */
-  private val stageMemo = scala.collection.concurrent.TrieMap.empty[String, String]
-  // per-key build serialization (round-9 advice): TrieMap
-  // .getOrElseUpdate only makes the INSERT atomic — two twins racing
-  // the same cache key from parallel threads would both run stageInto
-  // against the identical shared directory
-  private val stageLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private val stageRoots =
     scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
 
@@ -2275,14 +2260,7 @@ object Streams {
     stageRoots.getOrElseUpdate(spark.conf.get(StagingDirConf, ""), {
       spark.conf.get(StagingDirConf, "") match {
         case "" =>
-          val d = java.nio.file.Files.createTempDirectory("graft-stage-")
-          Runtime.getRuntime.addShutdownHook(new Thread(() => {
-            def rm(f: java.io.File): Unit = {
-              val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(): Unit
-            }
-            rm(d.toFile)
-          }))
-          d
+          java.nio.file.Paths.get(graft.util.WorkDirs.temp("graft-stage-"))
         case configured =>
           require(!configured.contains("://") ||
               configured.startsWith("file://"),
@@ -2330,9 +2308,9 @@ object Streams {
         }
       })
 
-  /** The staged-shard cache, MANIFEST route: the same memo + per-key
-    * lock discipline as [[stageShards]]' cached branch, but the
-    * shards are GraftStage shard files gated by a manifest and the
+  /** The staged-shard cache, MANIFEST route: the same build-once
+    * [[graft.ops.Scratch.once]] as [[stageShards]]' cached branch, but
+    * the shards are GraftStage shard files gated by a manifest and the
     * caller reads the returned directory with
     * `format("graftstage")` — order from the manifest (not mtimes),
     * visibility from the manifest (not rename atomicity), sharing by
@@ -2341,21 +2319,11 @@ object Streams {
     * stays for POSIX roots.
     */
   private[streaming] def stageShardsManifestCached(df: DataFrame,
-      key: String, n: Int, keyCol: String = "event_id"): String = {
-    val root = manifestStageRoot(df.sparkSession)
-    val full = s"${df.sparkSession.sparkContext.applicationId}|manifest|" +
-      s"$root|$key|$n|$keyCol|${df.schema.catalogString}"
-    val lock = stageLocks.computeIfAbsent(full, _ => new Object)
-    lock.synchronized {
-      stageMemo.getOrElseUpdate(full, {
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(full.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(20)
-        graft.sources.GraftStage.stage(df,
-          root.resolve(s"m_$tag").toString, n, keyCol)
-      })
-    }
-  }
+      key: String, n: Int, keyCol: String = "event_id"): String =
+    graft.ops.Scratch.once(df.sparkSession,
+      manifestStageRoot(df.sparkSession).toString,
+      s"manifest|$key|$n|$keyCol|${df.schema.catalogString}")(
+      graft.sources.GraftStage.stage(df, _, n, keyCol))
 
   /** Fail loudly if `d` lacks any of the three POSIX primitives the
     * staging protocol builds on (see [[StagingDirConf]]). Runs once
@@ -2404,8 +2372,9 @@ object Streams {
     * the rest and resumes from the same checkpoint.
     *
     * `cacheKey` (production twins only) routes a FULL stage through
-    * [[stageMemo]]: the shards are built once per (session, key) and
-    * `workDir/stream` becomes a symlink to the shared directory.
+    * [[graft.ops.Scratch.once]]: the shards are built once per
+    * (session, key) and `workDir/stream` becomes a symlink to the
+    * shared directory.
     * Prefix stages (`upTo`) and workDirs whose stream dir already
     * exists (the crash-resume tests' incremental convention) keep the
     * private in-place path — arrival-order control stays with the
@@ -2419,23 +2388,11 @@ object Streams {
       case Some(k) if upTo.isEmpty && !java.nio.file.Files.exists(link) =>
         // the staged files' schema is part of the identity (two twins
         // may stage the same table under different projections); any
-        // row-level filter must be in the caller's key. The resolved
-        // root is part of it too: re-configuring the staging root
-        // mid-session must rebuild under the new root, not serve
-        // symlinks into the old one
-        val full = s"${df.sparkSession.sparkContext.applicationId}|" +
-          s"${stageRoot(df.sparkSession)}|$k|$n|" +
-          s"$keyCol|${df.schema.catalogString}"
-        val lock = stageLocks.computeIfAbsent(full, _ => new Object)
-        val shared = lock.synchronized {
-          stageMemo.getOrElseUpdate(full, {
-            val tag = java.security.MessageDigest.getInstance("MD5")
-              .digest(full.getBytes("UTF-8"))
-              .map("%02x".format(_)).mkString.take(20)
-            stageInto(df, stageRoot(df.sparkSession).resolve(tag), n, None,
-              keyCol)
-          })
-        }
+        // row-level filter must be in the caller's key
+        val shared = graft.ops.Scratch.once(df.sparkSession,
+          stageRoot(df.sparkSession).toString,
+          s"$k|$n|$keyCol|${df.schema.catalogString}")(p =>
+          stageInto(df, java.nio.file.Paths.get(p), n, None, keyCol))
         java.nio.file.Files.createDirectories(link.getParent)
         java.nio.file.Files.createSymbolicLink(link,
           java.nio.file.Paths.get(shared))
@@ -2594,7 +2551,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val part = latest(batch.toDF())
@@ -2634,7 +2591,7 @@ object Streams {
       // date <= timestamp coerces date → midnight; make the cast
       // explicit for the native operator's time key (as q_asof_native)
       .withColumn("o_ts", col("o_orderdate").cast("timestamp"))
-    drain(spark, eventsStream(spark, dir)
+    drain(eventsStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"))
       .writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
@@ -2687,7 +2644,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val partial = batch.groupBy(col("event_type"))

@@ -1,23 +1,21 @@
 package graft.util
 
-/** Driver-local work dirs for the stream twins' staging/checkpoint
-  * roots and the batch round-trip queries (CSV/sink round-trips, the
-  * foreachBatch maintenance family).
+/** Driver-local work dirs: the stream twins' staging/checkpoint roots,
+  * the batch round-trip queries (CSV/sink round-trips, the
+  * foreachBatch maintenance family), and the unset-conf defaults of the
+  * session-materialization roots ([[graft.ops.Scratch]]'s scratch root
+  * and `Streams.stageRoot`).
   *
-  * Before round 12 every twin invocation called
-  * `Files.createTempDirectory(prefix)` directly and never cleaned up:
-  * each verify/bench run left a full parquet staging copy of its input
-  * table under /tmp (advice item, round 11). Now all per-invocation
-  * dirs nest under ONE lazily-created JVM root with ONE shutdown hook
-  * that removes the whole tree — the same discipline
-  * [[graft.ops.Scratch]] and `Streams.stageRoot` already use for their
-  * session-scoped roots. Within-run accumulation across repeated
-  * invocations of the same twin is bounded by the Scratch-style memo
-  * most twins already have; this hook bounds the across-run residue.
+  * Every such dir nests under ONE lazily-created JVM root with the
+  * JVM's ONE shutdown hook, which removes the whole tree — so verify
+  * and bench runs leave no parquet staging copies or shared tables
+  * under /tmp. Within-run accumulation across repeated invocations of
+  * the same twin is bounded by the [[graft.ops.Scratch.once]] memo most
+  * twins stage through; this hook bounds the across-run residue.
   *
   * Driver-local `java.nio.file` is correct here because these roots
   * are only ever used at local[*] (the twins' micro-batch sources and
-  * checkpoints); a cluster deployment points the staging conf keys
+  * checkpoints); a cluster deployment points the conf keys
   * (`spark.graft.stagingDir`, `spark.graft.scratchDir`) at a shared
   * filesystem instead and never reaches this path.
   */

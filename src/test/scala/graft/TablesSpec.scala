@@ -67,4 +67,17 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
       }
     }
   }
+
+  test("native functions register once per session") {
+    val reg = spark.sessionState.functionRegistry
+    def registered() = graft.functions.Registry.builders.map { case (n, _) =>
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(n)
+      (n, reg.lookupFunction(id).get, reg.lookupFunctionBuilder(id).get)
+    }
+    Tables(spark, dir, "region")
+    val first = registered()
+    Tables(spark, dir, "region")
+    assert(registered().zip(first).forall { case ((_, i, b), (_, i0, b0)) =>
+      (i eq i0) && (b eq b0) }, "a second Tables(...) call re-registered a function")
+  }
 }

@@ -2378,9 +2378,25 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
       assert(reads.forall(_ == 5L))
       assert(builds.get() == 1, s"build ran ${builds.get()} times")
       // and the parquet physically lives under the configured root
-      val files = Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-      assert(files.nonEmpty, s"nothing materialized under $root")
+      def dirs() = Option(new java.io.File(root).listFiles())
+        .getOrElse(Array.empty[java.io.File]).filter(_.isDirectory).toSet
+      assert(dirs().nonEmpty, s"nothing materialized under $root")
+      // Dedup's shared tables go through the same layer: 4 racing first
+      // callers add exactly one parquet dir under the configured root
+      val sf = "/root/testdata/sf0.001"
+      for ((name, table) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+          "postings" -> (() => Dedup.sharedShinglePostings(spark, sf)),
+          "pairs" -> (() => Dedup.sharedJaccardPairs(spark, sf, 0.6)))) {
+        val before = dirs()
+        val counts = Await.result(
+          Future.sequence((1 to 4).map(_ => Future(table().count()))),
+          scala.concurrent.duration.Duration(300, "s"))
+        assert(counts.distinct.size == 1, s"$name: racing reads differ: $counts")
+        val added = dirs() -- before
+        assert(added.size == 1, s"$name: ${added.size} new dirs under $root")
+        assert(added.head.listFiles().exists(_.getName.endsWith(".parquet")),
+          s"$name: no parquet in ${added.head}")
+      }
     } finally spark.conf.unset(Scratch.ScratchDirConf)
   }
 
