@@ -71,10 +71,15 @@ object Registry {
     for ((name, build) <- builders
          if !reg.functionExists(FunctionIdentifier(name)))
       reg.createOrReplaceTempFunction(name, build, "scala_udf")
-    // session-local optimizer rule (spark-submit users get it via
-    // GraftExtensions.injectOptimizerRule instead)
+    // session-local optimizer rule, unless the session already runs it
+    // — GraftSession.create and spark-submit users get it from
+    // GraftExtensions.injectOptimizerRule, and adding it here too
+    // would run it in a second optimizer batch
+    val rule = graft.plans.RewriteTop1PerGroup
     val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(graft.plans.RewriteTop1PerGroup))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.RewriteTop1PerGroup
+    if (!exp.extraOptimizations.contains(rule) &&
+        !spark.sessionState.optimizer.extendedOperatorOptimizationRules
+          .contains(rule))
+      exp.extraOptimizations = exp.extraOptimizations :+ rule
   }
 }

@@ -96,7 +96,7 @@ object Similarity {
     * each vector keeps its top-G in-bucket neighbors; each expansion
     * hop multiplies candidate volume by at most this. G=8 at 1 hop is
     * a CHOSEN operating point from the round-10 frontier sweep
-    * (tools/AnnFrontier at sf0.1, recorded in BENCH_SCALING): vs the
+    * (sf0.1, recorded in BENCH_SCALING "Round-10 ANN frontier"): vs the
     * round-9 G=4 default it buys recall@1 0.494 → 0.590 for 1.43×
     * candidates — the knee of the measured frontier (2-hop variants
     * reach 0.69/0.91 recall at 2.0×/3.4× candidates; escalate via
@@ -115,7 +115,7 @@ object Similarity {
     * vector-free until the ≤ R·n survivors pay the exact-cosine
     * re-rank. The r10 escalation re-ranked its whole 3.4×-candidate
     * frontier exactly (the entire sf1 bench tail). A PQ/SDC pre-rank
-    * was tried first and MEASURED OUT (AnnFrontier, sf0.1): at
+    * was tried first and MEASURED OUT (frontier sweep, sf0.1): at
     * PqM = 4 recall@1 collapsed 0.912 → 0.43 at R = 32, and even a
     * 16-subspace quantizer only reached 0.52 — product-quantized
     * distance is near-noise on near-orthogonal random vectors (the
@@ -1072,8 +1072,7 @@ object Similarity {
     * This keeps the exact-n² wall from scaling with the corpus: at
     * the builder's 10× scale pass the full form was the single
     * largest bench entry (69 s for 20k rows ≈ 2·10⁸ pairs) while
-    * auditing nothing the sliced form doesn't. Set
-    * [[ExactDedupFullConf]]=true for the full-table bound; above
+    * auditing nothing the sliced form doesn't. Above
     * `maxRows` (effective rows, slice applied) the n² pair space and
     * the broadcast are unaffordable, so the guard fails fast with the
     * scale path named instead of letting the broadcast blow the 8 GB
@@ -1085,19 +1084,17 @@ object Similarity {
       s: SparkSession, dir: String,
       maxRows: Long = ExactDedupMaxRows): DataFrame = {
     CosineSim.register(s)
-    val full = s.conf.get(ExactDedupFullConf, "false").toBoolean
     // metadata-only parquet row count — no scan, no caching
     val n = Tables(s, dir, "embeddings").count()
-    val effective = if (full) n else math.min(n, AuditSliceRows)
+    val effective = math.min(n, AuditSliceRows)
     if (effective > maxRows) throw new IllegalStateException(
       s"q_dedup_embedding is the exact n^2 audit bound and is capped at " +
         s"$maxRows rows (attempting $effective). Use q_dedup_embedding_ivf — " +
         "the executed IVF scale path with the same threshold semantics " +
         "(candidates from bucket co-membership, pair count bounded by " +
         "sum of squared bucket sizes).")
-    val embAll = embeddings(s, dir)
-    val emb = if (full) embAll
-      else embAll.orderBy(col("vec_id")).limit(AuditSliceRows.toInt)
+    val emb = embeddings(s, dir)
+      .orderBy(col("vec_id")).limit(AuditSliceRows.toInt)
     emb.select(col("vec_id").as("doc1"), col("v").as("v1"))
       .crossJoin(broadcast(
         emb.select(col("vec_id").as("doc2"), col("v").as("v2"))))
@@ -1121,11 +1118,6 @@ object Similarity {
     * Shared verbatim with the DuckDB oracle's ORDER BY vec_id LIMIT.
     */
   val AuditSliceRows = 2000L
-
-  /** Conf opting into the FULL exact-n² bound (still guarded by
-    * [[ExactDedupMaxRows]]) instead of the [[AuditSliceRows]] slice.
-    */
-  val ExactDedupFullConf = "spark.graft.exactDedupFull"
 
   val queries: Map[String, Q] = Map(
     // Embedding-cosine near-duplicate pairs — the dedup-family member

@@ -74,12 +74,6 @@ object Streams {
 
   private val StatePartitions = 4
 
-  /** Conf override for the per-twin AQE choice during a drain (see
-    * [[withStatePartitions]]): unset = each twin's measured default;
-    * "true"/"false" forces AQE on/off for every drain.
-    */
-  val DrainAqeConf = "spark.graft.streaming.drainAqe"
-
   /** Largest micro-batch shingle-posting table (rows, two BIGINTs
     * each) the crossmodal ingest guard will broadcast as the probe
     * side; larger batches fall back to a shuffle hash join so a big
@@ -93,19 +87,15 @@ object Streams {
     * AQE history (measure, don't assume): round 8 tried AQE OFF
     * globally here and REVERTED it (q_stream_crossmodal regressed
     * 7.6 → 11.5 s on its then-current plan). Round 13 re-measured
-    * per-twin with an interleaved A/B (ProfileRelease harness, fresh
-    * work dir per rep, staging untimed): the release drain is 2.4 s
-    * FASTER with AQE off (median 8.2 vs 10.6 s — its per-trigger plan
-    * has 10+ tiny exchanges and each AQE stage materialization is an
-    * extra sequentially-scheduled job), crossmodal is now neutral-to-
+    * per-twin with an interleaved A/B (fresh work dir per rep,
+    * staging untimed): the release drain is 2.4 s FASTER with AQE off
+    * (median 8.2 vs 10.6 s — its per-trigger plan has 10+ tiny
+    * exchanges and each AQE stage materialization is an extra
+    * sequentially-scheduled job), crossmodal is now neutral-to-
     * positive (7.5 vs 7.9 s — the r8 plan changed: pinned schemas,
     * broadcast probe), and the theta twins are within noise. So the
-    * per-twin measured winner is the default, and
-    * [[DrainAqeConf]] overrides both ways. At production batch sizes
-    * AQE's coalescing matters again — a deployment sets
-    * `spark.graft.streaming.drainAqe=true` (and
-    * [[StatePartitionsConf]] to its stream volume) rather than
-    * inheriting the micro-batch-measured default.
+    * per-twin choice is fixed at each call site: AQE off for the
+    * release and crossmodal drains, on for every other twin.
     */
   private def withStatePartitions[T](spark: SparkSession,
       aqeOff: Boolean = false)(body: => T): T = {
@@ -115,73 +105,12 @@ object Streams {
     val prevAqe = spark.conf.get(aqeKey)
     spark.conf.set(key,
       spark.conf.get(StatePartitionsConf, StatePartitions.toString))
-    val aqe = spark.conf.get(DrainAqeConf, (!aqeOff).toString).toBoolean
-    spark.conf.set(aqeKey, aqe.toString)
+    spark.conf.set(aqeKey, (!aqeOff).toString)
     try body finally {
       spark.conf.set(key, prev)
       spark.conf.set(aqeKey, prevAqe)
     }
   }
-
-  /** Run independent per-batch sink writes concurrently (guide §2.6:
-    * actions are only sequential because the driver calls them
-    * sequentially — tiny micro-batch jobs are scheduling-latency
-    * bound, so overlapping the writes lets the next job's stages
-    * back-fill the cores the current job's AQE tail leaves idle). The
-    * writers target DISTINCT per-bid directories and share only
-    * cached inputs (Spark's block manager serializes concurrent cache
-    * materialization), so ordering cannot change any output. All
-    * writes complete — successfully — before this returns; the first
-    * failure is rethrown unwrapped, as if the writes had run
-    * sequentially.
-    */
-  val ParWritesConf = "spark.graft.streaming.parWrites"
-
-  /** Conf for overlapping the PER-MICRO-BATCH sink writes inside the
-    * release/crossmodal foreachBatch bodies — split from
-    * [[ParWritesConf]] in r14 and DEFAULT OFF. The r13 default-on was
-    * tuned on a latency-bound degraded host; re-measured at the
-    * driver's `local[32]` config (interleaved A/B, 3 cycles, fresh
-    * work dir per rep) the overlap is the instability source: release
-    * 11.8/22.5/25.2 s with batch overlap on vs 13.6/14.8/15.0 s off
-    * (same AQE-off drain), i.e. 3-4 concurrent 32-task jobs per tiny
-    * trigger each holding cached frames thrash the scheduler/heap —
-    * exactly the driver-measured r13 regression (release 12.2→50.9 s,
-    * c8/c32 ratio 0.21). The STAGING store-build chains (long,
-    * independent, run once) keep [[ParWritesConf]] default-on — §2.6
-    * back-fill works for long jobs; it loses on per-trigger
-    * micro-jobs at high core counts.
-    */
-  val ParWritesBatchConf = "spark.graft.streaming.parWritesBatch"
-
-  private[streaming] def parWrites(bodies: (() => Unit)*): Unit =
-    parWritesImpl(ParWritesConf, defaultOn = true, bodies)
-
-  /** [[parWrites]] for per-micro-batch sinks — see
-    * [[ParWritesBatchConf]]; default sequential.
-    */
-  private[streaming] def parWritesBatch(bodies: (() => Unit)*): Unit =
-    parWritesImpl(ParWritesBatchConf, defaultOn = false, bodies)
-
-  private def parWritesImpl(conf: String, defaultOn: Boolean,
-      bodies: Seq[() => Unit]): Unit =
-    if (bodies.sizeIs <= 1 ||
-        !org.apache.spark.sql.SparkSession.active.conf
-          .get(conf, defaultOn.toString).toBoolean)
-      bodies.foreach(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
-      try {
-        val futs = bodies.map(b => pool.submit(
-          new java.util.concurrent.Callable[Unit] { def call(): Unit = b() }))
-        futs.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-          }
-        }
-      } finally { pool.shutdown(); () }
-    }
 
   /** Finite-drain runner for the foreachBatch twins (round-9 drain-
     * floor result, BENCH_SCALING "Round-9 drain floor"):
@@ -1439,14 +1368,14 @@ object Streams {
         val posts = Dedup.shingleHashes(b.select(col("doc_id"), col("text")))
           .join(b.select(col("doc_id"), col("source")), Seq("doc_id"))
           .cache()
-        try parWritesBatch(
-          () => posts.groupBy(col("source"))
+        try {
+          posts.groupBy(col("source"))
             .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
               .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/sk_b$bid"),
-          () => posts.select(col("source"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/ph_b$bid"))
-        finally { posts.unpersist(); () }
+            .write.mode("overwrite").parquet(s"$workDir/sk_b$bid")
+          posts.select(col("source"), col("h")).distinct()
+            .write.mode("overwrite").parquet(s"$workDir/ph_b$bid")
+        } finally { posts.unpersist(); () }
         ()
       })
     // drain-time census: merge the per-bid sketch partials (explode +
@@ -1494,15 +1423,15 @@ object Streams {
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val g = TextAnalysis.ngramHashes(
           batch.toDF().select(col("source"), col("text"))).cache()
-        try parWritesBatch(
-          () => g.groupBy(col("source"), col("n"))
+        try {
+          g.groupBy(col("source"), col("n"))
             .agg(count(lit(1)).as("total"),
               call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
                 .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/ngsk_b$bid"),
-          () => g.select(col("source"), col("n"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/ngph_b$bid"))
-        finally { g.unpersist(); () }
+            .write.mode("overwrite").parquet(s"$workDir/ngsk_b$bid")
+          g.select(col("source"), col("n"), col("h")).distinct()
+            .write.mode("overwrite").parquet(s"$workDir/ngph_b$bid")
+        } finally { g.unpersist(); () }
         ()
       })
     // drain census: totals are additive, minima re-rank (the KMV
@@ -1603,14 +1532,14 @@ object Streams {
         val posts = Dedup.shingleHashes(b.select(col("doc_id"), col("text")))
           .join(b.select(col("doc_id"), col("source")), Seq("doc_id"))
           .cache()
-        try parWritesBatch(
-          () => posts.groupBy(col("source"))
+        try {
+          posts.groupBy(col("source"))
             .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
               .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/dsk_b$bid"),
-          () => posts.select(col("source"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/dph_b$bid"))
-        finally { posts.unpersist(); () }
+            .write.mode("overwrite").parquet(s"$workDir/dsk_b$bid")
+          posts.select(col("source"), col("h")).distinct()
+            .write.mode("overwrite").parquet(s"$workDir/dph_b$bid")
+        } finally { posts.unpersist(); () }
         ()
       })
     // drain census: staged v1 sketch ⊕ per-bid arrival partials (the
@@ -1790,15 +1719,13 @@ object Streams {
     val v1 = docs.where(col("doc_id") % 4 =!= 0)
     // Three independent store-build chains — the content-hash index,
     // the shingle-derived sig/theta/bands chain, and the crawl-shard
-    // staging — run concurrently ([[parWrites]], guide §2.6): each
-    // writes its own directories under its own existence guard, so
-    // ordering cannot change any byte; the stage wall drops to the
-    // longest chain instead of the sum.
-    parWrites(
-      () => buildV1Hash(spark, workDir, v1),
-      () => buildV1ShingleStores(spark, dir, workDir, v1),
-      () => stageCrawlShards(spark, workDir, docs, shards, upTo))
-    ()
+    // staging — each writing its own directories under its own
+    // existence guard. Running them concurrently measured a tie with
+    // running them in order (release median 14.0 vs 13.8 s), so they
+    // run in order.
+    buildV1Hash(spark, workDir, v1)
+    buildV1ShingleStores(spark, dir, workDir, v1)
+    stageCrawlShards(spark, workDir, docs, shards, upTo)
   }
 
   private def buildV1Hash(spark: SparkSession, workDir: String,
@@ -2019,19 +1946,18 @@ object Streams {
           // per-bid idempotent outputs: the census partial (the SHARED
           // aggregate — associative folds only) + both store appends.
           // The four sinks are independent (distinct per-bid dirs, all
-          // reading the cached frames); [[parWritesBatch]] keeps them
-          // SEQUENTIAL by default — overlapping them was the r13
-          // regression at local[32] (see [[ParWritesBatchConf]]); a
-          // latency-bound deployment can turn the overlap back on.
-          parWritesBatch(
-            () => Prep.deltaCensus(flags).coalesce(1)
-              .write.mode("overwrite").parquet(s"$workDir/census_b$bid"),
-            () => vec.coalesce(4).write.mode("overwrite")
-              .parquet(s"$workDir/bsig_b$bid"),
-            () => batchBands.coalesce(4).write.mode("overwrite")
-              .parquet(s"$workDir/bband_b$bid"),
-            () => local.select(col("ch")).distinct().coalesce(1)
-              .write.mode("overwrite").parquet(s"$workDir/bhash_b$bid"))
+          // reading the cached frames) and run one after another —
+          // overlapping them was the r13 regression at local[32]
+          // (3-4 concurrent 32-task jobs per tiny trigger thrash the
+          // scheduler and heap; release 12.2 → 50.9 s).
+          Prep.deltaCensus(flags).coalesce(1)
+            .write.mode("overwrite").parquet(s"$workDir/census_b$bid")
+          vec.coalesce(4).write.mode("overwrite")
+            .parquet(s"$workDir/bsig_b$bid")
+          batchBands.coalesce(4).write.mode("overwrite")
+            .parquet(s"$workDir/bband_b$bid")
+          local.select(col("ch")).distinct().coalesce(1)
+            .write.mode("overwrite").parquet(s"$workDir/bhash_b$bid")
         } finally {
           local.unpersist(); vec.unpersist(); batchBands.unpersist(); ()
         }
@@ -2173,15 +2099,14 @@ object Streams {
           // coalesce so the writes don't pay 32 task launches each; at
           // production scale these are bucketed table appends. The
           // three sinks are independent (distinct dirs, cached
-          // inputs); [[parWritesBatch]] keeps them sequential by
-          // default (see [[ParWritesBatchConf]]).
-          parWritesBatch(
-            () => pairs.coalesce(4).write.mode("overwrite")
-              .parquet(s"$workDir/pairs_b$bid"),
-            () => post.coalesce(4).write.mode("overwrite")
-              .parquet(s"$workDir/post_b$bid"),
-            () => meta.coalesce(1).write.mode("overwrite")
-              .parquet(s"$workDir/meta_b$bid"))
+          // inputs) and run one after another, like the release
+          // drain's.
+          pairs.coalesce(4).write.mode("overwrite")
+            .parquet(s"$workDir/pairs_b$bid")
+          post.coalesce(4).write.mode("overwrite")
+            .parquet(s"$workDir/post_b$bid")
+          meta.coalesce(1).write.mode("overwrite")
+            .parquet(s"$workDir/meta_b$bid")
         } finally { post.unpersist(); meta.unpersist(); () }
         ()
       })

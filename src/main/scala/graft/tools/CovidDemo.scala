@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import graft.covid.{CovidPipeline, CovidSchema, Watermark}
 
 /** End-to-end demo of the covid pipeline on a tiny inline CSV —
@@ -11,12 +10,7 @@ import graft.covid.{CovidPipeline, CovidSchema, Watermark}
   */
 object CovidDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create("local[4]", "graft-covid-demo", 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     // hook-cleaned WorkDirs root — demo runs leave no /tmp residue

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality audit: prints the formatted physical plan of selected
   * queries (or all) and flags scale-critical properties — filter/
   * projection pushdown into the parquet scan, broadcast vs shuffle
@@ -14,13 +12,7 @@ object Explain {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create("local[4]", "graft-explain", 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     names.foreach { n =>

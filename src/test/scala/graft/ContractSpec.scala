@@ -33,8 +33,28 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("plan lint: no cartesian product, no unbounded global window") {
+  /** Every registered query's executed plan at sf0.001, planned ONCE
+    * with AQE off (a concrete plan tree — AQE wraps stages and hides
+    * children from collect) plus `extra` confs, then shared by every
+    * lint that needs that config; the session's confs are restored
+    * before the map is returned.
+    */
+  private def planAll(extra: (String, String)*)
+      : Map[String, org.apache.spark.sql.execution.SparkPlan] = {
     val dir = "/root/testdata/sf0.001"
+    val confs = ("spark.sql.adaptive.enabled" -> "false") +: extra
+    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      SparkEntry.queries.map { case (name, fn) =>
+        name -> fn(spark, dir).queryExecution.executedPlan
+      }
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  private lazy val aqeOffPlans = planAll()
+
+  test("plan lint: no cartesian product, no unbounded global window") {
     // Global (partition-less) windows funnel all rows through one task.
     // Allowed only where the input is provably bounded and documented
     // at the use site: q_topk_other ranks ≤ brand-cardinality (~25)
@@ -60,30 +80,23 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
       "q_sequence_gaps", "q_mannwhitney", "q_zipf", "q_cooccur",
       "q_rrf_fusion", "q_cluster_balance", "q_unimax", "q_epoch_expand",
       "q_ks_test")
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      // concrete plan tree (AQE wraps stages and hides children from collect)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      SparkEntry.queries.foreach { case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan
-        val cartesian = plan.collect {
-          case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
-        }
-        assert(cartesian.isEmpty,
-          s"$name plans a non-broadcast cartesian product")
-        val globalWindows = plan.collect {
-          case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w
-        }
-        assert(boundedGlobalWindow(name) || globalWindows.isEmpty,
-          s"$name plans a global single-partition window")
+    aqeOffPlans.foreach { case (name, plan) =>
+      val cartesian = plan.collect {
+        case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+      assert(cartesian.isEmpty,
+        s"$name plans a non-broadcast cartesian product")
+      val globalWindows = plan.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec
+            if w.partitionSpec.isEmpty => w
+      }
+      assert(boundedGlobalWindow(name) || globalWindows.isEmpty,
+        s"$name plans a global single-partition window")
+    }
   }
 
   test("plan lint: global sorts only as the final presentation sort") {
     import org.apache.spark.sql.execution.{SparkPlan, SortExec}
-    val dir = "/root/testdata/sf0.001"
     // A global SortExec is presentation (the deterministic ORDER BY the
     // oracle compare needs) when it sits on the root path — nothing but
     // row-preserving unary nodes above it. A global sort BELOW a join,
@@ -105,20 +118,15 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
         u +: presentationPath(u.children.head)
       case other => Seq(other)
     }
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      SparkEntry.queries.foreach { case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan
-        val allGlobal = plan.collect { case s: SortExec if s.global => s }
-        val onRoot = presentationPath(plan)
-          .collect { case s: SortExec if s.global => s }.toSet
-        val buried = allGlobal.filterNot(onRoot)
-        assert(buried.isEmpty,
-          s"$name buries a global sort mid-plan (feeds computation, " +
-            s"not presentation): ${buried.map(_.sortOrder.mkString(","))}")
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    aqeOffPlans.foreach { case (name, plan) =>
+      val allGlobal = plan.collect { case s: SortExec if s.global => s }
+      val onRoot = presentationPath(plan)
+        .collect { case s: SortExec if s.global => s }.toSet
+      val buried = allGlobal.filterNot(onRoot)
+      assert(buried.isEmpty,
+        s"$name buries a global sort mid-plan (feeds computation, " +
+          s"not presentation): ${buried.map(_.sortOrder.mkString(","))}")
+    }
   }
 
   /** Canonically-equal exchange subtrees still present as SEPARATE
@@ -146,16 +154,11 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("plan lint: no duplicate expensive subtree survives exchange reuse") {
-    val dir = "/root/testdata/sf0.001"
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      SparkEntry.queries.foreach { case (name, fn) =>
-        val dups = duplicateExchanges(fn(spark, dir).queryExecution.executedPlan)
-        assert(dups.isEmpty,
-          s"$name executes the same exchange subtree twice: ${dups.mkString("; ")}")
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    aqeOffPlans.foreach { case (name, plan) =>
+      val dups = duplicateExchanges(plan)
+      assert(dups.isEmpty,
+        s"$name executes the same exchange subtree twice: ${dups.mkString("; ")}")
+    }
   }
 
   test("plan lint detector catches a seeded duplicate subtree") {
@@ -226,28 +229,17 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     // Exemption: q_dedup_embedding — the documented exact audit bound
     // for q_dedup_embedding_ivf, row-capped by Similarity.ExactDedupMaxRows.
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    val dir = "/root/testdata/sf0.001"
     val exempt = Set("q_dedup_embedding")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      SparkEntry.queries.foreach { case (name, fn) =>
-        if (!exempt(name)) {
-          val plan = fn(spark, dir).queryExecution.executedPlan
-          val offenders = plan.collect {
-            case b: BroadcastExchangeExec if unreducedBigScan(b.child) => b
-          }
-          assert(offenders.isEmpty,
-            s"$name broadcasts a full big-table scan (build side would " +
-              s"exceed the broadcast ceiling at scale): " +
-              offenders.map(_.simpleString(80)).mkString("; "))
+    planAll("spark.sql.autoBroadcastJoinThreshold" -> "-1").foreach {
+      case (name, plan) if !exempt(name) =>
+        val offenders = plan.collect {
+          case b: BroadcastExchangeExec if unreducedBigScan(b.child) => b
         }
-      }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+        assert(offenders.isEmpty,
+          s"$name broadcasts a full big-table scan (build side would " +
+            s"exceed the broadcast ceiling at scale): " +
+            offenders.map(_.simpleString(80)).mkString("; "))
+      case _ =>
     }
   }
 

@@ -32,9 +32,27 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
       assert(joined.collect().head.getLong(5) == 7L)
       assert(joined.queryExecution.executedPlan.toString
         .contains("BroadcastAsOfJoin"))
+      // the extensions already inject the top-1 rule; a table read's
+      // Registry.ensure must not add it to a second optimizer batch
+      Tables(s, "/root/testdata/sf0.001", "region")
+      assert(!s.experimental.extraOptimizations
+        .contains(graft.plans.RewriteTop1PerGroup))
     } finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
     }
+  }
+
+  test("every main starts its session through GraftSession.create") {
+    // one session setup: a hand-built SparkSession.builder() in a main
+    // drifts from the config of record (extensions, NTZ inference)
+    import scala.jdk.CollectionConverters._
+    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p)
+        .contains("SparkSession.builder"))
+      .map(_.getFileName.toString).toSet
+    assert(builders == Set("GraftSession.scala"))
   }
 }

@@ -2196,6 +2196,22 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(exact.values.sum > 0, "no duplicated spans in testdata — vacuous")
   }
 
+  test("q_span_dedup_exact census at horizon 512 == the 128 default (testdata)") {
+    // every testdata doc fits the default horizon, so the two extra
+    // doubling rounds only relabel already-separated ranks; the
+    // Scratch keys embed the horizon, so each run builds its own
+    // rank and group tables
+    val dir = "/root/testdata/sf0.001"
+    def census(): Seq[String] =
+      SpanExact.queries("q_span_dedup_exact")(spark, dir)
+        .collect().map(_.toString).toSeq.sorted
+    val base = census()
+    assert(base.nonEmpty, "empty census — vacuous")
+    spark.conf.set(SpanExact.SpanSaMaxLenConf, "512")
+    try assert(census() == base)
+    finally spark.conf.unset(SpanExact.SpanSaMaxLenConf)
+  }
+
   test("q_span_dedup_exact at a raised 512-token horizon: long docs, 200-token repeat") {
     import spark.implicits._
     // the K = log₂(horizon) scaling story EXECUTED: 300-token docs
