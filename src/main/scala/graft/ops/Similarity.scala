@@ -1683,7 +1683,7 @@ object Similarity {
     // applied to the q_stream_ivf postings store IN PLACE — the
     // drained store's moved vectors get their posting rows replaced by
     // the new-anchor posting (a versioned store generation, the
-    // latestVersioned retry discipline). Census of the UPDATED store;
+    // Streams.Store retry discipline). Census of the UPDATED store;
     // the oracle replays probed-minus-moved-plus-new.
     "q_stream_ivf_retrain" -> ((s, dir) => {
       CosineSim.register(s)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import graft.util.Exact._
@@ -58,17 +58,14 @@ case class SessionOut(user_id: Long, sess_start: java.sql.Timestamp,
   */
 object Streams {
 
-  /** Stateful micro-batch drains pay a per-partition state-store cost
-    * every trigger (one store instance per shuffle partition), so a
-    * test-scale stream with 32 shuffle partitions spends more time
-    * opening/committing stores than processing rows. Right-size the
-    * state partitioning for the drain and restore the session setting
-    * after; production sizes this to stream volume (it is fixed at
-    * the FIRST start of a stateful query by the checkpoint anyway).
-    */
-  /** Conf override for [[StatePartitions]] — production sizes this to
-    * stream volume (shuffle partitions during a drain; a stateful
-    * query pins it into its checkpoint at first start).
+  /** Conf override for [[StatePartitions]]. Stateful micro-batch
+    * drains pay a per-partition state-store cost every trigger (one
+    * store instance per shuffle partition), so a test-scale stream with
+    * 32 shuffle partitions spends more time opening/committing stores
+    * than processing rows: [[withStatePartitions]] right-sizes the
+    * state partitioning for the drain and restores the session setting
+    * after. Production sizes this to stream volume (a stateful query
+    * pins it into its checkpoint at first start anyway).
     */
   val StatePartitionsConf = "spark.graft.streaming.statePartitions"
 
@@ -113,23 +110,120 @@ object Streams {
   }
 
   /** Finite-drain runner for the foreachBatch twins (round-9 drain-
-    * floor result, BENCH_SCALING "Round-9 drain floor"):
-    * `Trigger.AvailableNow` + awaitTermination plans the whole staged
-    * backlog up front (one listing; batches still split by
-    * maxFilesPerTrigger, so batch composition and bids are unchanged)
-    * and terminates itself, skipping the idle progress-poll cycle
-    * `processAllAvailable` pays per drain — measured −0.2 s/twin on
-    * both a near-zero-work twin (forget 1.80→1.59 s) and a real-work
-    * one (watermark 2.02→1.83 s) at sf0.1. The stateful-window
-    * memory-sink twins (watermark eviction, timeout sessionization,
-    * stream-stream joins) never come here and deliberately KEEP
-    * processAllAvailable — their final-eviction semantics depend on
-    * the default trigger's extra cycle.
+    * floor result, BENCH_SCALING "Round-9 drain floor"): `stream` runs
+    * `body(batch, bid)` per micro-batch under the checkpoint
+    * `workDir/ckpt`, and `Trigger.AvailableNow` + awaitTermination
+    * plans the whole backlog up front (one listing; batches still split
+    * by maxFilesPerTrigger, so batch composition and bids are
+    * unchanged) and terminates itself, skipping the idle progress-poll
+    * cycle `processAllAvailable` pays per drain — measured −0.2 s/twin
+    * on both a near-zero-work twin (forget 1.80→1.59 s) and a
+    * real-work one (watermark 2.02→1.83 s) at sf0.1. The memory-sink
+    * twins never come here and deliberately KEEP processAllAvailable
+    * ([[toMemory]]) — the stateful-window ones' final-eviction
+    * semantics depend on the default trigger's extra cycle.
     */
-  private def drain(w: org.apache.spark.sql.streaming.DataStreamWriter[Row]): Unit = {
-    val q = w.trigger(
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+  private def drain(stream: DataFrame, workDir: String)(
+      body: (DataFrame, Long) => Unit): Unit = {
+    val q = stream.writeStream
+      .option("checkpointLocation", s"$workDir/ckpt")
+      .foreachBatch(body)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
     try { q.awaitTermination(); () } finally q.stop()
+  }
+
+  /** [[drain]] over the shards staged in `srcDir` ([[stageShards]]),
+    * one staged file per micro-batch (`maxFilesPerTrigger=1`) — the
+    * head every staged foreachBatch twin shares.
+    */
+  private def drainStaged(spark: SparkSession, srcDir: String,
+      workDir: String)(body: (DataFrame, Long) => Unit): Unit =
+    drain(spark.readStream.schema(spark.read.parquet(srcDir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir), workDir)(body)
+
+  /** A foreachBatch twin's standing store: the parquet directory
+    * `workDir/<prefix>`, or one `workDir/<prefix><bid>` directory per
+    * micro-batch. The declared schema is the writer's: every write
+    * asserts the frame carries it (names and types; nullability is
+    * ignored) and fails naming the store, and every read pins it, so no
+    * read runs a footer-inference job (one extra Spark job per store
+    * per batch — these drains are job-bound) and a writer that drifts
+    * fails at its write instead of at some later read.
+    *
+    * The per-bid listing is the twins' one retry rule: a micro-batch
+    * overwrites its own `<prefix><bid>` directory and reads only the
+    * directories STRICTLY below its bid ([[below]], [[latestBelow]]),
+    * so a replayed batch recomputes from the same pre-batch state (sum/
+    * count partials are not idempotent under re-merge), and a restart
+    * from the checkpoint resumes from the committed batches' on-disk
+    * output, never from driver-side state.
+    */
+  private[streaming] final case class Store(prefix: String,
+      schema: org.apache.spark.sql.types.StructType) {
+    def exists(workDir: String): Boolean =
+      java.nio.file.Files.exists(java.nio.file.Paths.get(workDir, prefix))
+    def write(df: DataFrame, workDir: String): Unit =
+      put(df, s"$workDir/$prefix", "overwrite")
+    def append(df: DataFrame, workDir: String): Unit =
+      put(df, s"$workDir/$prefix", "append")
+    def write(df: DataFrame, workDir: String, bid: Long): Unit =
+      put(df, s"$workDir/$prefix$bid", "overwrite")
+    def read(spark: SparkSession, workDir: String): DataFrame =
+      spark.read.schema(schema).parquet(s"$workDir/$prefix")
+    /** Every per-bid directory with bid < `bid`, read as one frame. */
+    def below(spark: SparkSession, workDir: String,
+        bid: Long = Long.MaxValue): Option[DataFrame] = {
+      val dirs = bids(workDir, bid).map(_._2)
+      if (dirs.isEmpty) None
+      else Some(spark.read.schema(schema).parquet(dirs: _*))
+    }
+    /** Every per-bid directory; at least one must exist. */
+    def all(spark: SparkSession, workDir: String): DataFrame =
+      below(spark, workDir).getOrElse(throw new IllegalStateException(
+        s"no $prefix<bid> store under $workDir — no micro-batch ran"))
+    /** The newest per-bid directory with bid < `bid`. */
+    def latestBelow(spark: SparkSession, workDir: String,
+        bid: Long = Long.MaxValue): Option[DataFrame] =
+      bids(workDir, bid).lastOption
+        .map(d => spark.read.schema(schema).parquet(d._2))
+    private def bids(workDir: String, below: Long): Seq[(Long, String)] =
+      Option(new java.io.File(workDir).listFiles())
+        .getOrElse(Array.empty[java.io.File]).toSeq
+        .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+        .flatMap(f => f.getName.stripPrefix(prefix).toLongOption
+          .filter(_ < below).map(_ -> f.getPath))
+        .sortBy(_._1)
+    private def put(df: DataFrame, path: String, mode: String): Unit = {
+      require(df.schema.catalogString == schema.catalogString,
+        s"store $prefix: the frame's schema ${df.schema.catalogString} " +
+          s"differs from the declared ${schema.catalogString}")
+      df.write.mode(mode).parquet(path)
+    }
+  }
+
+  private[streaming] object Store {
+    def apply(prefix: String, ddl: String): Store =
+      Store(prefix, org.apache.spark.sql.types.StructType.fromDDL(ddl))
+  }
+
+  // row shapes several twins' stores share: MinHash signatures and
+  // bands, per-source KMV sketches and distinct (source, h) postings
+  private val SigDdl = "doc_id BIGINT, v ARRAY<BIGINT>"
+  private val BandDdl = "doc_id BIGINT, band INT, sig STRING"
+  private val SketchDdl = "source STRING, mins ARRAY<BIGINT>"
+  private val PostingsDdl = "source STRING, h BIGINT"
+
+  /** Run a memory-sink twin's query to completion and return its sink
+    * table: `processAllAvailable` (not [[drain]]'s AvailableNow — the
+    * stateful-window twins' final eviction depends on the default
+    * trigger's extra cycle), then stop.
+    */
+  private def toMemory(w: org.apache.spark.sql.streaming.DataStreamWriter[Row],
+      table: String): DataFrame = {
+    val q = w.format("memory").queryName(table).start()
+    try q.processAllAvailable() finally q.stop()
+    q.sparkSession.table(table)
   }
 
   private def eventsStream(spark: SparkSession, dir: String,
@@ -181,10 +275,7 @@ object Streams {
     val agg = graft.ops.TextAnalysis.gopherFlags(docsStream(spark, dir))
       .where(col("keep"))
       .groupBy(col("lang")).agg(count(lit(1)).as("n_kept"))
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(agg.writeStream.outputMode("complete"), table)
   }
 
   /** Streaming PII redaction gate: the batch scrub projection
@@ -202,10 +293,7 @@ object Streams {
     */
   def piiToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
     val scrubbed = graft.ops.TextAnalysis.piiScrub(docsStream(spark, dir))
-    val q = scrubbed.writeStream.outputMode("append")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(scrubbed.writeStream.outputMode("append"), table)
   }
 
   /** Streaming watermark-detection census — the foreachBatch
@@ -234,6 +322,9 @@ object Streams {
     watermarkRun(spark, workDir)
   }
 
+  private val WatermarkPartials = Store("per_b",
+    "source STRING, n_docs BIGINT, n_flagged BIGINT, zds DECIMAL(38,6)")
+
   /** Drain staged doc shards past the watermark monitor — separated
     * from the staging so a restart test can resume mid-stream (the
     * doremiRun shape).
@@ -241,31 +332,13 @@ object Streams {
   private[streaming] def watermarkRun(spark: SparkSession,
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.TextAnalysis
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        // one staged file = one partition — spread the bigram explode
-        val bdf = batch.toDF()
-          .repartition(spark.sparkContext.defaultParallelism)
-        TextAnalysis.watermarkPartials(bdf)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$workDir/per_b$bid")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val parts = Option(new java.io.File(workDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("per_b"))
-      .map(_.getPath)
-    require(parts.nonEmpty, "no drained partials — nothing was staged")
-    val folded = spark.read
-      .schema("source STRING, n_docs BIGINT, n_flagged BIGINT, zds DECIMAL(38,6)")
-      .parquet(parts.toSeq: _*)
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      // one staged file = one partition — spread the bigram explode
+      WatermarkPartials.write(TextAnalysis.watermarkPartials(
+          batch.repartition(spark.sparkContext.defaultParallelism))
+        .coalesce(1), workDir, bid)
+    }
+    val folded = WatermarkPartials.all(spark, workDir)
       .groupBy(col("source"))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("n_flagged")).as("n_flagged"), sum(col("zds")).as("zds"))
@@ -289,10 +362,7 @@ object Streams {
       .join(dim, col("user_id") === col("c_custkey")) // stream-static inner
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(agg.writeStream.outputMode("complete"), table)
   }
 
   /** Streaming tumbling 1-hour aggregation with a 1-hour watermark,
@@ -305,10 +375,7 @@ object Streams {
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("total_value"))
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(agg.writeStream.outputMode("complete"), table)
   }
 
   /** Custom sessionization via flatMapGroupsWithState — the
@@ -356,10 +423,7 @@ object Streams {
           }
           sessions.iterator
       }
-    val q = perUser.toDF().writeStream.outputMode("append")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(perUser.toDF().writeStream.outputMode("append"), table)
   }
 
   /** Timeout-closed streaming sessionization — the form of
@@ -471,12 +535,9 @@ object Streams {
             out.iterator
           }
       }
-    val q = sessions.toDF()
+    toMemory(sessions.toDF()
       .where(col("user_id") >= 0) // sentinels are harness plumbing
-      .writeStream.outputMode("append")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+      .writeStream.outputMode("append"), table)
     } finally ev.unpersist()
   }
 
@@ -491,12 +552,9 @@ object Streams {
     * KEY SET is deterministic — q_stream_dedup projects keys only.
     */
   def dedupToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
-    val q = eventsStream(spark, dir)
+    toMemory(eventsStream(spark, dir)
       .dropDuplicates("user_id", "event_type")
-      .writeStream.outputMode("append").format("memory").queryName(table)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+      .writeStream.outputMode("append"), table)
   }
 
   /** Horizon-bounded streaming dedup — `dropDuplicatesWithinWatermark`,
@@ -510,13 +568,10 @@ object Streams {
     */
   def dedupWithinWatermarkToTable(spark: SparkSession, dir: String,
       table: String, delay: String): DataFrame = withStatePartitions(spark) {
-    val q = eventsStream(spark, dir)
+    toMemory(eventsStream(spark, dir)
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .writeStream.outputMode("append").format("memory").queryName(table)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+      .writeStream.outputMode("append"), table)
   }
 
   /** Watermarked stream-stream interval join: views matched to the
@@ -541,11 +596,8 @@ object Streams {
       .withWatermark("b_ts", "1 hour")
     val joined = views.join(buys,
       expr("user_id = b_user AND b_ts >= v_ts AND b_ts <= v_ts + interval 1 hour"))
-    val q = joined.select(col("view_id"), col("buy_id"))
-      .writeStream.outputMode("append").format("memory").queryName(table)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(joined.select(col("view_id"), col("buy_id"))
+      .writeStream.outputMode("append"), table)
   }
 
   /** LEFT OUTER watermarked stream-stream join — the semantics the
@@ -635,14 +687,10 @@ object Streams {
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val ndPrev = spark.conf.getOption(ndKey)
     spark.conf.set(ndKey, "false")
-    try {
-      val q = joined.select(col("view_id"), col("buy_id"))
-        .where(col("view_id") >= 0) // sentinels are harness plumbing
-        .writeStream.outputMode("append").format("memory").queryName(table)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      spark.table(table)
-    } finally ndPrev match {
+    try toMemory(joined.select(col("view_id"), col("buy_id"))
+      .where(col("view_id") >= 0) // sentinels are harness plumbing
+      .writeStream.outputMode("append"), table)
+    finally ndPrev match {
       case Some(v) => spark.conf.set(ndKey, v)
       case None => spark.conf.unset(ndKey)
     }
@@ -666,34 +714,29 @@ object Streams {
     */
   def incrementalDedupIngest(spark: SparkSession, srcDir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    val schema = spark.read.parquet(srcDir).schema
-    val indexDir = s"$workDir/hash_index"
     val keptDir = s"$workDir/kept"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val hashed = batch.withColumn("h", md5(col("text")))
-        val firsts = hashed.groupBy(col("h"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .join(hashed, Seq("h", "doc_id"))
-        val fresh =
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(indexDir)))
-            firsts.join(spark.read.parquet(indexDir), Seq("h"), "left_anti")
-          else firsts
-        // cache: consumed by both appends; without it the anti-join
-        // against the (growing) index would run twice per batch
-        fresh.cache()
-        try {
-          fresh.select(batch.columns.map(col): _*)
-            .write.mode("append").parquet(keptDir)
-          fresh.select(col("h")).write.mode("append").parquet(indexDir)
-        } finally fresh.unpersist()
-        ()
-      })
+    drainStaged(spark, srcDir, workDir) { (batch, _) =>
+      val hashed = batch.withColumn("h", md5(col("text")))
+      val firsts = hashed.groupBy(col("h"))
+        .agg(min(col("doc_id")).as("doc_id"))
+        .join(hashed, Seq("h", "doc_id"))
+      val fresh =
+        if (HashIndex.exists(workDir))
+          firsts.join(HashIndex.read(spark, workDir), Seq("h"), "left_anti")
+        else firsts
+      // cache: consumed by both appends; without it the anti-join
+      // against the (growing) index would run twice per batch
+      fresh.cache()
+      try {
+        fresh.select(batch.columns.map(col): _*)
+          .write.mode("append").parquet(keptDir)
+        HashIndex.append(fresh.select(col("h")), workDir)
+      } finally { fresh.unpersist(); () }
+    }
     spark.read.parquet(keptDir)
   }
+
+  private val HashIndex = Store("hash_index", "h STRING")
 
   /** Streaming SKETCH-based near-dup ingest — the foreachBatch
     * deployment of the MinHash/LSH family: documents stream in doc_id
@@ -735,82 +778,74 @@ object Streams {
       when(col("doc_id") >= lo0 + i * span / shards, lit(i)).otherwise(acc)
     }
     stageIntoBy(docs, srcDir, shards, None, shardOf)
-    val sigDir = s"$workDir/sig_store"
-    val bandsDir = s"$workDir/band_store"
-    val keptDir = s"$workDir/kept"
-    val schema = spark.read.parquet(srcDir.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        // cache: consumed by bands, the estimate join, and the store
-        // append — without it the shingle+hash pipeline runs per use
-        val vec = Dedup.minhashSignatures(batch.toDF()).cache()
-        // the batch's band table: the probe side AND this trigger's
-        // band-store append (r14 — the release twin's staged-index
-        // discipline applied here: banding is a per-row map, so
-        // bands(store ∪ batch) ≡ stored bands ∪ bands(batch), and the
-        // store is no longer re-band-exploded every trigger)
-        val vecBands = Dedup.minhashBands(vec).cache()
-        try {
-          val allVec =
-            if (java.nio.file.Files.exists(java.nio.file.Paths.get(sigDir)))
-              spark.read.parquet(sigDir).unionByName(vec)
-            else vec
-          val allBands =
-            if (java.nio.file.Files.exists(java.nio.file.Paths.get(bandsDir)))
-              spark.read
-                .schema("doc_id BIGINT, band INT, sig STRING")
-                .parquet(bandsDir).unionByName(vecBands)
-            else vecBands
-          // the BATCH side broadcasts (it is the small one by
-          // construction); the accumulated store is only scanned and
-          // probed, never shuffled — at production scale the store is
-          // additionally bucketed on the band key so the probe prunes
-          // to matching buckets. The store side goes through the
-          // MinhashBandCap stop-band (arrival-time occupancy): a
-          // saturated store bucket would otherwise make EVERY later
-          // probe pay |bucket|. At the oracle-gated SFs the cap never
-          // fires (measured maxima 4/10 vs 64) so drained ≡ batch
-          // stays hash-exact. On a corpus that saturates mid-stream
-          // the divergence direction is: early batches still see a
-          // sub-cap bucket and emit its pairs (dropping docs), while
-          // the batch oracle's FINAL-corpus cap kills the whole
-          // bucket's candidates — so the drained kept-set is a SUBSET
-          // of the batch one, never a superset. The stop-band trade,
-          // stated rather than hidden.
-          val cand = broadcast(vecBands
-              .select(col("band"), col("sig"), col("doc_id").as("doc1")))
-            .join(Dedup.minhashLiveBands(allBands)
-              .select(col("band"), col("sig"), col("doc_id").as("doc2")),
-              Seq("band", "sig"))
-            .where(col("doc2") < col("doc1"))
-            .select("doc1", "doc2").distinct()
-          val dropped = cand
-            .join(vec.select(col("doc_id").as("doc1"), col("v").as("v1")),
-              Seq("doc1"))
-            .join(allVec.select(col("doc_id").as("doc2"), col("v").as("v2")),
-              Seq("doc2"))
-            .where(Dedup.minhashEst(col("v1"), col("v2")) >=
-              Dedup.StreamDupThreshold)
-            .select(col("doc1").as("doc_id")).distinct()
-          batch.toDF().join(dropped, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"))
-            .write.mode("append").parquet(keptDir)
-          // ALL signatures join the store (kept or dropped): the
-          // order-free predicate compares against every smaller id,
-          // and a dropped doc can still be the nearest neighbor that
-          // kills a later duplicate. Both store appends run AFTER the
-          // kept write (which reads the stores) — the documented
-          // read-write hazard that keeps these sinks sequential.
-          vec.write.mode("append").parquet(sigDir)
-          vecBands.write.mode("append").parquet(bandsDir)
-        } finally { vec.unpersist(); vecBands.unpersist(); () }
-        ()
-      })
-    spark.read.parquet(keptDir)
+    drainStaged(spark, srcDir.toString, workDir) { (batch, _) =>
+      // cache: consumed by bands, the estimate join, and the store
+      // append — without it the shingle+hash pipeline runs per use
+      val vec = Dedup.minhashSignatures(batch).cache()
+      // the batch's band table: the probe side AND this trigger's
+      // band-store append (r14 — the release twin's staged-index
+      // discipline applied here: banding is a per-row map, so
+      // bands(store ∪ batch) ≡ stored bands ∪ bands(batch), and the
+      // store is no longer re-band-exploded every trigger)
+      val vecBands = Dedup.minhashBands(vec).cache()
+      try {
+        val allVec =
+          if (SigStore.exists(workDir))
+            SigStore.read(spark, workDir).unionByName(vec)
+          else vec
+        val allBands =
+          if (BandStore.exists(workDir))
+            BandStore.read(spark, workDir).unionByName(vecBands)
+          else vecBands
+        // the BATCH side broadcasts (it is the small one by
+        // construction); the accumulated store is only scanned and
+        // probed, never shuffled — at production scale the store is
+        // additionally bucketed on the band key so the probe prunes
+        // to matching buckets. The store side goes through the
+        // MinhashBandCap stop-band (arrival-time occupancy): a
+        // saturated store bucket would otherwise make EVERY later
+        // probe pay |bucket|. At the oracle-gated SFs the cap never
+        // fires (measured maxima 4/10 vs 64) so drained ≡ batch
+        // stays hash-exact. On a corpus that saturates mid-stream
+        // the divergence direction is: early batches still see a
+        // sub-cap bucket and emit its pairs (dropping docs), while
+        // the batch oracle's FINAL-corpus cap kills the whole
+        // bucket's candidates — so the drained kept-set is a SUBSET
+        // of the batch one, never a superset. The stop-band trade,
+        // stated rather than hidden.
+        val cand = broadcast(vecBands
+            .select(col("band"), col("sig"), col("doc_id").as("doc1")))
+          .join(Dedup.minhashLiveBands(allBands)
+            .select(col("band"), col("sig"), col("doc_id").as("doc2")),
+            Seq("band", "sig"))
+          .where(col("doc2") < col("doc1"))
+          .select("doc1", "doc2").distinct()
+        val dropped = cand
+          .join(vec.select(col("doc_id").as("doc1"), col("v").as("v1")),
+            Seq("doc1"))
+          .join(allVec.select(col("doc_id").as("doc2"), col("v").as("v2")),
+            Seq("doc2"))
+          .where(Dedup.minhashEst(col("v1"), col("v2")) >=
+            Dedup.StreamDupThreshold)
+          .select(col("doc1").as("doc_id")).distinct()
+        MinhashKept.append(batch.join(dropped, Seq("doc_id"), "left_anti")
+          .select(col("doc_id")), workDir)
+        // ALL signatures join the store (kept or dropped): the
+        // order-free predicate compares against every smaller id,
+        // and a dropped doc can still be the nearest neighbor that
+        // kills a later duplicate. Both store appends run AFTER the
+        // kept write (which reads the stores) — the documented
+        // read-write hazard that keeps these sinks sequential.
+        SigStore.append(vec, workDir)
+        BandStore.append(vecBands, workDir)
+      } finally { vec.unpersist(); vecBands.unpersist(); () }
+    }
+    MinhashKept.read(spark, workDir)
   }
+
+  private val SigStore = Store("sig_store", SigDdl)
+  private val BandStore = Store("band_store", BandDdl)
+  private val MinhashKept = Store("kept", "doc_id BIGINT")
 
   /** Streaming drift monitor — the foreachBatch deployment of
     * q_drift_psi (graft.analytics.Stats): events stage as ts-range
@@ -824,10 +859,10 @@ object Streams {
     * (bin, n_ref, n_cur) counts; Stats.psiFrame turns them into the
     * audited output, and the oracle replays the ts split + ref-edge
     * binning in SQL, so streaming ≡ batch is hash-checked. State
-    * derivation follows the [[latestVersioned]] restart/retry
-    * discipline (previous version from DISK, strictly below the
-    * current bid). Degenerate streams (timestamp span < shards µs, so
-    * the first ts-range shard stages empty) fail LOUDLY at the
+    * derivation follows the [[Store]] restart/retry discipline
+    * (previous version from DISK, strictly below the current bid).
+    * Degenerate streams (timestamp span < shards µs, so the first
+    * ts-range shard stages empty) fail LOUDLY at the
     * reference require below rather than monitoring drift against a
     * smoothing-only baseline — the sessionizeTimeoutToTable
     * empty-input convention.
@@ -871,9 +906,6 @@ object Streams {
     */
   private[streaming] def driftRun(spark: SparkSession,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    val srcDir = java.nio.file.Paths.get(workDir, "stream")
-    val edgeDir = s"$workDir/ref_edges" // 1 row: the fixed bin edges
-    val refDir = s"$workDir/ref_hist"   // ≤10 rows: reference histogram
     // bins clamped to [0, 9]: CURRENT values may fall outside the
     // reference-fixed edge range
     def binCol(mn: Double, mx: Double): org.apache.spark.sql.Column =
@@ -881,54 +913,46 @@ object Streams {
         greatest(lit(0L), least(lit(9L),
           floor((col("value") - mn) / (mx - mn) * 10))).cast("int")
       else lit(0)
-    val schema = spark.read.parquet(srcDir.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        // the reference branch keys on the BATCH ID (deterministic and
-        // stable across restart/retry), not on refDir's existence — a
-        // retried batch 0 just overwrites its own idempotent output
-        // instead of double-counting itself into the current state
-        if (bid == 0L) {
-          val e = batch.agg(min(col("value")).as("mn"),
-            max(col("value")).as("mx")).head()
-          require(!e.isNullAt(0),
-            "reference micro-batch is empty — no baseline to fix edges from")
-          val (mn, mx) = (e.getDouble(0), e.getDouble(1))
-          spark.range(1).select(lit(mn).as("mn"), lit(mx).as("mx"))
-            .write.mode("overwrite").parquet(edgeDir)
-          batch.select(binCol(mn, mx).as("bin"))
-            .groupBy("bin").agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(refDir)
-        } else {
-          val edge = spark.read.parquet(edgeDir).head()
-          val (mn, mx) = (edge.getDouble(0), edge.getDouble(1))
-          val batchCounts = batch.select(binCol(mn, mx).as("bin"))
-            .groupBy("bin").agg(count(lit(1)).as("n"))
-          val merged = latestVersioned(workDir, "cur_v", Some(bid)) match {
-            case Some(prev) => spark.read.parquet(prev)
-              .unionByName(batchCounts)
-              .groupBy("bin").agg(sum(col("n")).as("n"))
-            case None => batchCounts
-          }
-          merged.write.mode("overwrite").parquet(s"$workDir/cur_v$bid")
-        }
-        ()
-      })
-    val ref = spark.read.parquet(refDir)
-      .select(col("bin"), col("n").as("n_ref"))
-    val cur = latestVersioned(workDir, "cur_v") match {
-      case Some(p) => spark.read.parquet(p)
-        .select(col("bin"), col("n").as("n_cur"))
-      case None => spark.emptyDataFrame
-        .select(lit(0).as("bin"), lit(0L).as("n_cur")).limit(0)
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      // the reference branch keys on the BATCH ID (deterministic and
+      // stable across restart/retry), not on ref_hist's existence — a
+      // retried batch 0 just overwrites its own idempotent output
+      // instead of double-counting itself into the current state
+      if (bid == 0L) {
+        val e = batch.agg(min(col("value")).as("mn"),
+          max(col("value")).as("mx")).head()
+        require(!e.isNullAt(0),
+          "reference micro-batch is empty — no baseline to fix edges from")
+        val (mn, mx) = (e.getDouble(0), e.getDouble(1))
+        RefEdges.write(
+          spark.range(1).select(lit(mn).as("mn"), lit(mx).as("mx")), workDir)
+        RefHist.write(batch.select(binCol(mn, mx).as("bin"))
+          .groupBy("bin").agg(count(lit(1)).as("n")), workDir)
+      } else {
+        val edge = RefEdges.read(spark, workDir).head()
+        val (mn, mx) = (edge.getDouble(0), edge.getDouble(1))
+        val batchCounts = batch.select(binCol(mn, mx).as("bin"))
+          .groupBy("bin").agg(count(lit(1)).as("n"))
+        CurV.write(CurV.latestBelow(spark, workDir, bid)
+          .map(_.unionByName(batchCounts)
+            .groupBy("bin").agg(sum(col("n")).as("n")))
+          .getOrElse(batchCounts), workDir, bid)
+      }
     }
+    val ref = RefHist.read(spark, workDir)
+      .select(col("bin"), col("n").as("n_ref"))
+    val cur = CurV.latestBelow(spark, workDir)
+      .getOrElse(spark.emptyDataFrame
+        .select(lit(0).as("bin"), lit(0L).as("n")).limit(0))
+      .select(col("bin"), col("n").as("n_cur"))
     ref.join(cur, Seq("bin"), "full")
       .select(col("bin"), coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"))
   }
+
+  private val RefEdges = Store("ref_edges", "mn DOUBLE, mx DOUBLE") // 1 row
+  private val RefHist = Store("ref_hist", "bin INT, n BIGINT") // ≤10 rows
+  private val CurV = Store("cur_v", "bin INT, n BIGINT")
 
   /** Stage the domain-mixture monitor: train the bigram LM OFFLINE on
     * the full corpus (the ivfQuantizer offline-train discipline — the
@@ -939,12 +963,9 @@ object Streams {
     */
   private[streaming] def doremiStage(spark: SparkSession, dir: String,
       workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
-    val lmDir = s"$workDir/lm"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(lmDir))) {
-      graft.ops.TextAnalysis.lmProbs(graft.ops.TextAnalysis.docBigrams(
-          graft.Tables(spark, dir, "documents")))
-        .write.mode("overwrite").parquet(lmDir)
-    }
+    if (!Lm.exists(workDir))
+      Lm.write(graft.ops.TextAnalysis.lmProbs(graft.ops.TextAnalysis
+        .docBigrams(graft.Tables(spark, dir, "documents"))), workDir)
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     stageShards(docs, workDir, shards, upTo, keyCol = "doc_id",
@@ -967,42 +988,31 @@ object Streams {
   private[streaming] def doremiRun(spark: SparkSession,
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.TextAnalysis
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val lm = spark.read.schema("bg STRING, p DOUBLE").parquet(s"$workDir/lm")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        // a micro-batch arrives as ONE staged file = one partition —
-        // spread it so the bigram explode uses every core (the
-        // crossmodal lesson)
-        val bdf = batch.toDF()
-          .repartition(spark.sparkContext.defaultParallelism)
+    val lm = Lm.read(spark, workDir)
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      // a micro-batch arrives as ONE staged file = one partition —
+      // spread it so the bigram explode uses every core (the
+      // crossmodal lesson)
+      val bdf = batch.repartition(spark.sparkContext.defaultParallelism)
+      DoremiPartials.write(
         TextAnalysis.scoreBigrams(TextAnalysis.docBigrams(bdf), lm)
           .join(bdf.select(col("doc_id"), col("source")), Seq("doc_id"))
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_bg")).as("n_bg"),
             sum((col("cross_entropy") * col("n_bg")).cast("decimal(28,20)"))
               .as("ces"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$workDir/per_b$bid")
-        ()
-      })
-    val parts = Option(new java.io.File(workDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("per_b"))
-      .map(_.getPath)
-    require(parts.nonEmpty, "no drained partials — nothing was staged")
-    val folded = spark.read
-      .schema("source STRING, n_docs BIGINT, n_bg BIGINT, ces DECIMAL(38,20)")
-      .parquet(parts.toSeq: _*)
+          .coalesce(1), workDir, bid)
+    }
+    val folded = DoremiPartials.all(spark, workDir)
       .groupBy(col("source"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_bg")).as("n_bg"),
         sum(col("ces")).as("ces"))
     TextAnalysis.doremiWeights(folded)
   }
+
+  private val Lm = Store("lm", "bg STRING, p DOUBLE")
+  private val DoremiPartials = Store("per_b",
+    "source STRING, n_docs BIGINT, n_bg BIGINT, ces DECIMAL(38,20)")
 
   /** Stage + drain in one call — the q_stream_doremi entry point. */
   def doremiIngest(spark: SparkSession, dir: String, workDir: String,
@@ -1044,24 +1054,18 @@ object Streams {
     */
   private[streaming] def pcaRun(spark: SparkSession,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        // per-bid overwrite: foreachBatch is at-least-once, the
-        // overwrite makes a replayed batch idempotent (the ivfRun
-        // versioned-state discipline)
-        graft.ops.Similarity.pcaPartial(batch.toDF())
-          .write.mode("overwrite").parquet(s"$workDir/pca_b$bid")
-        ()
-      })
-    spark.read.parquet(s"$workDir/pca_b*")
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      // per-bid overwrite: foreachBatch is at-least-once, the
+      // overwrite makes a replayed batch idempotent (the [[Store]]
+      // retry discipline)
+      PcaPartials.write(graft.ops.Similarity.pcaPartial(batch), workDir, bid)
+    }
+    PcaPartials.all(spark, workDir)
       .groupBy(col("dim")).agg(sum(col("u")).as("u"))
       .orderBy(col("dim"))
   }
+
+  private val PcaPartials = Store("pca_b", "dim INT, u BIGINT")
 
   /** Streaming vector-index ingest — the foreachBatch deployment of
     * the two-level IVF quantizer: the quantizer is trained OFFLINE
@@ -1103,7 +1107,6 @@ object Streams {
   private[streaming] def ivfRun(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.Similarity
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
     // train the quantizer ONCE, before the stream starts — cache +
     // materialize both tiny (≤√n-row) tables so the per-batch
     // foreachBatch plans reuse them instead of re-running the
@@ -1113,25 +1116,18 @@ object Streams {
     val fineBucket = fineBucket0.cache()
     try {
       coarse.count(); fineBucket.count()
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      drain(stream.writeStream
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-          // one OVERWRITTEN directory per batch id: foreachBatch is
-          // at-least-once, so a blind append would double-write a
-          // retried/replayed batch and silently break the
-          // streaming ≡ batch row-for-row claim — the per-bid
-          // overwrite makes the retry idempotent (the driftIngest
-          // versioned-state discipline)
-          Similarity.ivfAssign(batch.toDF(), coarse, fineBucket)
-            .select(col("vec_id"), col("anchor_id"))
-            .write.mode("overwrite").parquet(s"$workDir/postings_b$bid")
-          ()
-        })
+      drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+        // one OVERWRITTEN directory per batch id: foreachBatch is
+        // at-least-once, so a blind append would double-write a
+        // retried/replayed batch and silently break the
+        // streaming ≡ batch row-for-row claim — the per-bid
+        // overwrite makes the retry idempotent (the [[Store]] retry
+        // discipline)
+        IvfPostings.write(Similarity.ivfAssign(batch, coarse, fineBucket)
+          .select(col("vec_id"), col("anchor_id")), workDir, bid)
+      }
     } finally { coarse.unpersist(); fineBucket.unpersist(); () }
-    spark.read.parquet(s"$workDir/postings_b*")
+    IvfPostings.all(spark, workDir)
       .groupBy(col("anchor_id"))
       .agg(count(lit(1)).as("n_members"),
         expr("bit_xor(vec_id)").as("member_xor"))
@@ -1156,19 +1152,20 @@ object Streams {
       workDir: String): DataFrame = {
     import graft.ops.Similarity
     ivfIngest(spark, dir, workDir)
-    val store = spark.read.schema("vec_id BIGINT, anchor_id BIGINT")
-      .parquet(s"$workDir/postings_b*")
     val moved = Similarity.retrainMerged(spark, dir)
       .where(col("reassigned")).select(col("vec_id"), col("anchor_id"))
-    store.join(moved.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .unionByName(moved)
-      .write.mode("overwrite").parquet(s"$workDir/postings_r1")
-    spark.read.parquet(s"$workDir/postings_r1")
+    IvfPostingsR1.write(IvfPostings.all(spark, workDir)
+      .join(moved.select(col("vec_id")), Seq("vec_id"), "left_anti")
+      .unionByName(moved), workDir)
+    IvfPostingsR1.read(spark, workDir)
       .groupBy(col("anchor_id"))
       .agg(count(lit(1)).as("n_members"),
         expr("bit_xor(vec_id)").as("member_xor"))
       .orderBy(col("anchor_id"))
   }
+
+  private val IvfPostings = Store("postings_b", "vec_id BIGINT, anchor_id BIGINT")
+  private val IvfPostingsR1 = IvfPostings.copy(prefix = "postings_r1")
 
   /** Streaming coverage-audit guard — the foreachBatch deployment of
     * q_semantic_outliers: the quantizer and the √n anchor table are
@@ -1210,7 +1207,6 @@ object Streams {
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.Similarity
     graft.functions.CosineSim.register(spark)
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
     val (coarse0, fineBucket0) = Similarity.ivfQuantizer(spark, dir)
     val coarse = coarse0.cache()
     val fineBucket = fineBucket0.cache()
@@ -1221,25 +1217,20 @@ object Streams {
       .select(col("fine_id").as("anchor_id"), col("fv").as("av")))
     try {
       coarse.count(); fineBucket.count()
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      drain(stream.writeStream
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-          // a micro-batch arrives as ONE staged file = one partition —
-          // spread it so the assignment cosines use every core (the
-          // crossmodalRun lesson; the shuffle moves only the batch)
-          val bdf = batch.toDF()
-            .repartition(spark.sparkContext.defaultParallelism)
-          Similarity.outlierScore(
-              Similarity.ivfAssign(bdf, coarse, fineBucket), anchors)
-            .write.mode("overwrite").parquet(s"$workDir/flags_b$bid")
-          ()
-        })
+      drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+        // a micro-batch arrives as ONE staged file = one partition —
+        // spread it so the assignment cosines use every core (the
+        // crossmodalRun lesson; the shuffle moves only the batch)
+        val bdf = batch.repartition(spark.sparkContext.defaultParallelism)
+        OutlierFlags.write(Similarity.outlierScore(
+          Similarity.ivfAssign(bdf, coarse, fineBucket), anchors), workDir, bid)
+      }
     } finally { coarse.unpersist(); fineBucket.unpersist(); () }
-    spark.read.parquet(s"$workDir/flags_b*").orderBy(col("vec_id"))
+    OutlierFlags.all(spark, workDir).orderBy(col("vec_id"))
   }
+
+  private val OutlierFlags = Store("flags_b", "vec_id BIGINT, " +
+    "best_anchor BIGINT, best_cos DOUBLE, is_outlier BOOLEAN")
 
   /** Streaming benchmark-contamination guard — the foreachBatch
     * deployment of q_contamination: the EVAL shingle index is fixed
@@ -1270,8 +1261,8 @@ object Streams {
   private[streaming] def contaminationStage(spark: SparkSession, dir: String,
       workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
     // canonical documents staging projection, UNFILTERED — the train
-    // slice (doc_id % 50 <> 0) is applied by contaminationRun's stream
-    // pipeline instead, so this family member shares the one staged
+    // slice (doc_id % 50 <> 0) is applied by contaminationRun's batch
+    // body instead, so this family member shares the one staged
     // shard set; per-batch train content is identical either way
     // (shard membership is doc_id % n, independent of the filter)
     val docs = graft.Tables(spark, dir, "documents")
@@ -1300,28 +1291,25 @@ object Streams {
       .select(col("doc_id").as("eval_id"), col("h")).cache()
     try {
       evalIx.count() // materialize the static index once, pre-stream
-      val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-      val schema = spark.read.parquet(srcDir).schema
-      // the train-slice predicate lives HERE (stateless stream filter),
-      // not in the staging — the staged shards are the shared canonical
-      // corpus; idempotent when a test stages a pre-filtered prefix
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .where(col("doc_id") % 50 =!= 0)
-      drain(stream.writeStream
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-          Dedup.shingleHashes(batch.toDF())
+      drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+        // the train-slice predicate lives HERE (stateless, so every
+        // batch keeps the same rows as a stream-side filter), not in
+        // the staging — the staged shards are the shared canonical
+        // corpus; idempotent when a test stages a pre-filtered prefix
+        ContaminationFlags.write(
+          Dedup.shingleHashes(batch.where(col("doc_id") % 50 =!= 0))
             .join(broadcast(evalIx), Seq("h"))
             .groupBy(col("doc_id"))
             .agg(countDistinct(col("h")).as("n_shared"),
-              countDistinct(col("eval_id")).as("n_eval_docs"))
-            .write.mode("overwrite").parquet(s"$workDir/flag_b$bid")
-          ()
-        })
+              countDistinct(col("eval_id")).as("n_eval_docs")),
+          workDir, bid)
+      }
     } finally { evalIx.unpersist(); () }
-    spark.read.parquet(s"$workDir/flag_b*").orderBy(col("doc_id"))
+    ContaminationFlags.all(spark, workDir).orderBy(col("doc_id"))
   }
+
+  private val ContaminationFlags = Store("flag_b",
+    "doc_id BIGINT, n_shared BIGINT, n_eval_docs BIGINT")
 
   /** Streaming per-source cardinality monitor — the foreachBatch
     * deployment of q_theta_sketch: every arriving micro-batch of docs
@@ -1355,42 +1343,46 @@ object Streams {
 
   private[streaming] def thetaRun(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    import graft.ops.{Dedup, Govern}
+    import graft.ops.Govern
     graft.functions.Registry.ensure(spark)
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val b = batch.toDF()
-        val posts = Dedup.shingleHashes(b.select(col("doc_id"), col("text")))
-          .join(b.select(col("doc_id"), col("source")), Seq("doc_id"))
-          .cache()
-        try {
-          posts.groupBy(col("source"))
-            .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
-              .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/sk_b$bid")
-          posts.select(col("source"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/ph_b$bid")
-        } finally { posts.unpersist(); () }
-        ()
-      })
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      sketchAndPostings(batch, workDir, bid, ThetaSketches, ThetaPostings)
+    }
     // drain-time census: merge the per-bid sketch partials (explode +
     // re-aggregate — the KMV merge), exact audit over the accumulated
     // postings store, SAME census projection as the batch path
-    val merged = spark.read.parquet(s"$workDir/sk_b*")
+    val merged = ThetaSketches.all(spark, workDir)
       .select(col("source"), explode(col("mins")).as("h"))
       .groupBy(col("source"))
       .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
         .as("mins"))
-    val exact = spark.read.parquet(s"$workDir/ph_b*")
+    val exact = ThetaPostings.all(spark, workDir)
       .groupBy(col("source"))
       .agg(countDistinct(col("h")).as("exact_distinct"))
     Govern.thetaCensus(merged.join(exact, Seq("source")))
       .orderBy(col("source"))
+  }
+
+  private val ThetaSketches = Store("sk_b", SketchDdl)
+  private val ThetaPostings = Store("ph_b", PostingsDdl)
+
+  /** One docs micro-batch's per-source KMV sketch partial and distinct
+    * (source, h) postings slice, each to its own per-bid store — the
+    * theta and theta-delta twins' shared batch body.
+    */
+  private def sketchAndPostings(batch: DataFrame, workDir: String,
+      bid: Long, sketches: Store, postings: Store): Unit = {
+    import graft.ops.{Dedup, Govern}
+    val posts = Dedup.shingleHashes(batch.select(col("doc_id"), col("text")))
+      .join(batch.select(col("doc_id"), col("source")), Seq("doc_id"))
+      .cache()
+    try {
+      sketches.write(posts.groupBy(col("source"))
+        .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
+          .as("mins")), workDir, bid)
+      postings.write(posts.select(col("source"), col("h")).distinct(),
+        workDir, bid)
+    } finally { posts.unpersist(); () }
   }
 
   /** EXECUTES on the streaming engine: the distinct-n diversity
@@ -1414,29 +1406,21 @@ object Streams {
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.{Govern, TextAnalysis}
     graft.functions.Registry.ensure(spark)
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val g = TextAnalysis.ngramHashes(
-          batch.toDF().select(col("source"), col("text"))).cache()
-        try {
-          g.groupBy(col("source"), col("n"))
-            .agg(count(lit(1)).as("total"),
-              call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
-                .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/ngsk_b$bid")
-          g.select(col("source"), col("n"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/ngph_b$bid")
-        } finally { g.unpersist(); () }
-        ()
-      })
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      val g = TextAnalysis.ngramHashes(
+        batch.select(col("source"), col("text"))).cache()
+      try {
+        NgramSketches.write(g.groupBy(col("source"), col("n"))
+          .agg(count(lit(1)).as("total"),
+            call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
+              .as("mins")), workDir, bid)
+        NgramPostings.write(g.select(col("source"), col("n"), col("h"))
+          .distinct(), workDir, bid)
+      } finally { g.unpersist(); () }
+    }
     // drain census: totals are additive, minima re-rank (the KMV
     // merge), the exact audit counts the accumulated distinct slices
-    val parts = spark.read.parquet(s"$workDir/ngsk_b*")
+    val parts = NgramSketches.all(spark, workDir)
     val tot = parts.groupBy(col("source"), col("n"))
       .agg(sum(col("total")).as("total"))
     val mins = parts
@@ -1444,13 +1428,17 @@ object Streams {
       .groupBy(col("source"), col("n"))
       .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
         .as("mins"))
-    val exact = spark.read.parquet(s"$workDir/ngph_b*")
+    val exact = NgramPostings.all(spark, workDir)
       .groupBy(col("source"), col("n"))
       .agg(countDistinct(col("h")).as("exact_distinct"))
     TextAnalysis.ngramThetaCensus(tot
       .join(mins, Seq("source", "n"))
       .join(exact, Seq("source", "n")))
   }
+
+  private val NgramSketches = Store("ngsk_b",
+    "source STRING, n INT, total BIGINT, mins ARRAY<BIGINT>")
+  private val NgramPostings = Store("ngph_b", "source STRING, n INT, h BIGINT")
 
   /** EXECUTES on the streaming engine: the CROSS-RELEASE novelty
     * monitor at ingest — the q_theta_delta question ("how much of the
@@ -1496,21 +1484,16 @@ object Streams {
     // Bit-identical: the KMV aggregate dedups inserts, so kmv_min_k
     // over the distinct (source, h) store equals kmv_min_k over the
     // raw per-doc posting stream.
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$workDir/v1_ph")))
-      Dedup.sharedShinglePostings(spark, dir)
+    if (!V1Postings.exists(workDir))
+      V1Postings.write(Dedup.sharedShinglePostings(spark, dir)
         .where(col("doc_id") % 4 =!= 0)
         .join(v1.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("source"), col("h")).distinct()
-        .write.mode("overwrite").parquet(s"$workDir/v1_ph")
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$workDir/v1_theta")))
-      spark.read.schema("source STRING, h BIGINT")
-        .parquet(s"$workDir/v1_ph")
+        .select(col("source"), col("h")).distinct(), workDir)
+    if (!V1Theta.exists(workDir))
+      V1Theta.write(V1Postings.read(spark, workDir)
         .groupBy(col("source"))
         .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
-          .as("mins"))
-        .write.mode("overwrite").parquet(s"$workDir/v1_theta")
+          .as("mins")), workDir)
     stageShards(docs.where(col("doc_id") % 4 === 0), workDir, shards,
       upTo, keyCol = "doc_id",
       cacheKey = if (upTo.isEmpty) Some(s"$dir|documents_rel4") else None)
@@ -1519,52 +1502,35 @@ object Streams {
 
   private[streaming] def thetaDeltaRun(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    import graft.ops.{Dedup, Govern}
+    import graft.ops.Govern
     graft.functions.Registry.ensure(spark)
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val b = batch.toDF()
-        val posts = Dedup.shingleHashes(b.select(col("doc_id"), col("text")))
-          .join(b.select(col("doc_id"), col("source")), Seq("doc_id"))
-          .cache()
-        try {
-          posts.groupBy(col("source"))
-            .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
-              .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/dsk_b$bid")
-          posts.select(col("source"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/dph_b$bid")
-        } finally { posts.unpersist(); () }
-        ()
-      })
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      sketchAndPostings(batch, workDir, bid, DeltaSketches, DeltaPostings)
+    }
     // drain census: staged v1 sketch ⊕ per-bid arrival partials (the
     // KMV merge), exact audit against the static v1 postings store —
     // the SAME census projection as the batch query
-    val v1Sk = spark.read.schema("source STRING, mins ARRAY<BIGINT>")
-      .parquet(s"$workDir/v1_theta")
+    val v1Sk = V1Theta.read(spark, workDir)
       .select(col("source"), col("mins").as("mins_v1"))
     val merged = v1Sk.select(col("source"), explode(col("mins_v1")).as("h"))
-      .unionByName(spark.read.schema("source STRING, mins ARRAY<BIGINT>")
-        .parquet(s"$workDir/dsk_b*")
+      .unionByName(DeltaSketches.all(spark, workDir)
         .select(col("source"), explode(col("mins")).as("h")))
       .groupBy(col("source"))
       .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
         .as("mins_full"))
-    val exV1 = spark.read.schema("source STRING, h BIGINT")
-      .parquet(s"$workDir/v1_ph")
+    val exV1 = V1Postings.read(spark, workDir)
     val exactV1 = exV1.groupBy(col("source"))
       .agg(count(lit(1)).as("exact_v1"))
-    val exactNew = spark.read.schema("source STRING, h BIGINT")
-      .parquet(s"$workDir/dph_b*").distinct()
+    val exactNew = DeltaPostings.all(spark, workDir).distinct()
       .join(exV1, Seq("source", "h"), "left_anti")
       .groupBy(col("source")).agg(count(lit(1)).as("exact_new"))
     Govern.thetaDeltaCensus(v1Sk, merged, exactV1, exactNew)
   }
+
+  private val V1Theta = Store("v1_theta", SketchDdl)
+  private val V1Postings = Store("v1_ph", PostingsDdl)
+  private val DeltaSketches = Store("dsk_b", SketchDdl)
+  private val DeltaPostings = Store("dph_b", PostingsDdl)
 
   /** Streaming right-to-be-forgotten guard — the foreachBatch
     * deployment of q_forget's events leg (purge-at-ingest): the
@@ -1618,34 +1584,30 @@ object Streams {
     // and the physical delete
     val del = broadcast(graft.ops.Prep.deletionList(spark, dir)
       .withColumn("hit", lit(1)))
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        batch.toDF()
-          .select(col("user_id").as("k"),
-            h60(concat(lit("e:"), col("event_id").cast("string"))).as("h"))
-          .join(del, Seq("k"), "left")
-          .agg(
-            coalesce(sum(when(col("hit") === 1, 1L).otherwise(0L)), lit(0L))
-              .as("n_purged"),
-            coalesce(sum(when(col("hit").isNull, 1L).otherwise(0L)), lit(0L))
-              .as("n_kept"),
-            coalesce(expr("bit_xor(CASE WHEN hit IS NULL THEN h " +
-              "ELSE CAST(0 AS BIGINT) END)"), lit(0L)).as("kept_xor"))
-          .write.mode("overwrite").parquet(s"$workDir/audit_b$bid")
-        ()
-      })
-    spark.read.parquet(s"$workDir/audit_b*")
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      ForgetAudit.write(batch
+        .select(col("user_id").as("k"),
+          h60(concat(lit("e:"), col("event_id").cast("string"))).as("h"))
+        .join(del, Seq("k"), "left")
+        .agg(
+          coalesce(sum(when(col("hit") === 1, 1L).otherwise(0L)), lit(0L))
+            .as("n_purged"),
+          coalesce(sum(when(col("hit").isNull, 1L).otherwise(0L)), lit(0L))
+            .as("n_kept"),
+          coalesce(expr("bit_xor(CASE WHEN hit IS NULL THEN h " +
+            "ELSE CAST(0 AS BIGINT) END)"), lit(0L)).as("kept_xor")),
+        workDir, bid)
+    }
+    ForgetAudit.all(spark, workDir)
       .agg(coalesce(sum(col("n_purged")), lit(0L)).as("n_purged"),
         coalesce(sum(col("n_kept")), lit(0L)).as("n_kept"),
         coalesce(expr("bit_xor(kept_xor)"), lit(0L)).as("kept_checksum"))
       .select(lit("events").as("tbl"), col("n_purged"), col("n_kept"),
         col("kept_checksum"))
   }
+
+  private val ForgetAudit = Store("audit_b",
+    "n_purged BIGINT, n_kept BIGINT, kept_xor BIGINT")
 
   /** Streaming release admission — the foreachBatch deployment of
     * q_release_delta (the ingest-time extension of a shipped corpus
@@ -1730,11 +1692,8 @@ object Streams {
 
   private def buildV1Hash(spark: SparkSession, workDir: String,
       v1: DataFrame): Unit = {
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$workDir/v1_hash")))
-      v1.select(md5(col("text")).as("ch")).distinct()
-        .write.mode("overwrite").parquet(s"$workDir/v1_hash")
-    ()
+    if (!V1Hash.exists(workDir))
+      V1Hash.write(v1.select(md5(col("text")).as("ch")).distinct(), workDir)
   }
 
   private def buildV1ShingleStores(spark: SparkSession, dir: String,
@@ -1751,16 +1710,13 @@ object Streams {
     // invocation. Bit-identical: shingleHashes is distinct per
     // (doc_id, h), so the doc_id filter commutes with it; the minhash
     // min-aggregate and the KMV insert-dedup are row-order-free.
-    val needSig = !java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$workDir/v1_sig"))
-    val needTheta = !java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$workDir/v1_theta"))
+    val needSig = !V1Sig.exists(workDir)
+    val needTheta = !V1Theta.exists(workDir)
     if (needSig || needTheta) {
       val sh = Dedup.sharedShinglePostings(spark, dir)
         .where(col("doc_id") % 4 =!= 0)
       if (needSig)
-        Dedup.minhashSignaturesOfHashes(sh)
-          .write.mode("overwrite").parquet(s"$workDir/v1_sig")
+        V1Sig.write(Dedup.minhashSignaturesOfHashes(sh), workDir)
       // the release also ships its GOVERNANCE sketch: v1's per-source
       // KMV minima (k longs per source — mergeable state, so the next
       // release's sketch folds in by re-aggregating the union of
@@ -1769,11 +1725,11 @@ object Streams {
       // graft.ops.Govern.sharedThetaSketches)
       if (needTheta) {
         graft.functions.Registry.ensure(spark)
-        sh.join(v1.select(col("doc_id"), col("source")), Seq("doc_id"))
-          .groupBy(col("source"))
-          .agg(call_function("kmv_min_k", col("h"),
-            lit(graft.ops.Govern.ThetaK)).as("mins"))
-          .write.mode("overwrite").parquet(s"$workDir/v1_theta")
+        V1Theta.write(
+          sh.join(v1.select(col("doc_id"), col("source")), Seq("doc_id"))
+            .groupBy(col("source"))
+            .agg(call_function("kmv_min_k", col("h"),
+              lit(graft.ops.Govern.ThetaK)).as("mins")), workDir)
       }
     }
     // a release ships its index artifacts: v1's band table, the
@@ -1785,29 +1741,36 @@ object Streams {
     // delta (arrivals-only) counts and reproduces the exact same
     // saturated set, so the drained census stays hash-equal to
     // q_release_delta.
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$workDir/v1_bands"))) {
-      val v1SigStored = spark.read
-        .schema("doc_id BIGINT, v ARRAY<BIGINT>")
-        .parquet(s"$workDir/v1_sig")
-      val v1Bands = Dedup.minhashBands(v1SigStored)
-      v1Bands.write.mode("overwrite").parquet(s"$workDir/v1_bands_tmp")
-      val stored = spark.read
-        .schema("doc_id BIGINT, band INT, sig STRING")
-        .parquet(s"$workDir/v1_bands_tmp")
-      val cnt = stored.groupBy(col("band"), col("sig"))
+    if (!V1Bands.exists(workDir)) {
+      V1BandsTmp.write(Dedup.minhashBands(V1Sig.read(spark, workDir)), workDir)
+      val cnt = V1BandsTmp.read(spark, workDir).groupBy(col("band"), col("sig"))
         .agg(count(lit(1)).as("c_v1"))
-      cnt.write.mode("overwrite").parquet(s"$workDir/v1_bcnt")
-      cnt.where(col("c_v1") > Dedup.MinhashBandCap)
-        .select(col("band"), col("sig")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$workDir/v1_sat")
+      V1BandCounts.write(cnt, workDir)
+      V1Saturated.write(cnt.where(col("c_v1") > Dedup.MinhashBandCap)
+        .select(col("band"), col("sig")).coalesce(1), workDir)
       // publish last so a crash mid-stage re-derives everything
       java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$workDir/v1_bands_tmp"),
-        java.nio.file.Paths.get(s"$workDir/v1_bands"))
+        java.nio.file.Paths.get(workDir, V1BandsTmp.prefix),
+        java.nio.file.Paths.get(workDir, V1Bands.prefix))
       ()
     }
   }
+
+  // v1's standing release stores (built once by releaseStage, kept on
+  // restart) and the release drain's per-bid stores
+  private val V1Hash = Store("v1_hash", "ch STRING")
+  private val V1Sig = Store("v1_sig", SigDdl)
+  private val V1Bands = Store("v1_bands", BandDdl)
+  private val V1BandsTmp = Store("v1_bands_tmp", BandDdl)
+  private val V1BandCounts = Store("v1_bcnt", "band INT, sig STRING, c_v1 BIGINT")
+  private val V1Saturated = Store("v1_sat", "band INT, sig STRING")
+  private val ReleaseCensus = Store("census_b", "source STRING, " +
+    "n_batch BIGINT, d_forget BIGINT, d_eval BIGINT, d_quality BIGINT, " +
+    "d_lang BIGINT, d_exact_v1 BIGINT, d_exact_batch BIGINT, d_near BIGINT, " +
+    "n_admitted BIGINT, admitted_checksum BIGINT")
+  private val BatchSig = Store("bsig_b", SigDdl)
+  private val BatchBands = Store("bband_b", BandDdl)
+  private val BatchHash = Store("bhash_b", "ch STRING")
 
   private def stageCrawlShards(spark: SparkSession, workDir: String,
       docs: DataFrame, shards: Int, upTo: Option[Int]): Unit = {
@@ -1836,138 +1799,111 @@ object Streams {
       workDir: String): DataFrame =
     withStatePartitions(spark, aqeOff = true) {
     import graft.ops.{Dedup, Prep}
-    val sigSchema = "doc_id BIGINT, v ARRAY<BIGINT>"
-    val censusSchema = "source STRING, n_batch BIGINT, d_forget BIGINT, " +
-      "d_eval BIGINT, d_quality BIGINT, d_lang BIGINT, d_exact_v1 BIGINT, " +
-      "d_exact_batch BIGINT, d_near BIGINT, n_admitted BIGINT, " +
-      "admitted_checksum BIGINT"
-    val v1Hash = spark.read.schema("ch STRING").parquet(s"$workDir/v1_hash")
-      .withColumn("v1_hit", lit(1))
-    val v1Sig = spark.read.schema(sigSchema).parquet(s"$workDir/v1_sig")
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        // one staged file = one partition — spread the shingle work
-        val bdf = batch.toDF()
-          .repartition(spark.sparkContext.defaultParallelism)
-        // cached: local flags feed the keeper agg, the flag joins and
-        // the hash-store append; vec feeds bands, two estimate joins
-        // and the signature-store append
-        val local = Prep.deltaLocalFlags(bdf).cache()
-        val vec = Dedup.minhashSignatures(
-          bdf.select(col("doc_id"), col("text"))).cache()
-        // cached: feeds the live filter, the probe side, the store-side
-        // union and the per-bid bband append
-        val batchBands = Dedup.minhashBands(vec).cache()
-        try {
-          val mbKeeper = local.groupBy(col("ch"))
-            .agg(min(col("doc_id")).as("mb_keeper"))
-          val prevHash = storesBelow(spark, workDir, "bhash_b", bid,
-            "ch STRING").map(_.distinct().withColumn("prev_hit", lit(1)))
-          val prevSig = storesBelow(spark, workDir, "bsig_b", bid, sigSchema)
-          val allVec = prevSig.foldLeft(v1Sig.unionByName(vec))(_ unionByName _)
-          // arrival-time occupancy census, recomposed over the STAGED
-          // v1 index artifacts: saturated = (bucket already over cap
-          // in v1 alone — the staged v1_sat list) ∪ (v1 count + delta
-          // count over cap, where delta = prev-arrived ∪ this batch).
-          // Only the delta bands shuffle for their counts; v1's staged
-          // per-bucket counts are semi-probed by the delta's bucket
-          // keys and its band table is scanned + anti-filtered — v1 is
-          // never re-exploded or reshuffled per trigger (the round-9
-          // perf seam). The saturated set is provably identical to
-          // minhashLiveBands(minhashBands(v1 ∪ arrived ∪ batch)), so
-          // the drained census stays hash-equal to q_release_delta.
-          // (v1_sat buckets that also appear in delta emit twice; the
-          // anti joins below are duplicate-key-insensitive.)
-          val bandSchema = "doc_id BIGINT, band INT, sig STRING"
-          val prevBands = storesBelow(spark, workDir, "bband_b", bid,
-            bandSchema)
-          val deltaBands =
-            prevBands.foldLeft(batchBands.toDF())(_ unionByName _)
-          val deltaCnt = deltaBands.groupBy(col("band"), col("sig"))
-            .agg(count(lit(1)).as("c_d"))
-          val v1InDelta = spark.read
-            .schema("band INT, sig STRING, c_v1 BIGINT")
-            .parquet(s"$workDir/v1_bcnt")
-            .join(broadcast(deltaCnt.select(col("band"), col("sig"))),
-              Seq("band", "sig"), "left_semi")
-          val saturated = spark.read.schema("band INT, sig STRING")
-              .parquet(s"$workDir/v1_sat")
-            .unionByName(deltaCnt
-              .join(broadcast(v1InDelta), Seq("band", "sig"), "left")
-              .where(coalesce(col("c_v1"), lit(0L)) + col("c_d") >
-                Dedup.MinhashBandCap)
-              .select(col("band"), col("sig")))
-          val satB = broadcast(saturated)
-          val batchLive =
-            batchBands.join(satB, Seq("band", "sig"), "left_anti")
-          val accBands = prevBands.foldLeft(
-              spark.read.schema(bandSchema).parquet(s"$workDir/v1_bands")
-                .unionByName(batchBands))(_ unionByName _)
-          val accLive = accBands.join(satB, Seq("band", "sig"), "left_anti")
-          // probe side = this batch's own live bands — small by
-          // construction, so it broadcasts (the minhashDedupIngest
-          // shape); the accumulated side is only scanned and probed
-          val cand = broadcast(batchLive
-              .select(col("band"), col("sig"), col("doc_id").as("doc1")))
-            .join(accLive
-              .select(col("band"), col("sig"), col("doc_id").as("doc2")),
-              Seq("band", "sig"))
-            // a v1 neighbor blocks regardless of id (it arrived with
-            // the release); a batch neighbor blocks only from below
-            .where(col("doc2") % 4 =!= 0 || col("doc2") < col("doc1"))
-            .select("doc1", "doc2").distinct()
-          val near = cand
-            .join(vec.select(col("doc_id").as("doc1"), col("v").as("vp")),
-              Seq("doc1"))
-            .join(allVec.select(col("doc_id").as("doc2"), col("v").as("vo")),
-              Seq("doc2"))
-            .where(Dedup.minhashEst(col("vp"), col("vo")) >=
-              Dedup.StreamDupThreshold)
-            .select(col("doc1").as("doc_id")).distinct()
-            .withColumn("nr_hit", lit(1))
-          val joined = local
-            .join(v1Hash, Seq("ch"), "left")
-            .join(mbKeeper, Seq("ch"))
-            .join(near, Seq("doc_id"), "left")
-          val flags = prevHash
-            .map(p => joined.join(p, Seq("ch"), "left"))
-            .getOrElse(joined.withColumn("prev_hit", lit(null).cast("int")))
-            .select(col("doc_id"), col("source"), col("h"),
-              col("fg"), col("ev"), col("bq"), col("bl"),
-              col("v1_hit").isNotNull.as("xv"),
-              (col("prev_hit").isNotNull ||
-                col("doc_id") =!= col("mb_keeper")).as("xb"),
-              col("nr_hit").isNotNull.as("nr"))
-          // per-bid idempotent outputs: the census partial (the SHARED
-          // aggregate — associative folds only) + both store appends.
-          // The four sinks are independent (distinct per-bid dirs, all
-          // reading the cached frames) and run one after another —
-          // overlapping them was the r13 regression at local[32]
-          // (3-4 concurrent 32-task jobs per tiny trigger thrash the
-          // scheduler and heap; release 12.2 → 50.9 s).
-          Prep.deltaCensus(flags).coalesce(1)
-            .write.mode("overwrite").parquet(s"$workDir/census_b$bid")
-          vec.coalesce(4).write.mode("overwrite")
-            .parquet(s"$workDir/bsig_b$bid")
-          batchBands.coalesce(4).write.mode("overwrite")
-            .parquet(s"$workDir/bband_b$bid")
-          local.select(col("ch")).distinct().coalesce(1)
-            .write.mode("overwrite").parquet(s"$workDir/bhash_b$bid")
-        } finally {
-          local.unpersist(); vec.unpersist(); batchBands.unpersist(); ()
-        }
-        ()
-      })
-    val partials = storesBelow(spark, workDir, "census_b", Long.MaxValue,
-        censusSchema)
-      .getOrElse(throw new IllegalStateException(
-        "no drained census partials — nothing was staged"))
-    partials.groupBy(col("source"))
+    val v1Hash = V1Hash.read(spark, workDir).withColumn("v1_hit", lit(1))
+    val v1Sig = V1Sig.read(spark, workDir)
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      // one staged file = one partition — spread the shingle work
+      val bdf = batch.repartition(spark.sparkContext.defaultParallelism)
+      // cached: local flags feed the keeper agg, the flag joins and
+      // the hash-store append; vec feeds bands, two estimate joins
+      // and the signature-store append
+      val local = Prep.deltaLocalFlags(bdf).cache()
+      val vec = Dedup.minhashSignatures(
+        bdf.select(col("doc_id"), col("text"))).cache()
+      // cached: feeds the live filter, the probe side, the store-side
+      // union and the per-bid bband append
+      val batchBands = Dedup.minhashBands(vec).cache()
+      try {
+        val mbKeeper = local.groupBy(col("ch"))
+          .agg(min(col("doc_id")).as("mb_keeper"))
+        val prevHash = BatchHash.below(spark, workDir, bid)
+          .map(_.distinct().withColumn("prev_hit", lit(1)))
+        val allVec = BatchSig.below(spark, workDir, bid)
+          .foldLeft(v1Sig.unionByName(vec))(_ unionByName _)
+        // arrival-time occupancy census, recomposed over the STAGED
+        // v1 index artifacts: saturated = (bucket already over cap
+        // in v1 alone — the staged v1_sat list) ∪ (v1 count + delta
+        // count over cap, where delta = prev-arrived ∪ this batch).
+        // Only the delta bands shuffle for their counts; v1's staged
+        // per-bucket counts are semi-probed by the delta's bucket
+        // keys and its band table is scanned + anti-filtered — v1 is
+        // never re-exploded or reshuffled per trigger (the round-9
+        // perf seam). The saturated set is provably identical to
+        // minhashLiveBands(minhashBands(v1 ∪ arrived ∪ batch)), so
+        // the drained census stays hash-equal to q_release_delta.
+        // (v1_sat buckets that also appear in delta emit twice; the
+        // anti joins below are duplicate-key-insensitive.)
+        val prevBands = BatchBands.below(spark, workDir, bid)
+        val deltaBands =
+          prevBands.foldLeft(batchBands.toDF())(_ unionByName _)
+        val deltaCnt = deltaBands.groupBy(col("band"), col("sig"))
+          .agg(count(lit(1)).as("c_d"))
+        val v1InDelta = V1BandCounts.read(spark, workDir)
+          .join(broadcast(deltaCnt.select(col("band"), col("sig"))),
+            Seq("band", "sig"), "left_semi")
+        val saturated = V1Saturated.read(spark, workDir)
+          .unionByName(deltaCnt
+            .join(broadcast(v1InDelta), Seq("band", "sig"), "left")
+            .where(coalesce(col("c_v1"), lit(0L)) + col("c_d") >
+              Dedup.MinhashBandCap)
+            .select(col("band"), col("sig")))
+        val satB = broadcast(saturated)
+        val batchLive =
+          batchBands.join(satB, Seq("band", "sig"), "left_anti")
+        val accBands = prevBands.foldLeft(
+            V1Bands.read(spark, workDir).unionByName(batchBands))(_ unionByName _)
+        val accLive = accBands.join(satB, Seq("band", "sig"), "left_anti")
+        // probe side = this batch's own live bands — small by
+        // construction, so it broadcasts (the minhashDedupIngest
+        // shape); the accumulated side is only scanned and probed
+        val cand = broadcast(batchLive
+            .select(col("band"), col("sig"), col("doc_id").as("doc1")))
+          .join(accLive
+            .select(col("band"), col("sig"), col("doc_id").as("doc2")),
+            Seq("band", "sig"))
+          // a v1 neighbor blocks regardless of id (it arrived with
+          // the release); a batch neighbor blocks only from below
+          .where(col("doc2") % 4 =!= 0 || col("doc2") < col("doc1"))
+          .select("doc1", "doc2").distinct()
+        val near = cand
+          .join(vec.select(col("doc_id").as("doc1"), col("v").as("vp")),
+            Seq("doc1"))
+          .join(allVec.select(col("doc_id").as("doc2"), col("v").as("vo")),
+            Seq("doc2"))
+          .where(Dedup.minhashEst(col("vp"), col("vo")) >=
+            Dedup.StreamDupThreshold)
+          .select(col("doc1").as("doc_id")).distinct()
+          .withColumn("nr_hit", lit(1))
+        val joined = local
+          .join(v1Hash, Seq("ch"), "left")
+          .join(mbKeeper, Seq("ch"))
+          .join(near, Seq("doc_id"), "left")
+        val flags = prevHash
+          .map(p => joined.join(p, Seq("ch"), "left"))
+          .getOrElse(joined.withColumn("prev_hit", lit(null).cast("int")))
+          .select(col("doc_id"), col("source"), col("h"),
+            col("fg"), col("ev"), col("bq"), col("bl"),
+            col("v1_hit").isNotNull.as("xv"),
+            (col("prev_hit").isNotNull ||
+              col("doc_id") =!= col("mb_keeper")).as("xb"),
+            col("nr_hit").isNotNull.as("nr"))
+        // per-bid idempotent outputs: the census partial (the SHARED
+        // aggregate — associative folds only) + both store appends.
+        // The four sinks are independent (distinct per-bid dirs, all
+        // reading the cached frames) and run one after another —
+        // overlapping them was the r13 regression at local[32]
+        // (3-4 concurrent 32-task jobs per tiny trigger thrash the
+        // scheduler and heap; release 12.2 → 50.9 s).
+        ReleaseCensus.write(Prep.deltaCensus(flags).coalesce(1), workDir, bid)
+        BatchSig.write(vec.coalesce(4), workDir, bid)
+        BatchBands.write(batchBands.coalesce(4), workDir, bid)
+        BatchHash.write(local.select(col("ch")).distinct().coalesce(1),
+          workDir, bid)
+      } finally {
+        local.unpersist(); vec.unpersist(); batchBands.unpersist(); ()
+      }
+    }
+    ReleaseCensus.all(spark, workDir).groupBy(col("source"))
       .agg(sum(col("n_batch")).as("n_batch"),
         sum(col("d_forget")).as("d_forget"),
         sum(col("d_eval")).as("d_eval"),
@@ -2032,88 +1968,71 @@ object Streams {
       workDir: String): DataFrame =
     withStatePartitions(spark, aqeOff = true) {
     import graft.ops.{Dedup, Multimodal}
-    def storesBelow(prefix: String, belowBid: Long,
-        schema: String): Option[DataFrame] =
-      Streams.storesBelow(spark, workDir, prefix, belowBid, schema)
-    val postSchema = "doc_id BIGINT, h BIGINT"
-    val metaSchema = "doc_id BIGINT, sz BIGINT, phash_hi BIGINT, phash_lo BIGINT"
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        import spark.implicits._
-        // a micro-batch arrives as ONE staged file = one partition —
-        // spread it so the shingle explode and the image decode use
-        // every core (the shuffle moves only the batch's own rows)
-        val bdf = batch.toDF()
-          .repartition(spark.sparkContext.defaultParallelism)
-        // cached: postings feed the doc metadata + the probe + the
-        // store append; meta (size + phash, ONE row per doc) feeds
-        // both pair predicates and its own store append
-        val post = Dedup.shingleHashes(bdf).cache()
-        val meta = post.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-          .join(Multimodal.extractPhash(Multimodal.asPngMediaOf(
-            bdf.select(col("doc_id")).as[Long])).toDF(), Seq("doc_id"))
-          .cache()
-        try {
-          val allPost = storesBelow("post_b", bid, postSchema)
-            .map(_.unionByName(post)).getOrElse(post)
-          val allMeta = storesBelow("meta_b", bid, metaSchema)
-            .map(_.unionByName(meta)).getOrElse(meta)
-          // text candidates: batch postings probe the accumulated
-          // postings (∪ batch, for within-batch pairs) on the hash.
-          // The BATCH side broadcasts — but measured, not assumed: in
-          // this harness a batch is a third of the corpus, so the
-          // posting table is only "small by construction" up to a
-          // point. post is already cached (meta forced it), so the
-          // count is a cache scan; above the cap (2M × 16-byte rows
-          // ≈ 32 MB, safely under executor broadcast budgets) the
-          // probe falls back to the ordinary shuffle hash join — same
-          // rows, one extra exchange on h.
-          val batchPost = post.select(col("doc_id").as("doc1"), col("h"))
-          val probe = if (post.count() <= CrossmodalBroadcastMaxRows)
-            broadcast(batchPost) else batchPost
-          // Both verify predicates (exact Jaccard from sizes, exact
-          // hamming from the 16-byte hashes) apply in ONE pass over
-          // the candidate pairs via the fused per-doc metadata row.
-          val inter = probe
-            .join(allPost.select(col("doc_id").as("doc2"), col("h")), Seq("h"))
-            .where(col("doc1") =!= col("doc2"))
-            .groupBy(col("doc1"), col("doc2")).agg(count(lit(1)).as("i"))
-          val pairs = inter
-            .join(broadcast(meta.select(col("doc_id").as("doc1"),
-              col("sz").as("sz1"), col("phash_hi").as("h1"),
-              col("phash_lo").as("l1"))), Seq("doc1"))
-            .join(allMeta.select(col("doc_id").as("doc2"),
-              col("sz").as("sz2"), col("phash_hi").as("h2"),
-              col("phash_lo").as("l2")), Seq("doc2"))
-            .where(col("i").cast("double") /
-              (col("sz1") + col("sz2") - col("i")) >= 0.6 &&
-              expr("bit_count(h1 ^ h2) + bit_count(l1 ^ l2)")
-                <= Multimodal.CrossmodalHammingMax)
-            .select(col("doc1"), col("doc2"))
-          // per-bid stores are batch-sized (hashes + sizes, no text) —
-          // coalesce so the writes don't pay 32 task launches each; at
-          // production scale these are bucketed table appends. The
-          // three sinks are independent (distinct dirs, cached
-          // inputs) and run one after another, like the release
-          // drain's.
-          pairs.coalesce(4).write.mode("overwrite")
-            .parquet(s"$workDir/pairs_b$bid")
-          post.coalesce(4).write.mode("overwrite")
-            .parquet(s"$workDir/post_b$bid")
-          meta.coalesce(1).write.mode("overwrite")
-            .parquet(s"$workDir/meta_b$bid")
-        } finally { post.unpersist(); meta.unpersist(); () }
-        ()
-      })
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      import spark.implicits._
+      // a micro-batch arrives as ONE staged file = one partition —
+      // spread it so the shingle explode and the image decode use
+      // every core (the shuffle moves only the batch's own rows)
+      val bdf = batch.repartition(spark.sparkContext.defaultParallelism)
+      // cached: postings feed the doc metadata + the probe + the
+      // store append; meta (size + phash, ONE row per doc) feeds
+      // both pair predicates and its own store append
+      val post = Dedup.shingleHashes(bdf).cache()
+      val meta = post.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+        .join(Multimodal.extractPhash(Multimodal.asPngMediaOf(
+          bdf.select(col("doc_id")).as[Long])).toDF(), Seq("doc_id"))
+        .cache()
+      try {
+        val allPost = CrossPostings.below(spark, workDir, bid)
+          .map(_.unionByName(post)).getOrElse(post)
+        val allMeta = CrossMeta.below(spark, workDir, bid)
+          .map(_.unionByName(meta)).getOrElse(meta)
+        // text candidates: batch postings probe the accumulated
+        // postings (∪ batch, for within-batch pairs) on the hash.
+        // The BATCH side broadcasts — but measured, not assumed: in
+        // this harness a batch is a third of the corpus, so the
+        // posting table is only "small by construction" up to a
+        // point. post is already cached (meta forced it), so the
+        // count is a cache scan; above the cap (2M × 16-byte rows
+        // ≈ 32 MB, safely under executor broadcast budgets) the
+        // probe falls back to the ordinary shuffle hash join — same
+        // rows, one extra exchange on h.
+        val batchPost = post.select(col("doc_id").as("doc1"), col("h"))
+        val probe = if (post.count() <= CrossmodalBroadcastMaxRows)
+          broadcast(batchPost) else batchPost
+        // Both verify predicates (exact Jaccard from sizes, exact
+        // hamming from the 16-byte hashes) apply in ONE pass over
+        // the candidate pairs via the fused per-doc metadata row.
+        val inter = probe
+          .join(allPost.select(col("doc_id").as("doc2"), col("h")), Seq("h"))
+          .where(col("doc1") =!= col("doc2"))
+          .groupBy(col("doc1"), col("doc2")).agg(count(lit(1)).as("i"))
+        val pairs = inter
+          .join(broadcast(meta.select(col("doc_id").as("doc1"),
+            col("sz").as("sz1"), col("phash_hi").as("h1"),
+            col("phash_lo").as("l1"))), Seq("doc1"))
+          .join(allMeta.select(col("doc_id").as("doc2"),
+            col("sz").as("sz2"), col("phash_hi").as("h2"),
+            col("phash_lo").as("l2")), Seq("doc2"))
+          .where(col("i").cast("double") /
+            (col("sz1") + col("sz2") - col("i")) >= 0.6 &&
+            expr("bit_count(h1 ^ h2) + bit_count(l1 ^ l2)")
+              <= Multimodal.CrossmodalHammingMax)
+          .select(col("doc1"), col("doc2"))
+        // per-bid stores are batch-sized (hashes + sizes, no text) —
+        // coalesce so the writes don't pay 32 task launches each; at
+        // production scale these are bucketed table appends. The
+        // three sinks are independent (distinct dirs, cached
+        // inputs) and run one after another, like the release
+        // drain's.
+        CrossPairs.write(pairs.coalesce(4), workDir, bid)
+        CrossPostings.write(post.coalesce(4), workDir, bid)
+        CrossMeta.write(meta.coalesce(1), workDir, bid)
+      } finally { post.unpersist(); meta.unpersist(); () }
+    }
     // drain: symmetric per-doc census over the full spine — the exact
     // output shape (and oracle) of the batch q_crossmodal_dedup
-    val pairs = storesBelow("pairs_b", Long.MaxValue,
-        "doc1 BIGINT, doc2 BIGINT")
+    val pairs = CrossPairs.below(spark, workDir)
       .map(_.distinct())
       .getOrElse(spark.range(0)
         .select(col("id").as("doc1"), col("id").as("doc2")))
@@ -2130,6 +2049,11 @@ object Streams {
       .withColumn("drop_doc", (col("canon") < col("doc_id")).cast("int"))
       .orderBy(col("doc_id"))
   }
+
+  private val CrossPairs = Store("pairs_b", "doc1 BIGINT, doc2 BIGINT")
+  private val CrossPostings = Store("post_b", "doc_id BIGINT, h BIGINT")
+  private val CrossMeta = Store("meta_b",
+    "doc_id BIGINT, sz BIGINT, phash_hi BIGINT, phash_lo BIGINT")
 
   /** Write `df` as ONE parquet file named `name.parquet` under `dir`
     * with the given mtime — the staging ritual every finite-drain
@@ -2387,57 +2311,6 @@ object Streams {
     srcDir.toString
   }
 
-  /** Every versioned `prefix<v>` store directory under `workDir` with
-    * v < belowBid, read under the SUPPLIED schema (a footer-sniffing
-    * read is one extra Spark JOB per store per batch, and these
-    * ingests are driver-job-bound — measured 26 jobs/micro-batch in
-    * crossmodal before the schemas were pinned). The strictly-below-
-    * bid rule is the versioned-store retry discipline: a replayed
-    * micro-batch recomputes from the same pre-batch state and
-    * overwrites its own idempotent outputs.
-    */
-  private def storesBelow(spark: SparkSession, workDir: String,
-      prefix: String, belowBid: Long, schema: String): Option[DataFrame] = {
-    val dirs = Option(new java.io.File(workDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.isDirectory)
-      .flatMap { f =>
-        scala.util.Try(f.getName.stripPrefix(prefix).toLong).toOption
-          .filter(v => f.getName.startsWith(prefix) && v < belowBid)
-          .map(_ => f.getPath)
-      }
-    if (dirs.isEmpty) None
-    else Some(spark.read.schema(schema).parquet(dirs.toSeq: _*))
-  }
-
-  /** Newest `prefix<bid>` output directory under `workDir`, optionally
-    * restricted to versions STRICTLY below `belowBid`. This is the MV/
-    * upsert chain's source of truth: deriving the previous version from
-    * DISK (not a driver-side var) is what makes the foreachBatch chain
-    * survive both failure modes — on restart-from-checkpoint the source
-    * skips committed batches and the chain resumes from their on-disk
-    * output; on a retried micro-batch the strictly-below-bid read means
-    * the retry recomputes from the same pre-batch state and just
-    * rewrites its own version (sum/count partials are NOT idempotent
-    * under re-merge, so merging from a state that already includes the
-    * batch would double-count).
-    */
-  private def latestVersioned(workDir: String, prefix: String,
-      belowBid: Option[Long] = None): Option[String] = {
-    val files = Option(new java.io.File(workDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-    files.filter(_.isDirectory)
-      .flatMap { f =>
-        val n = f.getName
-        if (n.startsWith(prefix))
-          scala.util.Try(n.stripPrefix(prefix).toLong).toOption
-            .map(v => (v, f.getPath))
-        else None
-      }
-      .filter { case (v, _) => belowBid.forall(v < _) }
-      .sortBy(_._1).lastOption.map(_._2)
-  }
-
   /** Streaming keyed upsert (CDC apply / SCD-type-1 maintenance): the
     * stored table keeps ONE row per user — the latest event by
     * (ts, event_id) — and each micro-batch merges its own per-key
@@ -2465,34 +2338,26 @@ object Streams {
     * chain and return the current table. Separated from the staging so
     * the checkpoint-resume test can drain, "crash", stage more, and
     * call this again — the chain continues from the on-disk versions
-    * ([[latestVersioned]]), not from any driver-side state.
+    * ([[Store.latestBelow]]), not from any driver-side state.
     */
   private[streaming] def upsertRun(spark: SparkSession,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    def latest(df: DataFrame): DataFrame =
-      df.groupBy(col("user_id")).agg(max(struct(col("ts"), col("event_id"),
-        col("event_type"), col("value"))).as("s"))
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val part = latest(batch.toDF())
-        val merged = latestVersioned(workDir, "tbl_v", Some(bid)) match {
-          case Some(p) => spark.read.parquet(p).unionByName(part)
-            .groupBy(col("user_id")).agg(max(col("s")).as("s"))
-          case None => part
-        }
-        merged.write.mode("overwrite").parquet(s"$workDir/tbl_v$bid")
-        ()
-      })
-    spark.read.parquet(latestVersioned(workDir, "tbl_v").getOrElse(
-      throw new IllegalStateException("no micro-batch ran — empty source?")))
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      val part = batch.groupBy(col("user_id")).agg(max(struct(col("ts"),
+        col("event_id"), col("event_type"), col("value"))).as("s"))
+      UpsertTable.write(UpsertTable.latestBelow(spark, workDir, bid)
+        .map(_.unionByName(part)
+          .groupBy(col("user_id")).agg(max(col("s")).as("s")))
+        .getOrElse(part), workDir, bid)
+    }
+    UpsertTable.latestBelow(spark, workDir).getOrElse(
+      throw new IllegalStateException("no micro-batch ran — empty source?"))
       .select(col("user_id"), col("s.ts").as("last_ts"),
         col("s.event_type").as("last_type"), col("s.value").as("last_value"))
   }
+
+  private val UpsertTable = Store("tbl_v", "user_id BIGINT, " +
+    "s STRUCT<ts: TIMESTAMP, event_id: BIGINT, event_type: STRING, value: DOUBLE>")
 
   /** Streaming as-of enrichment — the feature-store lookup pattern:
     * each event is joined to the LATEST order of its customer at or
@@ -2510,27 +2375,25 @@ object Streams {
     */
   def asofEnrichIngest(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    val outDir = s"$workDir/enriched"
     val ords = graft.Tables(spark, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"))
       // date <= timestamp coerces date → midnight; make the cast
       // explicit for the native operator's time key (as q_asof_native)
       .withColumn("o_ts", col("o_orderdate").cast("timestamp"))
     drain(eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"))
-      .writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.plans.AsOfJoin.broadcastAsOf(batch.toDF(), ords,
+        .select(col("event_id"), col("ts"), col("user_id")), workDir) {
+      (batch, _) =>
+        Enriched.append(graft.plans.AsOfJoin.broadcastAsOf(batch, ords,
             Seq("user_id"), Seq("o_custkey"), "ts", "o_ts", Seq("o_orderkey"))
           .select(col("event_id"), col("user_id"), col("ts"),
             col("o_orderkey").as("asof_orderkey"),
-            col("o_orderdate").as("asof_date"))
-          .write.mode("append").parquet(outDir)
-        ()
-      })
-    spark.read.parquet(outDir)
+            col("o_orderdate").as("asof_date")), workDir)
+    }
+    Enriched.read(spark, workDir)
   }
+
+  private val Enriched = Store("enriched", "event_id BIGINT, " +
+    "user_id BIGINT, ts TIMESTAMP, asof_orderkey BIGINT, asof_date TIMESTAMP")
 
   /** Streaming incremental materialized-view maintenance — the
     * foreachBatch deployment of q_mv_merge: the stored MV is a per-key
@@ -2559,35 +2422,31 @@ object Streams {
 
   /** Drain whatever is staged under `workDir/stream` into the MV chain
     * and return the current view — see [[upsertRun]] for why the
-    * previous version comes from disk ([[latestVersioned]]) rather
+    * previous version comes from disk ([[Store.latestBelow]]) rather
     * than driver state: it is what makes restart-from-checkpoint and
     * micro-batch retry both land on exactly-once output.
     */
   private[streaming] def mvMergeRun(spark: SparkSession,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    val srcDir = java.nio.file.Paths.get(workDir, "stream").toString
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val partial = batch.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("total"),
-            min(col("value")).as("mn"), max(col("value")).as("mx"))
-        val merged = latestVersioned(workDir, "mv_v", Some(bid)) match {
-          case Some(p) => spark.read.parquet(p).unionByName(partial)
-            .groupBy(col("event_type"))
-            .agg(sum(col("n")).as("n"), sum(col("total")).as("total"),
-              min(col("mn")).as("mn"), max(col("mx")).as("mx"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$workDir/mv_v$bid")
-        ()
-      })
-    spark.read.parquet(latestVersioned(workDir, "mv_v").getOrElse(
-      throw new IllegalStateException("no micro-batch ran — empty source?")))
+    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+      val partial = batch.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("total"),
+          min(col("value")).as("mn"), max(col("value")).as("mx"))
+      // the merge aggregate runs on the first version too, so every
+      // version carries the merged type (sum widens total's decimal)
+      MvTable.write(MvTable.latestBelow(spark, workDir, bid)
+          .fold(partial)(_.unionByName(partial))
+          .groupBy(col("event_type"))
+          .agg(sum(col("n")).as("n"), sum(col("total")).as("total"),
+            min(col("mn")).as("mn"), max(col("mx")).as("mx")),
+        workDir, bid)
+    }
+    MvTable.latestBelow(spark, workDir).getOrElse(
+      throw new IllegalStateException("no micro-batch ran — empty source?"))
   }
+
+  private val MvTable = Store("mv_v", "event_type STRING, n BIGINT, " +
+    "total DECIMAL(38,2), mn DOUBLE, mx DOUBLE")
 
   /** Streaming event-transition pairs — the stateful-streaming form of
     * q_transitions: per-user keyed state carries the LAST event type
@@ -2617,10 +2476,7 @@ object Streams {
           if (sorted.nonEmpty) state.update(sorted.last._4)
           types.sliding(2).collect { case Seq(a, b) => TransPair(a, b) }
       }
-    val q = pairs.toDF().writeStream.outputMode("append")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(pairs.toDF().writeStream.outputMode("append"), table)
   }
 
   /** Streaming top-k: complete-mode aggregation with sort+limit INSIDE
@@ -2633,10 +2489,7 @@ object Streams {
     val agg = eventsStream(spark, dir)
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("event_type")).limit(k)
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(agg.writeStream.outputMode("complete"), table)
   }
 
   /** Streaming strict-order funnel (view → click → purchase) — the
@@ -2686,10 +2539,7 @@ object Streams {
           state.update((tv, tc, tp))
           Iterator.single(FunnelProbe(user, tv.isDefined, tc.isDefined, tp.isDefined))
       }
-    val q = probes.toDF().writeStream.outputMode("append")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(probes.toDF().writeStream.outputMode("append"), table)
   }
 
   /** Streaming last-touch attribution — the stateful-streaming form of
@@ -2729,11 +2579,8 @@ object Streams {
           touch.foreach(state.update)
           out.iterator
       }
-    val q = credited.toDF("touch_type", "value", "wait_us")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+    toMemory(credited.toDF("touch_type", "value", "wait_us")
+      .writeStream.outputMode("append"), table)
   }
 
   /** Custom keyed state via mapGroupsWithState: per-user running event
@@ -2752,15 +2599,13 @@ object Streams {
           state.update(n)
           UserTotal(user, n)
       }
-    val q = perUser.toDF().writeStream.outputMode("update")
-      .format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
     // The update-mode memory sink keeps one row per user per
     // micro-batch; reduce to the FINAL update per user (n is a running
     // total, strictly increasing across a user's emissions) so the
     // result is correct however the source files batch up — same
     // robustness contract as [[userStatsTwsToTable]].
-    spark.table(table).groupBy(col("user_id"))
+    toMemory(perUser.toDF().writeStream.outputMode("update"), table)
+      .groupBy(col("user_id"))
       .agg(max(col("n")).as("n"))
   }
 
@@ -2786,12 +2631,9 @@ object Streams {
         .transformWithState(new UserStatProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Update())
-      val q = perUser.toDF().writeStream.outputMode("update")
-        .format("memory").queryName(table)
+      val sink = toMemory(perUser.toDF().writeStream.outputMode("update")
         .option("checkpointLocation",
-          graft.util.WorkDirs.temp("graft_tws"))
-        .start()
-      try q.processAllAvailable() finally q.stop()
+          graft.util.WorkDirs.temp("graft_tws")), table)
       // The update-mode memory sink accumulates one row per user per
       // micro-batch; reduce to each user's FINAL update so the result
       // doesn't depend on the source arriving as exactly one batch
@@ -2799,8 +2641,7 @@ object Streams {
       // users). n strictly increases across a user's updates — every
       // emission follows ≥1 new event — so max_by(…, n) is the last
       // one.
-      spark.table(table)
-        .groupBy(col("user_id"))
+      sink.groupBy(col("user_id"))
         .agg(max_by(struct(col("n"), col("total_cents")), col("n")).as("s"))
         .select(col("user_id"), col("s.n").as("n"),
           col("s.total_cents").as("total_cents"))

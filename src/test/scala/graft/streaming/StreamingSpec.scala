@@ -996,4 +996,42 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(spark.read.parquet(v.getPath).count() <= 10, s"${v.getName}")
     }
   }
+
+  test("typed store: a write whose column type differs from the declaration fails naming the store") {
+    val work = java.nio.file.Files.createTempDirectory("graft_store_spec").toString
+    val store = Streams.Store("typed_b", "doc_id BIGINT, h BIGINT")
+    val e = intercept[IllegalArgumentException] {
+      store.write(spark.range(3)
+        .select(col("id").as("doc_id"), col("id").cast("int").as("h")), work, 0L)
+    }
+    assert(e.getMessage.contains("typed_b"))
+    assert(!new java.io.File(s"$work/typed_b0").exists())
+    // the declared names and types write (nullability aside) and read
+    // back under the pinned schema; the listing is strictly below a bid
+    store.write(spark.range(3)
+      .select(col("id").as("doc_id"), (col("id") * 2).as("h")), work, 1L)
+    assert(store.below(spark, work, 1L).isEmpty)
+    assert(store.latestBelow(spark, work, 2L).map(_.count()).contains(3L))
+    assert(store.all(spark, work).schema == store.schema)
+  }
+
+  test("Streams drains through one helper and reads stores only through Store") {
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala"))
+    def at(s: String): Seq[Int] =
+      Iterator.iterate(src.indexOf(s))(i => src.indexOf(s, i + 1))
+        .takeWhile(_ >= 0).toSeq
+    assert(at("spark.read.schema(\"").isEmpty, "inline store schema string")
+    assert(at("_b*").isEmpty, "per-bid glob read")
+    // the checkpoint and the foreachBatch sink live in the drain helper
+    // that drainStaged wraps — no twin sets up its own drain
+    val drainAt = src.indexOf("private def drain(")
+    val drainEnd = src.indexOf("private def drainStaged(")
+    assert(drainAt >= 0 && drainEnd > drainAt)
+    for (s <- Seq("\"$workDir/ckpt\"", ".foreachBatch(")) {
+      val hits = at(s)
+      assert(hits.size == 1 && hits.forall(i => i > drainAt && i < drainEnd),
+        s"$s outside the drain helper at offsets $hits")
+    }
+  }
 }
