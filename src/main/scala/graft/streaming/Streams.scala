@@ -95,17 +95,24 @@ object Streams {
     * release and crossmodal drains, on for every other twin.
     */
   private def withStatePartitions[T](spark: SparkSession,
-      aqeOff: Boolean = false)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    val prevAqe = spark.conf.get(aqeKey)
-    spark.conf.set(key,
-      spark.conf.get(StatePartitionsConf, StatePartitions.toString))
-    spark.conf.set(aqeKey, (!aqeOff).toString)
-    try body finally {
-      spark.conf.set(key, prev)
-      spark.conf.set(aqeKey, prevAqe)
+      aqeOff: Boolean = false)(body: => T): T =
+    withConfs(spark,
+      "spark.sql.shuffle.partitions" ->
+        spark.conf.get(StatePartitionsConf, StatePartitions.toString),
+      "spark.sql.adaptive.enabled" -> (!aqeOff).toString)(body)
+
+  /** Run `body` with `confs` set on the session, then put every key
+    * back: its prior value where it had one set, unset where it had
+    * none.
+    */
+  private def withConfs[T](spark: SparkSession,
+      confs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -164,11 +171,9 @@ object Streams {
     def exists(workDir: String): Boolean =
       java.nio.file.Files.exists(java.nio.file.Paths.get(workDir, prefix))
     def write(df: DataFrame, workDir: String): Unit =
-      put(df, s"$workDir/$prefix", "overwrite")
-    def append(df: DataFrame, workDir: String): Unit =
-      put(df, s"$workDir/$prefix", "append")
+      put(df, s"$workDir/$prefix")
     def write(df: DataFrame, workDir: String, bid: Long): Unit =
-      put(df, s"$workDir/$prefix$bid", "overwrite")
+      put(df, s"$workDir/$prefix$bid")
     def read(spark: SparkSession, workDir: String): DataFrame =
       spark.read.schema(schema).parquet(s"$workDir/$prefix")
     /** Every per-bid directory with bid < `bid`, read as one frame. */
@@ -194,11 +199,11 @@ object Streams {
         .flatMap(f => f.getName.stripPrefix(prefix).toLongOption
           .filter(_ < below).map(_ -> f.getPath))
         .sortBy(_._1)
-    private def put(df: DataFrame, path: String, mode: String): Unit = {
+    private def put(df: DataFrame, path: String): Unit = {
       require(df.schema.catalogString == schema.catalogString,
         s"store $prefix: the frame's schema ${df.schema.catalogString} " +
           s"differs from the declared ${schema.catalogString}")
-      df.write.mode(mode).parquet(path)
+      df.write.mode("overwrite").parquet(path)
     }
   }
 
@@ -453,12 +458,8 @@ object Streams {
       table: String, gapMinutes: Int = 30, shards: Int = 4): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    // cached: the staging harness consumes ev ~7 times (bounds agg,
-    // one filter-write per shard, two sentinel builders) — without the
-    // cache each re-reads and re-normalizes the parquet from scratch
     val ev = graft.Tables(spark, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_id")).cache()
-    try {
+      .select(col("user_id"), col("ts"), col("event_id"))
     val bounds = ev.agg(expr("min(unix_micros(ts))"), expr("max(unix_micros(ts))")).head()
     // loud guard: on an empty events table the min/max are null (an
     // opaque NPE below) and the limit(1)-derived sentinels would be
@@ -467,20 +468,17 @@ object Streams {
     val (minUs, maxUs) = (bounds.getLong(0), bounds.getLong(1))
     val work = java.nio.file.Paths.get(graft.util.WorkDirs.temp("graft_sess_to"))
     val streamDir = work.resolve("stream")
-    val span = math.max(1L, maxUs - minUs + 1)
-    val t0 = System.currentTimeMillis() - 600000
-    for (i <- 0 until shards) {
-      val lo = minUs + i * span / shards
-      val hi = if (i == shards - 1) maxUs + 1 else minUs + (i + 1) * span / shards
-      stageFile(ev.where(expr(s"unix_micros(ts) >= $lo AND unix_micros(ts) < $hi")),
-        streamDir, s"b$i", t0 + i * 10000L)
-    }
     def sentinel(uid: Long, daysAfter: Int): DataFrame =
       ev.limit(1).select(lit(uid).as("user_id"),
         (expr(s"timestamp_micros($maxUs)") + expr(s"interval $daysAfter days")).as("ts"),
         lit(uid).as("event_id"))
-    stageFile(sentinel(-1L, 2), streamDir, "s1", t0 + shards * 10000L)
-    stageFile(sentinel(-2L, 4), streamDir, "s2", t0 + (shards + 1) * 10000L)
+    // one staging pass: the ts-range shards, then the two sentinels
+    // as shards `shards` and `shards + 1`
+    stageIntoBy(ev.unionByName(sentinel(-1L, 2)).unionByName(sentinel(-2L, 4)),
+      streamDir, shards + 2, None,
+      when(col("user_id") === -1L, shards)
+        .when(col("user_id") === -2L, shards + 1)
+        .otherwise(rangeShard(expr("unix_micros(ts)"), minUs, maxUs + 1, shards)))
     val schema = spark.read.parquet(streamDir.toString).schema
     val raw = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -538,7 +536,6 @@ object Streams {
     toMemory(sessions.toDF()
       .where(col("user_id") >= 0) // sentinels are harness plumbing
       .writeStream.outputMode("append"), table)
-    } finally ev.unpersist()
   }
 
   /** Streaming exact deduplication: first-seen row per
@@ -627,8 +624,6 @@ object Streams {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     val work = java.nio.file.Paths.get(graft.util.WorkDirs.temp("graft_loj"))
     val streamDir = work.resolve("stream")
-    def stage(df: DataFrame, name: String, mtime: Long): Unit =
-      stageFile(df, streamDir, name, mtime)
     // NTZ-tolerant row access: Tables normalizes ts to TIMESTAMP, but a
     // LocalDateTime here (future drift) should degrade to a clear value,
     // not a ClassCastException deep inside the sentinel harness.
@@ -656,10 +651,11 @@ object Streams {
           col("s.event_type").as("event_type"),
           lit(0.0).as("value"), lit(null).cast("string").as("props"))
         .select(ev.columns.map(col): _*) // keep the exact column order
-    val t0 = System.currentTimeMillis() - 60000
-    stage(ev, "b0", t0)
-    stage(sentinel(1, 2), "b1", t0 + 20000)
-    stage(sentinel(2, 4), "b2", t0 + 40000)
+    // one staging pass: the data as shard 0, then sentinel 1 (ids -2,
+    // -3) and sentinel 2 (ids -4, -5) as shards 1 and 2
+    stageIntoBy(ev.unionByName(sentinel(1, 2)).unionByName(sentinel(2, 4)),
+      streamDir, 3, None,
+      when(col("event_id") >= 0, 0).when(col("event_id") >= -3, 1).otherwise(2))
     val schema = spark.read.parquet(streamDir.toString).schema
     // ONE watermark node, assigned upstream of the branch split — the
     // metadata rides the renamed columns into both join inputs.
@@ -684,15 +680,10 @@ object Streams {
     // no-data micro-batch would only re-apply sentinel-2's watermark
     // to evict the sentinels themselves (filtered out below) — skip
     // that fourth stateful batch for the finite drain.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = spark.conf.getOption(ndKey)
-    spark.conf.set(ndKey, "false")
-    try toMemory(joined.select(col("view_id"), col("buy_id"))
-      .where(col("view_id") >= 0) // sentinels are harness plumbing
-      .writeStream.outputMode("append"), table)
-    finally ndPrev match {
-      case Some(v) => spark.conf.set(ndKey, v)
-      case None => spark.conf.unset(ndKey)
+    withConfs(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      toMemory(joined.select(col("view_id"), col("buy_id"))
+        .where(col("view_id") >= 0) // sentinels are harness plumbing
+        .writeStream.outputMode("append"), table)
     }
   }
 
@@ -707,33 +698,31 @@ object Streams {
     * their own history; `maxFilesPerTrigger=1` makes every input file
     * its own micro-batch so cross-batch state is genuinely exercised.
     * At production scale the index is a bucketed table (or Delta
-    * MERGE) so the anti-join shuffles only the new batch; batch-id-
-    * derived file names would make the appends idempotent under
-    * micro-batch retry — noted, not needed for this harness.
-    * Returns the surviving corpus.
+    * MERGE) so the anti-join shuffles only the new batch. Both sinks
+    * are per-bid [[Store]]s, so a retried micro-batch overwrites its
+    * own output instead of appending it twice. Returns the surviving
+    * corpus.
     */
   def incrementalDedupIngest(spark: SparkSession, srcDir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
-    val keptDir = s"$workDir/kept"
-    drainStaged(spark, srcDir, workDir) { (batch, _) =>
+    // the kept rows are the staged source's own rows
+    val kept = Store("kept", spark.read.parquet(srcDir).schema)
+    drainStaged(spark, srcDir, workDir) { (batch, bid) =>
       val hashed = batch.withColumn("h", md5(col("text")))
       val firsts = hashed.groupBy(col("h"))
         .agg(min(col("doc_id")).as("doc_id"))
         .join(hashed, Seq("h", "doc_id"))
-      val fresh =
-        if (HashIndex.exists(workDir))
-          firsts.join(HashIndex.read(spark, workDir), Seq("h"), "left_anti")
-        else firsts
-      // cache: consumed by both appends; without it the anti-join
+      val fresh = HashIndex.below(spark, workDir, bid)
+        .map(firsts.join(_, Seq("h"), "left_anti")).getOrElse(firsts)
+      // cache: consumed by both writes; without it the anti-join
       // against the (growing) index would run twice per batch
       fresh.cache()
       try {
-        fresh.select(batch.columns.map(col): _*)
-          .write.mode("append").parquet(keptDir)
-        HashIndex.append(fresh.select(col("h")), workDir)
+        kept.write(fresh.select(batch.columns.map(col): _*), workDir, bid)
+        HashIndex.write(fresh.select(col("h")), workDir, bid)
       } finally { fresh.unpersist(); () }
     }
-    spark.read.parquet(keptDir)
+    kept.all(spark, workDir)
   }
 
   private val HashIndex = Store("hash_index", "h STRING")
@@ -748,8 +737,9 @@ object Streams {
     * signature store ∪ the batch itself (candidates only from shared
     * LSH buckets — never the pair space), drops docs whose estimate
     * vs any SMALLER id reaches [[graft.ops.Dedup.StreamDupThreshold]],
-    * appends survivors to the kept sink and ALL signatures to the
-    * store. The predicate "∃ smaller-id doc with est ≥ θ" is
+    * writes survivors to the kept sink and ALL signatures to the
+    * store, each as its own per-bid [[Store]] directory (a retried
+    * batch overwrites its own output). The predicate "∃ smaller-id doc with est ≥ θ" is
     * order-free, so the drained kept set equals the batch form exactly
     * (q_stream_minhash's oracle replays it in SQL). State is the
     * signature store: K longs per doc (~0.3 KB) regardless of corpus
@@ -766,21 +756,12 @@ object Streams {
       .select(col("doc_id"), col("text"))
     val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
     require(!bounds.isNullAt(0), "documents table is empty — nothing to ingest")
-    val (lo0, hi0) = (bounds.getLong(0), bounds.getLong(1) + 1)
     val srcDir = java.nio.file.Paths.get(workDir, "stream")
-    val span = math.max(1L, hi0 - lo0)
-    // the EXACT range boundaries of the old per-shard loop, expressed
-    // as one when-chain so staging is a single source pass (the
-    // stageIntoBy discipline) instead of `shards` full scans — the
-    // boundaries use the same integer division, so batch composition
-    // is bit-identical to the historical staging
-    val shardOf = (1 until shards).foldLeft(lit(0)) { (acc, i) =>
-      when(col("doc_id") >= lo0 + i * span / shards, lit(i)).otherwise(acc)
-    }
-    stageIntoBy(docs, srcDir, shards, None, shardOf)
-    drainStaged(spark, srcDir.toString, workDir) { (batch, _) =>
+    stageIntoBy(docs, srcDir, shards, None, rangeShard(col("doc_id"),
+      bounds.getLong(0), bounds.getLong(1) + 1, shards))
+    drainStaged(spark, srcDir.toString, workDir) { (batch, bid) =>
       // cache: consumed by bands, the estimate join, and the store
-      // append — without it the shingle+hash pipeline runs per use
+      // write — without it the shingle+hash pipeline runs per use
       val vec = Dedup.minhashSignatures(batch).cache()
       // the batch's band table: the probe side AND this trigger's
       // band-store append (r14 — the release twin's staged-index
@@ -789,14 +770,10 @@ object Streams {
       // store is no longer re-band-exploded every trigger)
       val vecBands = Dedup.minhashBands(vec).cache()
       try {
-        val allVec =
-          if (SigStore.exists(workDir))
-            SigStore.read(spark, workDir).unionByName(vec)
-          else vec
-        val allBands =
-          if (BandStore.exists(workDir))
-            BandStore.read(spark, workDir).unionByName(vecBands)
-          else vecBands
+        val allVec = SigStore.below(spark, workDir, bid)
+          .map(_.unionByName(vec)).getOrElse(vec)
+        val allBands = BandStore.below(spark, workDir, bid)
+          .map(_.unionByName(vecBands)).getOrElse(vecBands)
         // the BATCH side broadcasts (it is the small one by
         // construction); the accumulated store is only scanned and
         // probed, never shuffled — at production scale the store is
@@ -828,19 +805,19 @@ object Streams {
           .where(Dedup.minhashEst(col("v1"), col("v2")) >=
             Dedup.StreamDupThreshold)
           .select(col("doc1").as("doc_id")).distinct()
-        MinhashKept.append(batch.join(dropped, Seq("doc_id"), "left_anti")
-          .select(col("doc_id")), workDir)
+        MinhashKept.write(batch.join(dropped, Seq("doc_id"), "left_anti")
+          .select(col("doc_id")), workDir, bid)
         // ALL signatures join the store (kept or dropped): the
         // order-free predicate compares against every smaller id,
         // and a dropped doc can still be the nearest neighbor that
-        // kills a later duplicate. Both store appends run AFTER the
+        // kills a later duplicate. Both store writes run AFTER the
         // kept write (which reads the stores) — the documented
         // read-write hazard that keeps these sinks sequential.
-        SigStore.append(vec, workDir)
-        BandStore.append(vecBands, workDir)
+        SigStore.write(vec, workDir, bid)
+        BandStore.write(vecBands, workDir, bid)
       } finally { vec.unpersist(); vecBands.unpersist(); () }
     }
-    MinhashKept.read(spark, workDir)
+    MinhashKept.all(spark, workDir)
   }
 
   private val SigStore = Store("sig_store", SigDdl)
@@ -876,7 +853,7 @@ object Streams {
   /** Stage the events table as `shards` ts-range shards (shard 0 = the
     * earliest third — the reference period). `upTo` stages only a
     * prefix; shards already on disk are kept (deterministic staging,
-    * the [[stageShards]] crash-resume convention), so the restart test
+    * the [[stageIntoBy]] crash-resume convention), so the restart test
     * can stage 2, drain, "crash", stage the third, and resume.
     */
   private[streaming] def driftStage(spark: SparkSession, dir: String,
@@ -885,17 +862,9 @@ object Streams {
       .select(expr("unix_micros(ts)").as("us"), col("value"))
     val bounds = ev.agg(min(col("us")).as("lo"), max(col("us")).as("hi")).head()
     require(!bounds.isNullAt(0), "events table is empty — nothing to monitor")
-    val (lo, hi1) = (bounds.getLong(0), bounds.getLong(1) + 1)
-    val span = math.max(1L, hi1 - lo)
-    val srcDir = java.nio.file.Paths.get(workDir, "stream")
-    val t0 = System.currentTimeMillis() - 600000
-    for (i <- 0 until math.min(shards, upTo.getOrElse(shards))
-         if !java.nio.file.Files.exists(srcDir.resolve(s"e$i.parquet"))) {
-      val a = lo + i * span / shards
-      val z = if (i == shards - 1) hi1 else lo + (i + 1) * span / shards
-      stageFile(ev.where(col("us") >= a && col("us") < z), srcDir,
-        s"e$i", t0 + i * 10000L)
-    }
+    stageIntoBy(ev, java.nio.file.Paths.get(workDir, "stream"), shards, upTo,
+      rangeShard(col("us"), bounds.getLong(0), bounds.getLong(1) + 1, shards))
+    ()
   }
 
   /** Drain whatever drift shards are staged under `workDir/stream` —
@@ -1776,17 +1745,13 @@ object Streams {
       docs: DataFrame, shards: Int, upTo: Option[Int]): Unit = {
     // both backward-looking rules (in-batch keeper, smaller-id near
     // neighbor) need arrival order == id order, so the batch stages as
-    // range shards — the minhashDedupIngest boundary chain
+    // range shards ([[rangeShard]])
     val batch = docs.where(col("doc_id") % 4 === 0)
     val bounds = batch.agg(min(col("doc_id")), max(col("doc_id"))).head()
     require(!bounds.isNullAt(0), "empty crawl batch — nothing to admit")
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
-    val span = math.max(1L, hi - lo)
-    val shardOf = (1 until shards).foldLeft(lit(0)) { (acc, i) =>
-      when(col("doc_id") >= lo + i * span / shards, lit(i)).otherwise(acc)
-    }
     stageIntoBy(batch, java.nio.file.Paths.get(workDir, "stream"), shards,
-      upTo, shardOf)
+      upTo, rangeShard(col("doc_id"), bounds.getLong(0), bounds.getLong(1) + 1,
+        shards))
     ()
   }
 
@@ -2055,28 +2020,7 @@ object Streams {
   private val CrossMeta = Store("meta_b",
     "doc_id BIGINT, sz BIGINT, phash_hi BIGINT, phash_lo BIGINT")
 
-  /** Write `df` as ONE parquet file named `name.parquet` under `dir`
-    * with the given mtime — the staging ritual every finite-drain
-    * harness here shares (the file source orders batches by mtime).
-    */
-  private[streaming] def stageFile(df: DataFrame, dir: java.nio.file.Path,
-      name: String, mtime: Long = System.currentTimeMillis()): Unit = {
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = dir.resolveSibling(s"${dir.getFileName}_${name}_tmp").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dst = dir.resolve(s"$name.parquet")
-    java.nio.file.Files.move(part.toPath, dst)
-    // every finite-drain harness orders micro-batches by mtime — a
-    // silently failed write (e.g. a filesystem without mtime support)
-    // would reorder batches and break the event-time-ordered-batches
-    // precondition with no signal, so fail loudly instead
-    require(dst.toFile.setLastModified(mtime),
-      s"could not set mtime on $dst — batch ordering would be undefined")
-  }
-
-  /** Resolved staging roots, keyed by the conf value (and route). The
+  /** Resolved staging roots, keyed by the conf value. The
     * staged-shard cache itself is [[graft.ops.Scratch.once]] under
     * these roots: 8 of the 10 slowest bench entries were foreachBatch
     * twins whose wall was dominated by staging + drain machinery, and
@@ -2097,11 +2041,9 @@ object Streams {
     * a shared POSIX mount (e.g. NFS) visible to driver and executors.
     * A URI-schemed root (object store) is refused loudly at
     * resolution, and a path root is PROBED for all three primitives
-    * before first use instead of failing undefined mid-stream
-    * (GraftSink's manifest-gated segment protocol is the
-    * object-store-safe pattern — for committed tables, not for this
-    * replay harness). Unset, a driver-local temp dir deleted on JVM
-    * exit — correct at local[*].
+    * before first use instead of failing undefined mid-stream.
+    * Unset, a driver-local temp dir deleted on JVM exit — correct at
+    * local[*].
     */
   val StagingDirConf = "spark.graft.stagingDir"
 
@@ -2125,54 +2067,6 @@ object Streams {
           d
       }
     })
-
-  /** Resolve [[StagingDirConf]] for the MANIFEST staging route
-    * ([[stageShardsManifestCached]]): no symlink, no settable-mtime,
-    * no per-shard-rename requirement — so no POSIX probe. Only plain
-    * file IO plus GraftSink's single manifest-publish rename are
-    * needed; a URI-schemed root is still refused because this build's
-    * IO is java.nio (a production deployment swaps the IO for the
-    * object-store client and the publish rename for a conditional
-    * put, keeping the identical manifest protocol — see
-    * [[graft.sources.GraftStageSource]]).
-    */
-  private[streaming] def manifestStageRoot(spark: SparkSession): java.nio.file.Path =
-    stageRoots.getOrElseUpdate(
-      "manifest|" + spark.conf.get(StagingDirConf, ""), {
-        spark.conf.get(StagingDirConf, "") match {
-          case "" => stageRoot(spark) // driver-local temp, probe is moot
-          case configured =>
-            require(!configured.contains("://") ||
-                configured.startsWith("file://"),
-              s"$StagingDirConf=$configured: this build stages through " +
-                "java.nio — an object-store root needs the IO swapped " +
-                "for its client (the manifest protocol itself is " +
-                "object-store-safe; see GraftStageSource)")
-            val d =
-              if (configured.startsWith("file://"))
-                java.nio.file.Paths.get(java.net.URI.create(configured))
-              else java.nio.file.Paths.get(configured)
-            java.nio.file.Files.createDirectories(d)
-            d
-        }
-      })
-
-  /** The staged-shard cache, MANIFEST route: the same build-once
-    * [[graft.ops.Scratch.once]] as [[stageShards]]' cached branch, but
-    * the shards are GraftStage shard files gated by a manifest and the
-    * caller reads the returned directory with
-    * `format("graftstage")` — order from the manifest (not mtimes),
-    * visibility from the manifest (not rename atomicity), sharing by
-    * PATH (no symlink anywhere). This is the staging shape whose
-    * semantics survive an object store; the symlink fast path above
-    * stays for POSIX roots.
-    */
-  private[streaming] def stageShardsManifestCached(df: DataFrame,
-      key: String, n: Int, keyCol: String = "event_id"): String =
-    graft.ops.Scratch.once(df.sparkSession,
-      manifestStageRoot(df.sparkSession).toString,
-      s"manifest|$key|$n|$keyCol|${df.schema.catalogString}")(
-      graft.sources.GraftStage.stage(df, _, n, keyCol))
 
   /** Fail loudly if `d` lacks any of the three POSIX primitives the
     * staging protocol builds on (see [[StagingDirConf]]). Runs once
@@ -2214,11 +2108,12 @@ object Streams {
   }
 
   /** Stage a frame as `n` deterministic single-file shards (split by
-    * `event_id % n`) under `workDir/stream`, so a file-source stream
-    * with `maxFilesPerTrigger=1` replays it as n genuine micro-batches.
-    * `upTo` stages only the first `upTo` shards (same shard boundaries)
-    * — the checkpoint-resume test stages a prefix, drains, then stages
-    * the rest and resumes from the same checkpoint.
+    * `keyCol % n`, [[stageIntoBy]]) under `workDir/stream`, so a
+    * file-source stream with `maxFilesPerTrigger=1` replays it as n
+    * genuine micro-batches. `upTo` stages only the first `upTo` shards
+    * (same shard boundaries) — the checkpoint-resume test stages a
+    * prefix, drains, then stages the rest and resumes from the same
+    * checkpoint.
     *
     * `cacheKey` (production twins only) routes a FULL stage through
     * [[graft.ops.Scratch.once]]: the shards are built once per
@@ -2254,11 +2149,15 @@ object Streams {
       upTo: Option[Int], keyCol: String): String =
     stageIntoBy(df, srcDir, n, upTo, col(keyCol) % n)
 
-  /** One-pass staging under an arbitrary shard-assignment expression
-    * (must produce 0..n-1) — the mod form above is the common case;
-    * [[minhashDedupIngest]] shards by exact doc_id RANGE and passes
-    * its boundary chain here instead of paying one full scan + one
-    * single-task write per shard.
+  /** The one staging pass every replayed stream goes through: `df`
+    * split by `shardOf` (must produce 0..n-1) into single-file shards
+    * `srcDir/shard_<i>.parquet` whose mtimes rise with i, so a file
+    * source with `maxFilesPerTrigger=1` replays shard i as micro-batch
+    * i. The mod form above is the common case; the ordered replays
+    * pass a [[rangeShard]] id, and the sentinel harnesses
+    * ([[sessionizeTimeoutToTable]], [[leftOuterIntervalJoinToTable]])
+    * route their sentinel rows to the ids after the data shards.
+    * `upTo` stages only the shards below it.
     */
   private def stageIntoBy(df: DataFrame, srcDir: java.nio.file.Path, n: Int,
       upTo: Option[Int], shardOf: Column): String = {
@@ -2290,12 +2189,12 @@ object Streams {
           s"shard $i staged as ${parts.length} files — mtime ordering " +
             "needs exactly one")
         val part = parts.headOption.getOrElse {
-          // no rows landed in this residue class (small/filtered
-          // corpus) — partitionBy never created the directory, so
-          // stage an empty single-file shard instead (the old
-          // per-shard stageFile behavior): the stream must still see
-          // exactly n micro-batches. partitionBy strips __shard from
-          // the data files, so the empty file's schema is df's own.
+          // no rows landed in this shard (small/filtered corpus, or a
+          // range narrower than the shard count) — partitionBy never
+          // created the directory, so stage an empty single-file shard
+          // instead: the stream must still see exactly n micro-batches.
+          // partitionBy strips __shard from the data files, so the
+          // empty file's schema is df's own.
           val emptyDir = s"$tmp/__empty_$i"
           df.limit(0).coalesce(1).write.mode("overwrite").parquet(emptyDir)
           new java.io.File(emptyDir).listFiles()
@@ -2303,12 +2202,27 @@ object Streams {
         }
         val dst = srcDir.resolve(s"shard_$i.parquet")
         java.nio.file.Files.move(part.toPath, dst)
-        // the file source orders micro-batches by mtime (see stageFile)
+        // the file source orders micro-batches by mtime — a silently
+        // failed set (a filesystem without mtime support) would reorder
+        // batches with no signal, so fail loudly instead
         require(dst.toFile.setLastModified(t0 + i * 10000L),
           s"could not set mtime on $dst — batch ordering would be undefined")
       }
     }
     srcDir.toString
+  }
+
+  /** Range-shard id of `c` over [lo, hi): shard i starts at
+    * lo + i·span/shards, span = max(1, hi − lo), in Long integer
+    * division evaluated on the driver — so an event-time- or
+    * id-ordered replay arrives in order, one range per micro-batch.
+    * For [[stageIntoBy]].
+    */
+  private def rangeShard(c: Column, lo: Long, hi: Long, shards: Int): Column = {
+    val span = math.max(1L, hi - lo)
+    (1 until shards).foldLeft(lit(0)) { (acc, i) =>
+      when(c >= lo + i * span / shards, lit(i)).otherwise(acc)
+    }
   }
 
   /** Streaming keyed upsert (CDC apply / SCD-type-1 maintenance): the
@@ -2370,8 +2284,8 @@ object Streams {
     * is arrival-order invariant and equals the batch as-of join
     * exactly — q_stream_asof shares q_asof_join's oracle. At 100 TB/
     * day the same plan runs per trigger with the dim refreshed from a
-    * warehouse snapshot between batches; batch-id-derived file names
-    * would make the appends idempotent under micro-batch retry.
+    * warehouse snapshot between batches; the per-bid store keeps the
+    * writes idempotent under micro-batch retry.
     */
   def asofEnrichIngest(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
@@ -2382,14 +2296,14 @@ object Streams {
       .withColumn("o_ts", col("o_orderdate").cast("timestamp"))
     drain(eventsStream(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id")), workDir) {
-      (batch, _) =>
-        Enriched.append(graft.plans.AsOfJoin.broadcastAsOf(batch, ords,
+      (batch, bid) =>
+        Enriched.write(graft.plans.AsOfJoin.broadcastAsOf(batch, ords,
             Seq("user_id"), Seq("o_custkey"), "ts", "o_ts", Seq("o_orderkey"))
           .select(col("event_id"), col("user_id"), col("ts"),
             col("o_orderkey").as("asof_orderkey"),
-            col("o_orderdate").as("asof_date")), workDir)
+            col("o_orderdate").as("asof_date")), workDir, bid)
     }
-    Enriched.read(spark, workDir)
+    Enriched.all(spark, workDir)
   }
 
   private val Enriched = Store("enriched", "event_id BIGINT, " +
@@ -2618,11 +2532,8 @@ object Streams {
   def userStatsTwsToTable(spark: SparkSession, dir: String, table: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val perUser = eventsStream(spark, dir, maxFilesPerTrigger)
         .select(col("user_id").cast("long"),
           (dec(col("value")) * 100).cast("long").as("cents"))
@@ -2645,9 +2556,6 @@ object Streams {
         .agg(max_by(struct(col("n"), col("total_cents")), col("n")).as("s"))
         .select(col("user_id"), col("s.n").as("n"),
           col("s.total_cents").as("total_cents"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -79,45 +79,6 @@ object ClusterSmoke {
         .releaseIngest(spark, sfDir, work).collect()
       require(census.nonEmpty, "empty census")
     }
-    // 4. the manifest-gated micro-batch source (round-12): shard
-    // files are written IN the executors (one java.io stream per
-    // shard per task), the manifest publish runs on the driver, and
-    // the checkpointed drain schedules real executor tasks per
-    // trigger — ordered replay + prefix-gated visibility with
-    // separate JVMs and a shared root.
-    seam("graftstage_manifest") {
-      val stagedRoot = graft.util.WorkDirs.temp("graft-cluster-gstage")
-      val ev = graft.Tables(spark, sfDir, "events")
-        .select(col("event_id"), col("user_id"), col("value"))
-        .where(col("event_id") <= 300)
-      val n = ev.count()
-      val staged = graft.sources.GraftStage.stage(ev, s"$stagedRoot/m0", 4,
-        "event_id")
-      require(spark.read.format("graftstage").load(staged).count() == n,
-        "graftstage batch parity through the manifest")
-      // prefix publish gates exactly what it lists; the later full
-      // publish at gen+2 restores everything
-      val m = graft.sources.GraftSink.readManifest(staged).get
-      graft.sources.GraftStage.publish(staged, m.ddl, m.files.take(2),
-        m.gen + 1)
-      require(spark.read.format("graftstage").load(staged).count() < n,
-        "unmanifested shard files leaked into executor reads")
-      graft.sources.GraftStage.publish(staged, m.ddl, m.files, m.gen + 2)
-      val work = graft.util.WorkDirs.temp("graft-cluster-gstage-wk")
-      val bids = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      val q = spark.readStream.format("graftstage").load(staged)
-        .writeStream.option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-          bids.add((bid, b.count())); ()
-        }.start()
-      q.awaitTermination()
-      import scala.jdk.CollectionConverters._
-      val drained = bids.asScala.toSeq.sortBy(_._1)
-      require(drained.map(_._1) == (0L until 4L),
-        s"one shard per trigger in manifest order, got: $drained")
-      require(drained.map(_._2).sum == n, "drained row total")
-    }
     seam("graftsink_commit") {
       val out = graft.util.WorkDirs.temp("graft-cluster-gsink")
       val src = graft.Tables(spark, sfDir, "orders")

@@ -31,8 +31,19 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     */
   private lazy val aqeOnFrames: Map[String, org.apache.spark.sql.DataFrame] = {
     val dir = "/root/testdata/sf0.001"
-    SparkEntry.queries.map { case (name, fn) => name -> fn(spark, dir) }
+    SparkEntry.queries.map { case (name, fn) => name -> named(name)(fn(spark, dir)) }
   }
+
+  /** `f`, with any exception rethrown naming query `name` (the original
+    * kept as the cause): one throwing builder fails every test that
+    * reads these shared maps, and a streaming twin's trace alone names
+    * only its checkpoint path.
+    */
+  private def named[T](name: String)(f: => T): T =
+    try f catch {
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(s"query $name: ${e.getMessage}", e)
+    }
 
   test("every registered query plans and returns a non-empty schema (sf0.001)") {
     aqeOnFrames.foreach { case (name, df) =>
@@ -55,7 +66,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     try {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       SparkEntry.queries.map { case (name, fn) =>
-        name -> fn(spark, dir).queryExecution.executedPlan
+        name -> named(name)(fn(spark, dir).queryExecution.executedPlan)
       }
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }

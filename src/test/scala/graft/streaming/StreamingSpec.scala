@@ -9,6 +9,26 @@ import graft.analytics.Temporal
 class StreamingSpec extends AnyFunSuite with SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
+  /** Write `df` as ONE parquet file named `name.parquet` under `dir`
+    * with the given mtime (the file source orders batches by mtime).
+    */
+  private def stageFile(df: org.apache.spark.sql.DataFrame, dir: java.nio.file.Path,
+      name: String, mtime: Long = System.currentTimeMillis()): Unit = {
+    java.nio.file.Files.createDirectories(dir)
+    val tmp = dir.resolveSibling(s"${dir.getFileName}_${name}_tmp").toString
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val dst = dir.resolve(s"$name.parquet")
+    java.nio.file.Files.move(part.toPath, dst)
+    // every finite-drain harness orders micro-batches by mtime — a
+    // silently failed write (e.g. a filesystem without mtime support)
+    // would reorder batches and break the event-time-ordered-batches
+    // precondition with no signal, so fail loudly instead
+    require(dst.toFile.setLastModified(mtime),
+      s"could not set mtime on $dst — batch ordering would be undefined")
+  }
+
   test("streaming tumbling windows == batch q_stream_tumbling") {
     val stream = Streams.tumblingToTable(spark, dir, "stream_tumbling")
       .orderBy("win_start", "event_type").collect().toSeq
@@ -167,8 +187,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // final-row reduction must still equal the batch groupBy
     val work = java.nio.file.Files.createTempDirectory("graft_multibatch")
     val ev = graft.Tables(spark, dir, "events")
-    Streams.stageFile(ev.where(col("event_id") % 2 === 0), work, "events")
-    Streams.stageFile(ev.where(col("event_id") % 2 === 1), work, "events_b")
+    stageFile(ev.where(col("event_id") % 2 === 0), work, "events")
+    stageFile(ev.where(col("event_id") % 2 === 1), work, "events_b")
     val stream = Streams.userTotalsToTable(
         spark, work.toString, "stream_users_mb", maxFilesPerTrigger = Some(1))
       .orderBy("user_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -183,8 +203,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // as two micro-batches instead of one
     val work = java.nio.file.Files.createTempDirectory("graft_multibatch_tws")
     val ev = graft.Tables(spark, dir, "events")
-    Streams.stageFile(ev.where(col("event_id") % 2 === 0), work, "events")
-    Streams.stageFile(ev.where(col("event_id") % 2 === 1), work, "events_b")
+    stageFile(ev.where(col("event_id") % 2 === 0), work, "events")
+    stageFile(ev.where(col("event_id") % 2 === 1), work, "events_b")
     val stream = Streams.userStatsTwsToTable(
         spark, work.toString, "tws_users_mb", maxFilesPerTrigger = Some(1))
       .orderBy("user_id").collect()
@@ -314,6 +334,25 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(kept == (all -- dropped) && kept.nonEmpty && dropped.nonEmpty)
   }
 
+  test("foreachBatch minhash dedup: a replayed last batch rewrites its own stores, kept ids unchanged") {
+    val work = java.nio.file.Files.createTempDirectory("graft_smh_retry").toString
+    val first = Streams.minhashDedupIngest(spark, dir, work)
+      .collect().map(_.getLong(0)).toSeq
+    // a crash after the last batch's sink writes but before its commit:
+    // the restart replays that batch under the same bid
+    val commits = new java.io.File(s"$work/ckpt/commits")
+    val last = commits.listFiles().flatMap(_.getName.toLongOption).max
+    assert(last == 2L)
+    new java.io.File(commits, last.toString).delete()
+    new java.io.File(commits, s".$last.crc").delete()
+    val again = Streams.minhashDedupIngest(spark, dir, work)
+      .collect().map(_.getLong(0)).toSeq
+    assert(new java.io.File(commits, last.toString).exists(),
+      "the restart did not replay the uncommitted batch")
+    assert(again.distinct.size == again.size, "the replayed batch wrote its kept ids twice")
+    assert(first.nonEmpty && again.sorted == first.sorted)
+  }
+
   test("minhash stop-band saturating mid-stream: drained kept-set ⊆ batch kept-set") {
     // exercises the documented divergence direction of the
     // MinhashBandCap stop-band (Streams.minhashDedupIngest): 70
@@ -391,7 +430,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // within-batch election is min doc_id: doc 2 can never survive
     assert(!kept.exists(_._1 == 2L))
     // the index holds one hash per distinct text
-    assert(spark.read.parquet(s"$root/work/hash_index").distinct().count() == 3)
+    assert(spark.read.parquet(s"$root/work/hash_index[0-9]*").distinct().count() == 3)
   }
 
   test("staged-shard cache: twins sharing a source symlink one staged directory") {
@@ -783,77 +822,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset(Streams.StagingDirConf)
   }
 
-  test("graftstage manifest staging: ordered replay, prefix-gated visibility, resume — no mtime/symlink") {
-    // the OBJECT-STORE-SAFE staging route: order from the manifest
-    // (never mtimes), visibility from the manifest (never per-file
-    // rename atomicity), sharing by path (never symlinks). Files for
-    // 6 shards are written UP FRONT; only the manifested prefix is
-    // visible; publishing the full manifest at gen 2 appends batches
-    // to a checkpointed stream.
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_manifest_stage").toString
-    spark.conf.set(Streams.StagingDirConf, root)
-    try {
-      val ev = graft.Tables(spark, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("event_type"))
-        .limit(300)
-      // the cached route: same key twice → same staged dir, no symlink
-      val staged = Streams.stageShardsManifestCached(ev, "events-6", 6)
-      assert(Streams.stageShardsManifestCached(ev, "events-6", 6) == staged)
-      assert(staged.startsWith(root), s"$staged not under $root")
-      val anyLink = new java.io.File(staged).listFiles()
-        .exists(f => java.nio.file.Files.isSymbolicLink(f.toPath))
-      assert(!anyLink, "manifest staging must not create symlinks")
-      // batch read parity through the manifest
-      val back = spark.read.format("graftstage").load(staged)
-      assert(back.count() == 300)
-      assert(back.agg(sum(col("event_id"))).head().getLong(0) ==
-        ev.agg(sum(col("event_id"))).head().getLong(0))
-      // prefix-gated visibility: re-publish only the first 4 shards
-      val m = graft.sources.GraftSink.readManifest(staged).get
-      graft.sources.GraftStage.publish(staged, m.ddl, m.files.take(4),
-        m.gen + 1)
-      val prefixRows = spark.read.format("graftstage").load(staged).count()
-      assert(prefixRows < 300, "unmanifested shard files leaked into reads")
-      // drain the 4-shard prefix: one shard per micro-batch, in
-      // manifest order (shard i holds event_id % 6 == i)
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_manifest_wk").toString
-      val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
-      def drain(): Unit = {
-        val q = spark.readStream.format("graftstage").load(staged)
-          .writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val mods = b.select((col("event_id") % 6).as("m"))
-              .distinct().collect().map(_.getLong(0)).toSet
-            seen.synchronized { seen += ((bid, mods)); () }
-            ()
-          }.start()
-        q.awaitTermination()
-      }
-      drain()
-      val run1 = seen.sortBy(_._1).toSeq
-      assert(run1.map(_._1) == (0L until 4L), run1.toString)
-      run1.zipWithIndex.foreach { case ((_, mods), i) =>
-        assert(mods.subsetOf(Set(i.toLong)), s"batch $i saw shards $mods")
-      }
-      // publish the FULL manifest at the next generation ("two more
-      // shards arrived") and resume from the same checkpoint: only
-      // the newly visible shards replay
-      seen.clear()
-      graft.sources.GraftStage.publish(staged, m.ddl, m.files, m.gen + 2)
-      drain()
-      val run2 = seen.sortBy(_._1).toSeq
-      assert(run2.map(_._1) == (4L until 6L), run2.toString)
-      run2.zipWithIndex.foreach { case ((_, mods), i) =>
-        assert(mods.subsetOf(Set(i + 4L)), s"batch ${i + 4} saw $mods")
-      }
-    } finally spark.conf.unset(Streams.StagingDirConf)
-  }
-
   test("release store ships the governance sketch: v1_theta merged with the batch half == full recompute") {
     // KMV sketches are mergeable state: min-k of a union is the min-k
     // of the per-part min-k sets. So the release store's v1_theta
@@ -1023,6 +991,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .takeWhile(_ >= 0).toSeq
     assert(at("spark.read.schema(\"").isEmpty, "inline store schema string")
     assert(at("_b*").isEmpty, "per-bid glob read")
+    // one staging route: every replayed stream stages through
+    // stageIntoBy, range shards through the one rangeShard helper
+    assert(at("stageFile(").isEmpty, "per-shard single-file staging")
+    assert(at("graftstage").isEmpty && at("ManifestCached").isEmpty,
+      "manifest staging route")
+    assert(at("* span / shards").size == 1,
+      "range-shard boundary arithmetic outside rangeShard")
     // the checkpoint and the foreachBatch sink live in the drain helper
     // that drainStaged wraps — no twin sets up its own drain
     val drainAt = src.indexOf("private def drain(")
