@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSession
   * (native `cosine_sim`/`h60` SQL functions, the top-1-per-group
   * optimizer rule, the native as-of join strategy) plus the
   * scale defaults every operator's plan shape assumes (AQE on, UTC
-  * session time, explicit shuffle parallelism).
+  * session time, explicit shuffle parallelism, parquet timestamps as
+  * TIMESTAMP, and the JVM's case mapping for `initcap`/`lower`/`upper`
+  * instead of ICU's — the one difference is a few one-to-many
+  * title-case mappings such as `ß`, which now follow the JVM).
   *
   * Equivalent spark-submit form (README "Deploying"):
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
@@ -34,5 +37,10 @@ object GraftSession {
       // require it, and [[Tables]] normalizes either way (this default
       // just keeps direct spark.read callers on the same type).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // UTF8_BINARY initcap/lower/upper use the JVM's case mapping (as
+      // in Spark 3.x), not ICU's: the first ICU call in a JVM builds a
+      // title-case table over all 1,114,112 code points on one task
+      // thread while the others wait. The two agree on ASCII.
+      .config("spark.sql.icu.caseMappings.enabled", "false")
       .getOrCreate()
 }

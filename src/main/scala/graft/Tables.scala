@@ -56,12 +56,12 @@ object Tables {
       // value-preserving relabel of the same micros — identical to what
       // DuckDB's micro-precision naive TIMESTAMP gives the oracle.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = graft.util.Parquet.read(spark, s"$dir/$name.parquet")
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts",
           org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
       else raw
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else graft.util.Parquet.read(spark, s"$dir/$name.parquet")
   }
 
   /** Spread a narrow scan across the cluster before an explode-style

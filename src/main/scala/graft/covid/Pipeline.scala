@@ -43,7 +43,7 @@ object CovidPipeline {
       .schema(CovidSchema.csvSchema)
       .csv(csvPath)
     raw.write.mode(SaveMode.Overwrite).parquet(stagingDir)
-    spark.read.parquet(stagingDir).count()
+    spark.read.schema(CovidSchema.csvSchema).parquet(stagingDir).count()
   }
 
   /** S7 physical parity: stage as newline-delimited JSON documents —
@@ -63,7 +63,7 @@ object CovidPipeline {
 
   private def readStaging(spark: SparkSession, stagingDir: String,
       format: String) = format match {
-    case "parquet" => spark.read.parquet(stagingDir)
+    case "parquet" => spark.read.schema(CovidSchema.csvSchema).parquet(stagingDir)
     case "json" => spark.read.schema(CovidSchema.csvSchema).json(stagingDir)
     case other => throw new IllegalArgumentException(s"staging format: $other")
   }
@@ -209,11 +209,22 @@ object CovidPipeline {
       .start()
   }
 
+  /** The warehouse with its writer's schema pinned (no footer-inference
+    * job): [[CovidSchema.warehouseSchema]] with the `date` partition
+    * column last, where partition discovery puts it.
+    */
+  private[covid] def readWarehouse(spark: SparkSession,
+      warehouseDir: String): DataFrame = {
+    val (part, data) = CovidSchema.warehouseSchema.partition(_.name == "date")
+    spark.read.schema(org.apache.spark.sql.types.StructType(data ++ part))
+      .parquet(warehouseDir)
+  }
+
   /** The five Metabase dashboard cards (SURVEY.md §2.4 A1–A5) over the
     * warehouse.
     */
   def dashboard(spark: SparkSession, warehouseDir: String): Map[String, DataFrame] = {
-    val t = spark.read.parquet(warehouseDir)
+    val t = readWarehouse(spark, warehouseDir)
     Map(
       "total_records" -> t.agg(count(lit(1)).as("cnt")),
       "latest_record" -> t.agg(max(col("date")).as("max_date")),

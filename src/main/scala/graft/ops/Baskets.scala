@@ -15,8 +15,9 @@ import graft.Tables
   *  - [[q_assoc_rules "q_assoc_rules"]] (order baskets, ~4 items each):
   *    in-row pair generation. Baskets are grouped once (ONE shuffle on
   *    the basket key), pairs are enumerated INSIDE the row with
-  *    higher-order array functions (codegen, no join), and only the
-  *    candidate pairs shuffle to the counting aggregate. The frequent-
+  *    higher-order array functions (no join; interpreted, as they are
+  *    `CodegenFallback` in Spark 4.1), and only the candidate pairs
+  *    shuffle to the counting aggregate. The frequent-
   *    item prune runs BEFORE pair generation as a broadcast join — the
   *    A-priori downward-closure trick: an infrequent item can never be
   *    in a frequent pair, so the pair space shrinks before it exists.

@@ -123,7 +123,10 @@ object Dedup {
   }
 
   /** Estimated Jaccard from two K-hash signatures (matching-minima
-    * fraction) — codegen HOF, no UDF.
+    * fraction) — built-in higher-order functions, no UDF. `zip_with`
+    * and `aggregate` are `CodegenFallback` in Spark 4.1: they evaluate
+    * interpreted inside the generated stage, with no Scala closure or
+    * row conversion.
     */
   def minhashEst(v1: Column, v2: Column): Column =
     aggregate(zip_with(v1, v2, (a, b) => when(a === b, 1).otherwise(0)),

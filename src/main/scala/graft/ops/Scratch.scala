@@ -73,7 +73,7 @@ private[graft] object Scratch {
     * and return a reader over it — every later call is a file scan.
     */
   def materialize(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(once(s, root(s), key) { p =>
+    graft.util.Parquet.read(s, once(s, root(s), key) { p =>
       build.write.mode("overwrite").parquet(p)
       p
     })

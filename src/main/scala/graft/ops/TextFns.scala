@@ -23,11 +23,16 @@ object TextFns {
 
   /** Whitespace tokens, lowercased, empties dropped (Spark's split
     * keeps trailing empties — DuckDB too — so both sides filter).
+    * The `filter` lambda is not code-generated: `ArrayFilter` is
+    * `CodegenFallback` in Spark 4.1, evaluated interpreted per row.
     */
   def tokens(text: Column): Column =
     filter(split(lower(text), "\\s+"), t => t =!= lit(""))
 
-  /** Word n-gram shingles of a token array ("a b c", sliding by 1). */
+  /** Word n-gram shingles of a token array ("a b c", sliding by 1).
+    * The `transform` lambda is not code-generated: `ArrayTransform` is
+    * `CodegenFallback` in Spark 4.1, evaluated interpreted per row.
+    */
   def shingles(toks: Column, n: Int): Column =
     when(size(toks) >= n,
       transform(sequence(lit(0), size(toks) - n),

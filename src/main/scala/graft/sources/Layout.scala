@@ -28,7 +28,7 @@ object Layout {
     */
   def compact(spark: SparkSession, dir: String, targetFiles: Int): Unit = {
     val tmp = dir.stripSuffix("/") + "_compacting"
-    spark.read.parquet(dir).repartition(targetFiles)
+    graft.util.Parquet.read(spark, dir).repartition(targetFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp)
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

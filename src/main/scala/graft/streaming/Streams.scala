@@ -146,7 +146,7 @@ object Streams {
     */
   private def drainStaged(spark: SparkSession, srcDir: String,
       workDir: String)(body: (DataFrame, Long) => Unit): Unit =
-    drain(spark.readStream.schema(spark.read.parquet(srcDir).schema)
+    drain(spark.readStream.schema(graft.util.Parquet.schema(spark, srcDir))
       .option("maxFilesPerTrigger", "1").parquet(srcDir), workDir)(body)
 
   /** A foreachBatch twin's standing store: the parquet directory
@@ -234,7 +234,7 @@ object Streams {
   private def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.util.Parquet.schema(spark, s"$dir/events.parquet")
     // file-source basePath must be a directory; glob-filter the table.
     // The WIDE glob (events*.parquet, admitting staged events_* shards
     // for genuine multi-batch drains) is tied to maxFilesPerTrigger:
@@ -263,7 +263,7 @@ object Streams {
   }
 
   private def docsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.util.Parquet.schema(spark, s"$dir/documents.parquet")
     spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
   }
@@ -479,7 +479,7 @@ object Streams {
       when(col("user_id") === -1L, shards)
         .when(col("user_id") === -2L, shards + 1)
         .otherwise(rangeShard(expr("unix_micros(ts)"), minUs, maxUs + 1, shards)))
-    val schema = spark.read.parquet(streamDir.toString).schema
+    val schema = graft.util.Parquet.schema(spark, streamDir.toString)
     val raw = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
       .withWatermark("ts", "0 seconds")
@@ -656,7 +656,7 @@ object Streams {
     stageIntoBy(ev.unionByName(sentinel(1, 2)).unionByName(sentinel(2, 4)),
       streamDir, 3, None,
       when(col("event_id") >= 0, 0).when(col("event_id") >= -3, 1).otherwise(2))
-    val schema = spark.read.parquet(streamDir.toString).schema
+    val schema = graft.util.Parquet.schema(spark, streamDir.toString)
     // ONE watermark node, assigned upstream of the branch split — the
     // metadata rides the renamed columns into both join inputs.
     // Measured on this exact harness: declaring withWatermark
@@ -706,7 +706,7 @@ object Streams {
   def incrementalDedupIngest(spark: SparkSession, srcDir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
     // the kept rows are the staged source's own rows
-    val kept = Store("kept", spark.read.parquet(srcDir).schema)
+    val kept = Store("kept", graft.util.Parquet.schema(spark, srcDir))
     drainStaged(spark, srcDir, workDir) { (batch, bid) =>
       val hashed = batch.withColumn("h", md5(col("text")))
       val firsts = hashed.groupBy(col("h"))

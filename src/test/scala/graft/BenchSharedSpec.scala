@@ -36,4 +36,20 @@ class BenchSharedSpec extends AnyFunSuite with SparkSpec {
       } finally spark.conf.unset(ops.Scratch.ScratchDirConf)
     }
   }
+
+  // the scratch read-back pins its footer's schema (util.Parquet): the
+  // returned frame must read exactly what inference over its scratch
+  // directory gives (a memo hit after the build-once tests above)
+  for (e <- Bench.shared) {
+    test(s"${e.name} reads its scratch directory with the inferred schema") {
+      spark.conf.set(ops.Scratch.ScratchDirConf, root.toString)
+      try {
+        val df = e.build(spark, dir)
+        val dirs = df.inputFiles.toSeq
+          .map(f => new org.apache.hadoop.fs.Path(f).getParent.toString).distinct
+        assert(dirs.size == 1, s"${e.name}: reads ${dirs.size} directories: $dirs")
+        assert(df.schema == spark.read.parquet(dirs.head).schema)
+      } finally spark.conf.unset(ops.Scratch.ScratchDirConf)
+    }
+  }
 }

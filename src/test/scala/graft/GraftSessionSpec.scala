@@ -19,6 +19,8 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
       // TIMESTAMP_NTZ (watermarks and unix_micros require it)
       assert(s.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
       assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      // JVM case mapping: no ICU title-case table built per JVM
+      assert(s.conf.get("spark.sql.icu.caseMappings.enabled") == "false")
       // native expressions resolve in SQL with no Registry.ensure call
       assert(s.sql("SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D))")
         .head().getDouble(0) == 1.0)

@@ -68,6 +68,46 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  // Tables pins the schema its footer names; it must be exactly the
+  // one a schema-less read infers, under either NTZ inference setting
+  // (events with nanosAsLong on, as Tables reads it)
+  for (sf <- Seq("sf0.001", "sf0.01"); t <- Tables.all) {
+    test(s"pinned schema equals the inferred schema: $sf $t") {
+      val path = java.nio.file.Paths.get(dir).resolveSibling(sf).resolve(s"$t.parquet").toString
+      if (t == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+      try for (on <- Seq("false", "true")) {
+        spark.conf.set(ntz, on)
+        assert(graft.util.Parquet.read(spark, path).schema ==
+          spark.read.parquet(path).schema, s"$t with $ntz=$on")
+      } finally spark.conf.set(ntz, "false")
+    }
+  }
+
+  test("building every table's frame runs no Spark job") {
+    for (t <- Tables.all) {
+      val (_, jobs) = jobsDuring(Tables(spark, dir, t))
+      assert(jobs == 0, s"Tables(spark, dir, \"$t\") ran $jobs job(s)")
+    }
+  }
+
+  test("every parquet read in src/main pins a schema or goes through util.Parquet") {
+    // a read chain from `.read` to `.parquet(` with no `.schema(` in it
+    // runs a footer-inference job; only the helper may hold one
+    import scala.jdk.CollectionConverters._
+    val schemaless = """\.read(?:\s*\.(?!schema\()\w+\([^()]*\))*\s*\.parquet\(""".r
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val code = java.nio.file.Files.readAllLines(p).asScala
+          .map(l => if (l.trim.startsWith("//") || l.trim.startsWith("*")) "" else l)
+          .mkString("\n")
+        schemaless.findAllMatchIn(code).map(m => s"${p.getFileName}: ${m.matched}")
+      }.toSeq
+    assert(hits.nonEmpty && hits.forall(_.startsWith("Parquet.scala:")),
+      s"schema-less parquet reads outside graft.util.Parquet: $hits")
+  }
+
   test("native functions register once per session") {
     val reg = spark.sessionState.functionRegistry
     def registered() = graft.functions.Registry.builders.map { case (n, _) =>

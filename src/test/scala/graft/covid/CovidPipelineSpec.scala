@@ -69,6 +69,22 @@ class CovidPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(CovidPipeline.etlOnce(spark, staging, wh, s"$dir/state") == 0)
   }
 
+  test("staging and warehouse reads pin the inferred schema; the dashboard runs no job to build") {
+    val dir = tmp()
+    val csv = dir.resolve("covid.csv")
+    Files.writeString(csv, fixtureCsv)
+    val (staging, wh) = (s"$dir/staging", s"$dir/warehouse")
+    CovidPipeline.ingest(spark, csv.toString, staging)
+    assert(spark.read.parquet(staging).schema == CovidSchema.csvSchema)
+    assert(CovidPipeline.etlOnce(spark, staging, wh, s"$dir/state", limit = None) ==
+      expectedRows)
+    // the date partition column stays a DATE, last
+    assert(CovidPipeline.readWarehouse(spark, wh).schema == spark.read.parquet(wh).schema)
+    val (cards, jobs) = jobsDuring(CovidPipeline.dashboard(spark, wh))
+    assert(jobs == 0, s"building the dashboard cards ran $jobs job(s)")
+    assert(cards("total_records").head().getLong(0) == expectedRows)
+  }
+
   test("S10/S11 executed: JDBC warehouse round-trip equals the parquet warehouse") {
     // The reference's real sink is batched INSERTs into Postgres behind
     // a CREATE TABLE IF NOT EXISTS bootstrap (dags/ETL.py:124-148).

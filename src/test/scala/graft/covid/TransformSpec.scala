@@ -52,4 +52,28 @@ class TransformSpec extends AnyFunSuite with SparkSpec {
     assert(par.getAs[String]("county") == "Mc-Donald 3Rd")
     assert(Transform.pythonTitle("o'brien county") == "O'Brien County")
   }
+
+  test("initcap, lower and upper agree with ICU case mappings on and off") {
+    // sessions map case through the JVM (GraftSession.create); on the
+    // pipeline's inputs that must change nothing against ICU's mapping
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val icu = "spark.sql.icu.caseMappings.enabled"
+    val names = Seq("arkansas", " TEXAS ", "new york", "o'hio", "bradley",
+      " o'brien ", "MADISON", "  arkansas ", "mc-donald 3rd")
+    val in = names.toDF("s").unionByName(
+      graft.Tables(spark, "/root/testdata/sf0.001", "documents").select(col("text").as("s")))
+    def mapped(on: Boolean, df: DataFrame): Seq[String] = {
+      spark.conf.set(icu, on.toString)
+      df.select(col("s"), initcap(col("s")), initcap(trim(col("s"))),
+          lower(col("s")), upper(col("s")))
+        .collect().map(_.toString).toSeq.sorted
+    }
+    try {
+      assert(mapped(on = true, in) == mapped(on = false, in))
+      // the setting takes effect: the mappings differ off ASCII
+      val eszett = Seq("ßa").toDF("s")
+      assert(mapped(on = true, eszett) != mapped(on = false, eszett))
+    } finally spark.conf.set(icu, "false")
+  }
 }
