@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The library's session entry point: one call wires everything a
   * graft deployment needs — the `SparkSessionExtensions` hook
   * (native `cosine_sim`/`h60` SQL functions, the top-1-per-group
-  * optimizer rule, the native as-of join strategy) plus the
+  * optimizer rule, the AQE runtime rule that sorts a small result in
+  * one partition, the native as-of join strategy) plus the
   * scale defaults every operator's plan shape assumes (AQE on, UTC
   * session time, explicit shuffle parallelism, parquet timestamps as
   * TIMESTAMP, and the JVM's case mapping for `initcap`/`lower`/`upper`

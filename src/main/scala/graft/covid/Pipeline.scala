@@ -1,6 +1,6 @@
 package graft.covid
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -28,9 +28,22 @@ object CovidPipeline {
 
   /** S1/S5–S7: CSV → parquet staging (full refresh: overwrite ≡ the
     * reference's delete-by-query + re-ingest, ingest_csv_to_elastic.py:58-70).
+    * Returns the rows staged, counted on the write (one job).
     */
-  def ingest(spark: SparkSession, csvPath: String, stagingDir: String): Long = {
-    val raw = spark.read
+  def ingest(spark: SparkSession, csvPath: String, stagingDir: String): Long =
+    countedWrite(readCsv(spark, csvPath))(_.write.mode(SaveMode.Overwrite).parquet(stagingDir))
+
+  /** S7 physical parity: stage as newline-delimited JSON documents —
+    * the reference's ES bulk NDJSON (ingest_csv_to_elastic.py:104-113).
+    * Unlike the CSV edge, JSON staging REPRESENTS empty strings, so the
+    * full int-coercion triad (missing→0, ""→drop) survives physically
+    * end-to-end. Pass stagingFormat="json" to etlOnce to consume it.
+    */
+  def ingestJson(spark: SparkSession, csvPath: String, stagingDir: String): Long =
+    countedWrite(readCsv(spark, csvPath))(_.write.mode(SaveMode.Overwrite).json(stagingDir))
+
+  private def readCsv(spark: SparkSession, csvPath: String): DataFrame =
+    spark.read
       .option("header", "true")
       // CSV-edge semantics note: the parser yields null for BOTH
       // empty fields and missing trailing fields (zero-length values
@@ -42,23 +55,14 @@ object CovidPipeline {
       // TransformSpec; documented divergence at the CSV edge only.
       .schema(CovidSchema.csvSchema)
       .csv(csvPath)
-    raw.write.mode(SaveMode.Overwrite).parquet(stagingDir)
-    spark.read.schema(CovidSchema.csvSchema).parquet(stagingDir).count()
-  }
 
-  /** S7 physical parity: stage as newline-delimited JSON documents —
-    * the reference's ES bulk NDJSON (ingest_csv_to_elastic.py:104-113).
-    * Unlike the CSV edge, JSON staging REPRESENTS empty strings, so the
-    * full int-coercion triad (missing→0, ""→drop) survives physically
-    * end-to-end. Pass stagingFormat="json" to etlOnce to consume it.
+  /** `write` run over `df`, returning the rows it wrote: an observation
+    * counts them in the write's own job instead of a re-read.
     */
-  def ingestJson(spark: SparkSession, csvPath: String, stagingDir: String): Long = {
-    val raw = spark.read
-      .option("header", "true")
-      .schema(CovidSchema.csvSchema)
-      .csv(csvPath)
-    raw.write.mode(SaveMode.Overwrite).json(stagingDir)
-    spark.read.schema(CovidSchema.csvSchema).json(stagingDir).count()
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
   }
 
   private def readStaging(spark: SparkSession, stagingDir: String,
@@ -72,6 +76,10 @@ object CovidPipeline {
     * watermark → strict-`>` range extract (+ optional row cap) →
     * transform → append to warehouse → persist max-date watermark.
     * Returns rows appended (0 ⇒ caught up).
+    *
+    * Jobs: one row-cap probe (none with `limit = None`), then the
+    * append, which observes its own counts and max date — 2 jobs for
+    * a capped run that loads, 1 for a caught-up one.
     */
   def etlOnce(spark: SparkSession, stagingDir: String, warehouseDir: String,
       stateDir: String, limit: Option[Int] = Some(1000),
@@ -96,27 +104,33 @@ object CovidPipeline {
       case Some(n) =>
         val head = next.orderBy(col("REPORT_DATE")).limit(n)
         val maxD = head.agg(max(col("REPORT_DATE"))).head()
-        if (maxD.isNullAt(0)) next.limit(0)
-        else next.filter(col("REPORT_DATE") <= lit(maxD.getString(0)))
-      case None => next
+        if (maxD.isNullAt(0)) None
+        else Some(next.filter(col("REPORT_DATE") <= lit(maxD.getString(0))))
+      case None => Some(next)
     }
-    // P4 observability: malformed-row drops are invisible in a
-    // declarative filter — observation metrics count them without a
-    // second scan (dags/ETL.py logs the same via print, :104-106).
-    val obs = org.apache.spark.sql.Observation()
-    val batch = Transform(extracted.observe(obs, count(lit(1)).as("extracted")))
-      .cache()
-    try {
-      val n = batch.count()
-      val extractedCnt = obs.get("extracted").asInstanceOf[Long]
-      writeMetrics(spark, stateDir, extractedCnt, n)
-      if (n > 0) {
-        batch.write.mode(SaveMode.Append).partitionBy("date").parquet(warehouseDir)
-        val maxDate = batch.agg(max(col("date"))).head().getDate(0)
-        wm.save(maxDate.toString) // data first, then cursor (at-least-once)
-      }
-      n
-    } finally batch.unpersist()
+    extracted match {
+      case None => // caught up: nothing to write
+        writeMetrics(spark, stateDir, 0L, 0L)
+        0L
+      case Some(rows) =>
+        // P4 observability: malformed-row drops are invisible in a
+        // declarative filter — two observations on the one append count
+        // the rows extracted (before Transform's drop filter) and the
+        // rows loaded with their max date, reported after the write's
+        // single job (dags/ETL.py logs the same via print, :104-106).
+        // An append with no rows left writes only `_SUCCESS`.
+        val extractedObs, loadedObs = Observation()
+        Transform(rows.observe(extractedObs, count(lit(1)).as("extracted")))
+          .observe(loadedObs, count(lit(1)).as("loaded"), max(col("date")).as("max_date"))
+          .write.mode(SaveMode.Append).partitionBy("date").parquet(warehouseDir)
+        val loaded = loadedObs.get
+        val n = loaded("loaded").asInstanceOf[Long]
+        // data first, then the metrics line (its counts come from the
+        // write, so a failed append logs none), then cursor (at-least-once)
+        writeMetrics(spark, stateDir, extractedObs.get("extracted").asInstanceOf[Long], n)
+        if (n > 0) wm.save(loaded("max_date").toString)
+        n
+    }
   }
 
   /** S10/S11 EXECUTED warehouse-sink parity: the reference's actual
@@ -220,21 +234,31 @@ object CovidPipeline {
       .parquet(warehouseDir)
   }
 
-  /** The five Metabase dashboard cards (SURVEY.md §2.4 A1–A5) over the
-    * warehouse.
+  /** The five Metabase dashboard cards (SURVEY.md §2.4 A1–A5), each a
+    * query over the warehouse.
     */
-  def dashboard(spark: SparkSession, warehouseDir: String): Map[String, DataFrame] = {
-    val t = readWarehouse(spark, warehouseDir)
-    Map(
-      "total_records" -> t.agg(count(lit(1)).as("cnt")),
-      "latest_record" -> t.agg(max(col("date")).as("max_date")),
-      "overview" -> t.select("date", "state", "county", "new_cases", "new_deaths")
-        .orderBy(col("date"), col("state"), col("county")).limit(2000),
-      "cases_per_county" -> t.groupBy(col("county"))
-        .agg(sum(col("new_cases")).as("total_cases"))
-        .orderBy(col("total_cases").desc, col("county")),
-      "deaths_per_state" -> t.groupBy(col("state"))
-        .agg(sum(col("new_deaths")).as("total_deaths"))
-        .orderBy(col("total_deaths"), col("state")))
+  private val cardQueries = scala.collection.immutable.ListMap[String, DataFrame => DataFrame](
+    "total_records" -> (_.agg(count(lit(1)).as("cnt"))),
+    "latest_record" -> (_.agg(max(col("date")).as("max_date"))),
+    "overview" -> (_.select("date", "state", "county", "new_cases", "new_deaths")
+      .orderBy(col("date"), col("state"), col("county")).limit(2000)),
+    "cases_per_county" -> (_.groupBy(col("county"))
+      .agg(sum(col("new_cases")).as("total_cases"))
+      .orderBy(col("total_cases").desc, col("county"))),
+    "deaths_per_state" -> (_.groupBy(col("state"))
+      .agg(sum(col("new_deaths")).as("total_deaths"))
+      .orderBy(col("total_deaths"), col("state"))))
+
+  /** The dashboard card names, in card order. */
+  val dashboardCards: Seq[String] = cardQueries.keys.toSeq
+
+  /** The dashboard over the warehouse: each call reads the warehouse
+    * and builds only the card it names (one listing, one plan), so a
+    * refresh that shows every card analyzes five plans, not 25.
+    */
+  def dashboard(spark: SparkSession, warehouseDir: String): String => DataFrame = card => {
+    val query = cardQueries.getOrElse(card, throw new IllegalArgumentException(
+      s"unknown dashboard card '$card' (cards: ${dashboardCards.mkString(", ")})"))
+    query(readWarehouse(spark, warehouseDir))
   }
 }

@@ -86,6 +86,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) =>
         MisraGries(exprs(0), exprs(1)).toAggregateExpression()))
     e.injectOptimizerRule(_ => graft.plans.RewriteTop1PerGroup)
+    e.injectRuntimeOptimizerRule(graft.plans.SortSmallResultInOnePartition)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

@@ -39,9 +39,10 @@ object CovidDemo {
       println(s"[etl run $run] appended $n rows, watermark=${new Watermark(spark, st).load()}")
       run += 1
     }
-    CovidPipeline.dashboard(spark, wh).toSeq.sortBy(_._1).foreach { case (name, df) =>
+    val card = CovidPipeline.dashboard(spark, wh)
+    CovidPipeline.dashboardCards.foreach { name =>
       println(s"--- $name ---")
-      df.show(10, truncate = false)
+      card(name).show(10, truncate = false)
     }
     spark.stop()
   }

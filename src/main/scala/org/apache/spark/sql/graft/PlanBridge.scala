@@ -51,4 +51,15 @@ object PlanBridge {
         cs.experimental.extraStrategies =
           cs.experimental.extraStrategies :+ strategy
     }
+
+  /** The map output bytes of a run shuffle stage, the total AQE's
+    * partition coalescing sizes its partitions by (`None` before it
+    * has run).
+    */
+  def shuffleBytes(stage: org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec)
+      : Option[Long] =
+    stage.mapStats.map(_.bytesByPartitionId.sum)
+
+  /** Spark's own test mode, in which AQE caps its min partition size. */
+  def isTesting: Boolean = org.apache.spark.util.Utils.isTesting
 }

@@ -80,9 +80,67 @@ class CovidPipelineSpec extends AnyFunSuite with SparkSpec {
       expectedRows)
     // the date partition column stays a DATE, last
     assert(CovidPipeline.readWarehouse(spark, wh).schema == spark.read.parquet(wh).schema)
-    val (cards, jobs) = jobsDuring(CovidPipeline.dashboard(spark, wh))
-    assert(jobs == 0, s"building the dashboard cards ran $jobs job(s)")
+    val dashboard = CovidPipeline.dashboard(spark, wh)
+    assert(CovidPipeline.dashboardCards == Seq("total_records", "latest_record", "overview",
+      "cases_per_county", "deaths_per_state"))
+    val cards = CovidPipeline.dashboardCards.map { name =>
+      val (card, jobs) = jobsDuring(dashboard(name))
+      assert(jobs == 0, s"building the $name card ran $jobs job(s)")
+      name -> card
+    }.toMap
     assert(cards("total_records").head().getLong(0) == expectedRows)
+    val unknown = intercept[IllegalArgumentException](dashboard("no_such_card"))
+    assert(unknown.getMessage.contains("no_such_card"), unknown.getMessage)
+  }
+
+  test("job counts: ingest 1, a capped loading run 2, a caught-up run 1, an uncapped run 1") {
+    val dir = tmp()
+    val csv = dir.resolve("covid.csv")
+    // without the bogus date, which sorts after every cursor and is
+    // re-extracted (and dropped) by every later run
+    Files.writeString(csv, fixtureCsv.linesIterator.filterNot(_.startsWith("bogus-date"))
+      .mkString("\n"))
+    val (staging, wh, st) = (s"$dir/staging", s"$dir/warehouse", s"$dir/state")
+    // the staged row count is observed on the write, not re-read
+    val (ingested, ingestJobs) = jobsDuring(CovidPipeline.ingest(spark, csv.toString, staging))
+    assert(ingested == 185)
+    assert(ingestJobs == 1, s"ingest ran $ingestJobs jobs")
+    // the row-cap probe, then one observed append
+    val (loaded, loadJobs) = jobsDuring(CovidPipeline.etlOnce(spark, staging, wh, st, Some(50)))
+    assert(loaded > 0)
+    assert(loadJobs == 2, s"a capped loading run ran $loadJobs jobs")
+    CovidPipeline.runToCompletion(spark, staging, wh, st, Some(50))
+    // caught up: the probe finds nothing and nothing is written
+    val (none, caughtUpJobs) = jobsDuring(CovidPipeline.etlOnce(spark, staging, wh, st, Some(50)))
+    assert(none == 0)
+    assert(caughtUpJobs == 1, s"a caught-up run ran $caughtUpJobs jobs")
+    // uncapped: no probe, just the append
+    val (all, uncappedJobs) = jobsDuring(
+      CovidPipeline.etlOnce(spark, staging, s"$dir/wh2", s"$dir/st2", None))
+    assert(all == expectedRows)
+    assert(uncappedJobs == 1, s"an uncapped run ran $uncappedJobs jobs")
+    // an uncapped caught-up run appends no rows and adds no data file
+    def dataFiles = Files.walk(java.nio.file.Paths.get(s"$dir/wh2")).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).toSet
+    val before = dataFiles
+    assert(CovidPipeline.etlOnce(spark, staging, s"$dir/wh2", s"$dir/st2", None) == 0)
+    assert(dataFiles == before)
+  }
+
+  test("job counts on the full fixture: a caught-up run re-extracts the bogus date, 2 jobs") {
+    val dir = tmp()
+    val csv = dir.resolve("covid.csv")
+    Files.writeString(csv, fixtureCsv)
+    val (staging, wh, st) = (s"$dir/staging", s"$dir/warehouse", s"$dir/state")
+    CovidPipeline.ingest(spark, csv.toString, staging)
+    CovidPipeline.runToCompletion(spark, staging, wh, st, Some(50))
+    // The cursor moves only when a run loads rows, so the bogus date,
+    // which sorts after every cursor and is dropped by Transform, is
+    // probed and appended (empty) by every run after the last load.
+    // Advancing the cursor past a fully dropped batch makes this 1.
+    val (none, caughtUpJobs) = jobsDuring(CovidPipeline.etlOnce(spark, staging, wh, st, Some(50)))
+    assert(none == 0)
+    assert(caughtUpJobs == 2, s"a caught-up run ran $caughtUpJobs jobs")
   }
 
   test("S10/S11 executed: JDBC warehouse round-trip equals the parquet warehouse") {
