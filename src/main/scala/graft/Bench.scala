@@ -384,10 +384,6 @@ object Bench {
     // by the dup_len census and the contamination chain
     val saFamily = Set("q_span_dedup_exact", "q_dup_spectrum", "q_contam_span",
       "q_decontam_span")
-    def cosine(build: (SparkSession, String) => DataFrame)(s: SparkSession, dir: String) = {
-      graft.functions.CosineSim.register(s)
-      build(s, dir)
-    }
     Seq(
       Shared("shared_shingle_postings", postingsFamily, Dedup.sharedShinglePostings),
       // per-doc bigram-LM perplexity: one tokenize+shingle+LM-train chain
@@ -404,7 +400,7 @@ object Bench {
         "q_semantic_outliers", "q_cluster_balance", "q_embedding_drift",
         "q_ivf_retrain", "q_stream_ivf_retrain", "q_ann_graph",
         "q_ann_graph_recall", "q_ann_graph2", "q_ann_graph2_recall"),
-        cosine(Similarity.sharedIvfProbed)),
+        Similarity.sharedIvfProbed),
       // the IVF candidate-pair edge list (the index's candidate output)
       Shared("shared_ivf_cand", Set("q_sim_ann", "q_ann_recall", "q_ann_graph",
         "q_ann_graph_recall", "q_ann_graph2", "q_ann_graph2_recall",
@@ -420,7 +416,7 @@ object Bench {
         TextAnalysis.dsirLogw),
       // the SemDeDup cluster assignment: one n·K centroid pass
       Shared("shared_semdedup", Set("q_semdedup", "q_dedup_funnel", "q_corpus_release"),
-        cosine(Similarity.sharedSemdedupAssigned)),
+        Similarity.sharedSemdedupAssigned),
       // the banded MinHash est-pair table (the sketch index output)
       Shared("shared_minhash_pairs", Set("q_dedup_minhash", "q_minhash_error",
         "q_lsh_recall", "q_release_delta"), Dedup.sharedMinhashEstPairs),

@@ -3,15 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The library's session entry point: one call wires everything a
-  * graft deployment needs — the `SparkSessionExtensions` hook
-  * (native `cosine_sim`/`h60` SQL functions, the top-1-per-group
-  * optimizer rule, the AQE runtime rule that sorts a small result in
-  * one partition, the native as-of join strategy) plus the
-  * scale defaults every operator's plan shape assumes (AQE on, UTC
-  * session time, explicit shuffle parallelism, parquet timestamps as
-  * TIMESTAMP, and the JVM's case mapping for `initcap`/`lower`/`upper`
-  * instead of ICU's — the one difference is a few one-to-many
-  * title-case mappings such as `ß`, which now follow the JVM).
+  * graft deployment needs — the `SparkSessionExtensions` hook, the
+  * only way the engine enters a session (every native SQL function
+  * in `graft.functions.Registry`, the top-1-per-group optimizer rule,
+  * the AQE runtime rule that sorts a small result in one partition,
+  * the native as-of join strategy) plus the scale defaults every
+  * operator's plan shape assumes (AQE on, UTC session time, explicit
+  * shuffle parallelism, parquet timestamps as TIMESTAMP, TIMESTAMP(NANOS)
+  * parquet columns read as longs, and the JVM's case mapping for
+  * `initcap`/`lower`/`upper` instead of ICU's — the one difference is a
+  * few one-to-many title-case mappings such as `ß`, which now follow
+  * the JVM). A session built any other way lacks the native functions
+  * and fails at analysis on the first query that calls one.
   *
   * Equivalent spark-submit form (README "Deploying"):
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
@@ -38,6 +41,10 @@ object GraftSession {
       // require it, and [[Tables]] normalizes either way (this default
       // just keeps direct spark.read callers on the same type).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // TIMESTAMP(NANOS) parquet columns, which the vectorized reader
+      // rejects, read as longs; [[Tables]] and the events stream
+      // truncate them to micros
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // UTF8_BINARY initcap/lower/upper use the JVM's case mapping (as
       // in Spark 3.x), not ICU's: the first ICU call in a JVM builds a
       // title-case table over all 1,114,112 code points on one task

@@ -14,10 +14,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.Registry.ensure(spark) // native exprs available everywhere
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeNtz(readRaw(spark, dir, name), name)
-  }
 
   /** Boundary normalization applied to EVERY table: any TIMESTAMP_NTZ
     * column (what Spark 4 infers for parquet micros written without
@@ -45,7 +43,8 @@ object Tables {
     if (name == "events") {
       // events.ts has shipped as three different parquet physical types
       // across testdata generations: TIMESTAMP(NANOS) (rejected by the
-      // vectorized reader — read as long via nanosAsLong and truncate),
+      // vectorized reader — read as long via the session's nanosAsLong,
+      // set by GraftSession.create, and truncate),
       // TIMESTAMP(MICROS, isAdjustedToUTC=false) (Spark 4 infers
       // TIMESTAMP_NTZ when inferTimestampNTZ is on), and plain
       // TIMESTAMP(MICROS). Normalize ALL of them to session-TZ
@@ -55,7 +54,6 @@ object Tables {
       // inference flag. Sessions run UTC, so the NTZ→TZ cast is a
       // value-preserving relabel of the same micros — identical to what
       // DuckDB's micro-precision naive TIMESTAMP gives the oracle.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = graft.util.Parquet.read(spark, s"$dir/$name.parquet")
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts",

@@ -223,7 +223,6 @@ object Relational {
     // primitive for scale tests: the same expression tree generates
     // 10⁴ or 10¹² rows, partitioned, with zero input I/O.
     "q_datagen" -> ((s, dir) => {
-      graft.functions.Registry.ensure(s)
       s.range(10000).select(col("id"),
           expr("h60(CAST(id AS STRING))").as("h"))
         .select(col("id"),

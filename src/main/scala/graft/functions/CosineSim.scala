@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native codegen cosine similarity over two `array<double>` columns.
   *
@@ -57,36 +54,4 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-  val info = new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim")
-
-  /** Per-session SQL registration (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("cosine_sim")))
-      reg.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-  }
-}
-
-/** `SparkSessionExtensions` hook so library users get the native
-  * functions in SQL via `spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((new FunctionIdentifier("cosine_sim"), CosineSim.info,
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((new FunctionIdentifier("h60"),
-      new ExpressionInfo(classOf[H60].getName, "h60"),
-      (exprs: Seq[Expression]) => H60(exprs.head)))
-    e.injectFunction((new FunctionIdentifier("mg_topk"),
-      new ExpressionInfo(classOf[MisraGries].getName, "mg_topk"),
-      (exprs: Seq[Expression]) =>
-        MisraGries(exprs(0), exprs(1)).toAggregateExpression()))
-    e.injectOptimizerRule(_ => graft.plans.RewriteTop1PerGroup)
-    e.injectRuntimeOptimizerRule(graft.plans.SortSmallResultInOnePartition)
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-  }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -44,42 +42,5 @@ object H60 {
     var i = 0
     while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
     v >>> 4
-  }
-}
-
-/** Session registration for the engine's native expressions. */
-object Registry {
-  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_sim" -> (exprs => CosineSim(exprs(0), exprs(1))),
-    "h60" -> (exprs => H60(exprs.head)),
-    "bottom_k_ids" ->
-      (exprs => BottomKIds(exprs(0), exprs(1), exprs(2)).toAggregateExpression()),
-    "top_k_by_score" ->
-      (exprs => TopKByScore(exprs(0), exprs(1), exprs(2)).toAggregateExpression()),
-    "kmv_min_k" -> (exprs => KmvMinK(exprs(0), exprs(1)).toAggregateExpression()),
-    "mg_topk" -> (exprs => MisraGries(exprs(0), exprs(1)).toAggregateExpression()),
-    "array_lcp_from" ->
-      (exprs => ArrayLcpFrom(exprs(0), exprs(1), exprs(2), exprs(3))))
-
-  /** Register the functions this session lacks — idempotent, so the
-    * per-read calls (every `Tables(...)`) neither rebuild the registry
-    * entries nor log a "replaced a previously registered function"
-    * WARN each time.
-    */
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    for ((name, build) <- builders
-         if !reg.functionExists(FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(name, build, "scala_udf")
-    // session-local optimizer rule, unless the session already runs it
-    // — GraftSession.create and spark-submit users get it from
-    // GraftExtensions.injectOptimizerRule, and adding it here too
-    // would run it in a second optimizer batch
-    val rule = graft.plans.RewriteTop1PerGroup
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(rule) &&
-        !spark.sessionState.optimizer.extendedOperatorOptimizationRules
-          .contains(rule))
-      exp.extraOptimizations = exp.extraOptimizations :+ rule
   }
 }

@@ -136,7 +136,6 @@ object Govern {
     */
   private[graft] def sharedThetaSketches(s: SparkSession, dir: String): DataFrame =
     Scratch.materialize(s, s"theta_sketch|$dir") {
-      graft.functions.Registry.ensure(s)
       sourceShingles(s, dir)
         .groupBy(col("source"))
         .agg(call_function("kmv_min_k", col("h"), lit(ThetaK)).as("mins"),

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.CosineSim
 
 /** Similarity search over the embeddings table (`vec_id`,
   * `embedding: array<float>[64]`, `label`).
@@ -100,46 +99,21 @@ object Similarity {
     * round-9 G=4 default it buys recall@1 0.494 → 0.590 for 1.43×
     * candidates — the knee of the measured frontier (2-hop variants
     * reach 0.69/0.91 recall at 2.0×/3.4× candidates; escalate via
-    * [[annGraphSearch]]'s parameters when recall is worth the re-rank
+    * [[annGraphSearch]]'s `hops` when recall is worth the re-rank
     * multiplier). Both oracles generate their rn <= G cut from this
     * one constant, so the hash gate moves with it.
     */
   val GraphDegree = 8
 
-  /** Path-score pre-rank cut for the 2-hop graph escalation: each
-    * hop's expanded frontier keeps only the R best candidates per
-    * query RANKED BY max over parents of cos(q, parent) +
-    * cos(parent, nn) — both terms already computed exactly (the
-    * frontier row's score and the stored graph edge's weight), so the
-    * cut costs NO new vector math and the frontier rows stay
-    * vector-free until the ≤ R·n survivors pay the exact-cosine
-    * re-rank. The r10 escalation re-ranked its whole 3.4×-candidate
-    * frontier exactly (the entire sf1 bench tail). A PQ/SDC pre-rank
-    * was tried first and MEASURED OUT (frontier sweep, sf0.1): at
-    * PqM = 4 recall@1 collapsed 0.912 → 0.43 at R = 32, and even a
-    * 16-subspace quantizer only reached 0.52 — product-quantized
-    * distance is near-noise on near-orthogonal random vectors (the
-    * q_matryoshka honest-finding precedent), while the path score
-    * rides the exact neighborhood structure the graph walk itself
-    * exploits. Recall is re-audited by q_ann_graph2_recall (the
-    * hash-gated row moved WITH this constant — the trade is measured,
-    * not assumed).
-    */
-  val GraphPreRankR = 32
-
-  /** The graph-expanded ANN search behind q_ann_graph, parametrized
-    * so the frontier sweep can measure other operating points:
-    * `degree` = stored out-degree (HNSW's M), `hops` = expansion
-    * rounds (each round walks the current candidates' graph edges;
-    * candidate volume multiplies by ≤ degree per hop), `preRank` = 0
-    * for the exact-everything form or R for the PATH-SCORE frontier
-    * cut ([[GraphPreRankR]]: top-R per query by max over parents of
-    * cos(q, parent) + cos(parent, nn), both terms already exact). The
-    * default (GraphDegree, 1, 0) is byte-identical to the round-9
-    * oracle-gated plan.
+  /** The graph-expanded ANN search behind q_ann_graph (`hops` = 1) and
+    * q_ann_graph2 (`hops` = 2): each hop walks the current candidates'
+    * edges in the stored [[GraphDegree]]-degree graph (candidate volume
+    * multiplies by ≤ GraphDegree per hop), and the top-1 per query is
+    * picked by exact cosine. The 1-hop form is byte-identical to the
+    * round-9 oracle-gated plan.
     */
   private[graft] def annGraphSearch(s: SparkSession, dir: String,
-      degree: Int = GraphDegree, hops: Int = 1, preRank: Int = 0): DataFrame =
+      hops: Int = 1): DataFrame =
     // Session-materialized (r14): the search RESULT is one probe-
     // sample-sized table per operating point, consumed by the query
     // AND its recall audit — the established first-class-intermediate
@@ -147,8 +121,7 @@ object Similarity {
     // re-running the whole walk). Exact round-trip (long, long,
     // round-6 double); the consumer-side orderBy restores the
     // contract ordering.
-    Scratch.materialize(s,
-        s"ann_graph_search_${dir}_${degree}_${hops}_$preRank") {
+    Scratch.materialize(s, s"ann_graph_search_${dir}_$hops") {
       // top-1 per query as max(struct(score, -id)) — a DECLARATIVE
       // aggregate (guide §4: no non-codegen expression in the hot
       // path) instead of the bounded-heap TypedImperativeAggregate,
@@ -158,7 +131,7 @@ object Similarity {
       // max picks the highest cos_sim and, on ties, the largest
       // -nn_id = SMALLEST nn_id — exactly top_k_by_score's
       // (score desc, id asc) order.
-      annGraphCandidates(s, dir, degree, hops, preRank)
+      annGraphCandidates(s, dir, hops)
         .groupBy(col("vec_id"))
         .agg(max(struct(col("cos_sim"), (-col("nn_id")).as("neg_id"))).as("m"))
         .select(col("vec_id"), (-col("m.neg_id")).as("nn_id"),
@@ -166,136 +139,85 @@ object Similarity {
     }.orderBy(col("vec_id"))
 
   /** The distinct scored candidate set entering [[annGraphSearch]]'s
-    * re-rank — exposed so the frontier sweep can measure candidate
-    * volume per operating point.
-    *
-    * With `preRank` = R the walk is FRONTIER-based — hop h expands
-    * only hop h−1's R surviving pairs per query (hop 0 = the IVF
-    * candidate set), cut by path score BEFORE the exact re-rank:
-    * enumeration stays vector-free (3 small columns per row) and the
-    * exact-cosine volume tracks R·n instead of the full degree^hops
-    * growth. With preRank = 0 the hop expands the whole ACCUMULATOR —
-    * byte-identical to the r10 oracle-gated plan; a frontier-only
-    * exact walk produces the same candidate SET (re-expanding older
-    * pairs re-derives pairs the distinct already holds) but measured
-    * ~15% slower at sf1 twice (145 vs 126 s subset, 164 vs 143 s
-    * in-run — the fresh exc1 exchange replaces a reused one), so the
-    * exact path keeps the accumulator shape.
+    * re-rank: the IVF candidates plus every pair `hops` walks of the
+    * stored graph reach, each with its exact cosine.
     */
   private[graft] def annGraphCandidates(s: SparkSession, dir: String,
-      degree: Int, hops: Int, preRank: Int = 0): DataFrame = {
-    CosineSim.register(s)
-    graft.functions.Registry.ensure(s)
+      hops: Int): DataFrame = {
     val cand = sharedIvfCand(s, dir)
     // the stored graph: top-G per vector WITH the edge weight (the
     // exact cosine the IVF index already paid for), bounded heap —
     // no window over the candidate stream
     val graph = cand.groupBy(col("vec_id"))
-      .agg(expr(s"top_k_by_score(cos_sim, nn_id, $degree)").as("top"))
+      .agg(expr(s"top_k_by_score(cos_sim, nn_id, $GraphDegree)").as("top"))
       .select(col("vec_id").as("hop_id"),
         explode(col("top")).as("t"))
       .select(col("hop_id"), col("t.doc_id").as("nn_id"),
         col("t.score").as("edge_cos"))
     val emb = embeddings(s, dir)
-    if (preRank <= 0) {
-      // r13 (guide §2.3 "shuffle keys instead of payloads"): the
-      // exact-everything walk enumerates PAIRS ONLY — two longs per
-      // row through every hop join and distinct instead of
-      // (vec_id, nn_id, cos_sim) — and attaches the exact cosine ONCE
-      // over the final distinct candidate set. The old accumulator
-      // recomputed cosines for every already-scored pair on every hop
-      // (hop 2 re-derived most of hop 1's and hop 0's pairs before
-      // the distinct collapsed them). Bit-identical output: the
-      // candidate SET is unchanged (same joins, same distinct), and
-      // round(cosine(v1, v2), 6) is the same deterministic expression
-      // sharedIvfCand materialized, evaluated over the same vectors —
-      // re-deriving it per distinct pair cannot differ. The hop
-      // expands the FRONTIER (the previous hop's complete distinct
-      // expansion), not the accumulator: expand(acc_k) =
-      // expand(cand) ∪ expand(next_k) and expand(cand) = next_1 ⊆
-      // acc_k already, so the sets are equal by induction while the
-      // join input shrinks to the new pairs only. (The r10 note that
-      // frontier-exact measured ~15% slower applied to the old
-      // cosine-carrying rows, where re-expanding acc reused its
-      // exchange; on 2-long rows the frontier walk wins.) Measured at
-      // sf0.1 standalone, same session: q_ann_graph2 228.5 -> 168.1
-      // MB shuffle, 9.3 -> 6.4 s; q_ann_graph 55.4 -> 42.7 MB,
-      // q_ann_graph2_recall 52.1 -> 36.7 MB.
-      // r14 (guide §2.4, duplicated subtrees): Catalyst cannot reuse
-      // the hop-1 frontier between its two consumers (the accumulator
-      // union and hop 2's join input) nor the graph build between the
-      // per-hop broadcasts — column pruning makes the copies
-      // canonically unequal, so the r13 plan recomputed hop 1's
-      // distinct twice and the graph's ObjectHashAggregate + explode
-      // three times. A LAZY localCheckpoint on each reused frame
-      // computes it once and serves every consumer from its blocks
-      // (bounded: pair rows are two longs; the bench's inter-entry
-      // hygiene unpersists them). Values are unchanged — the
-      // checkpoint only cuts lineage.
-      val graphCk =
-        if (hops > 1) graph.localCheckpoint(false) else graph
-      var accPairs = cand.select(col("vec_id"), col("nn_id"))
-      var frontierPairs = accPairs
-      for (h <- 0 until hops) {
-        val next0 = frontierPairs
-          .select(col("vec_id"), col("nn_id").as("hop_id"))
-          .join(graphCk.select(col("hop_id"), col("nn_id")), Seq("hop_id"))
-          .where(col("nn_id") =!= col("vec_id"))
-          .select(col("vec_id"), col("nn_id")).distinct()
-        // only an intermediate hop's frontier has two consumers
-        val next = if (h < hops - 1) next0.localCheckpoint(false) else next0
-        accPairs = accPairs.unionByName(next)
-        frontierPairs = next
-      }
-      return accPairs.distinct()
-        .join(emb.select(col("vec_id"), col("v").as("v1")), Seq("vec_id"))
-        .join(emb.select(col("vec_id").as("nn_id"), col("v").as("v2")),
-          Seq("nn_id"))
-        .select(col("vec_id"), col("nn_id"),
-          round(cosine("v1", "v2"), 6).as("cos_sim"))
+    // r13 (guide §2.3 "shuffle keys instead of payloads"): the
+    // walk enumerates PAIRS ONLY — two longs per
+    // row through every hop join and distinct instead of
+    // (vec_id, nn_id, cos_sim) — and attaches the exact cosine ONCE
+    // over the final distinct candidate set. The old accumulator
+    // recomputed cosines for every already-scored pair on every hop
+    // (hop 2 re-derived most of hop 1's and hop 0's pairs before
+    // the distinct collapsed them). Bit-identical output: the
+    // candidate SET is unchanged (same joins, same distinct), and
+    // round(cosine(v1, v2), 6) is the same deterministic expression
+    // sharedIvfCand materialized, evaluated over the same vectors —
+    // re-deriving it per distinct pair cannot differ. The hop
+    // expands the FRONTIER (the previous hop's complete distinct
+    // expansion), not the accumulator: expand(acc_k) =
+    // expand(cand) ∪ expand(next_k) and expand(cand) = next_1 ⊆
+    // acc_k already, so the sets are equal by induction while the
+    // join input shrinks to the new pairs only. (Frontier-exact
+    // measured ~15% slower at sf1 in r10 on the old cosine-carrying
+    // rows, where re-expanding acc reused its exchange; on 2-long rows
+    // the frontier walk wins.) Measured at sf0.1 standalone, same
+    // session: q_ann_graph2 228.5 -> 168.1 MB shuffle, 9.3 -> 6.4 s;
+    // q_ann_graph 55.4 -> 42.7 MB, q_ann_graph2_recall 52.1 -> 36.7 MB.
+    // r14 (guide §2.4, duplicated subtrees): Catalyst cannot reuse
+    // the hop-1 frontier between its two consumers (the accumulator
+    // union and hop 2's join input) nor the graph build between the
+    // per-hop broadcasts — column pruning makes the copies
+    // canonically unequal, so the r13 plan recomputed hop 1's
+    // distinct twice and the graph's ObjectHashAggregate + explode
+    // three times. A LAZY localCheckpoint on each reused frame
+    // computes it once and serves every consumer from its blocks
+    // (bounded: pair rows are two longs; the bench's inter-entry
+    // hygiene unpersists them). Values are unchanged — the
+    // checkpoint only cuts lineage.
+    val graphCk =
+      if (hops > 1) graph.localCheckpoint(false) else graph
+    var accPairs = cand.select(col("vec_id"), col("nn_id"))
+    var frontierPairs = accPairs
+    for (h <- 0 until hops) {
+      val next0 = frontierPairs
+        .select(col("vec_id"), col("nn_id").as("hop_id"))
+        .join(graphCk.select(col("hop_id"), col("nn_id")), Seq("hop_id"))
+        .where(col("nn_id") =!= col("vec_id"))
+        .select(col("vec_id"), col("nn_id")).distinct()
+      // only an intermediate hop's frontier has two consumers
+      val next = if (h < hops - 1) next0.localCheckpoint(false) else next0
+      accPairs = accPairs.unionByName(next)
+      frontierPairs = next
     }
-    var acc = cand
-    var frontier = cand
-    for (_ <- 0 until hops) {
-      val pairs =
-          // path score = cos(q, parent) + cos(parent, nn), max over
-          // parents — two already-exact terms, no vector touched;
-          // bounded-heap top-R per query by (path desc, nn_id asc)
-          frontier.select(col("vec_id"), col("nn_id").as("hop_id"),
-              col("cos_sim").as("hop_cos"))
-            .join(graph, Seq("hop_id"))
-            .where(col("nn_id") =!= col("vec_id"))
-            .groupBy(col("vec_id"), col("nn_id"))
-            .agg(max(col("hop_cos") + col("edge_cos")).as("path"))
-            .groupBy(col("vec_id"))
-            .agg(expr(s"top_k_by_score(path, nn_id, $preRank)").as("top"))
-            .select(col("vec_id"), explode(col("top")).as("t"))
-            .select(col("vec_id"), col("t.doc_id").as("nn_id"))
-      // plain equi-joins on the vector side: a SHUFFLE_HASH hint was
-      // measured here and REJECTED (sf1: 126 → 328 s, 9.8 → 44.6 GB
-      // shuffle — the hint pins both joins to pre-AQE shuffle plans
-      // and forfeits the runtime join re-planning that was doing the
-      // real work); let AQE pick
-      val expanded = pairs
-        .join(emb.select(col("vec_id"), col("v").as("v1")), Seq("vec_id"))
-        .join(emb.select(col("vec_id").as("nn_id"), col("v").as("v2")),
-          Seq("nn_id"))
-        .select(col("vec_id"), col("nn_id"),
-          round(cosine("v1", "v2"), 6).as("cos_sim"))
-      acc = acc.unionByName(expanded)
-      frontier = expanded
-    }
-    acc.distinct()
+    accPairs.distinct()
+      .join(emb.select(col("vec_id"), col("v").as("v1")), Seq("vec_id"))
+      .join(emb.select(col("vec_id").as("nn_id"), col("v").as("v2")),
+        Seq("nn_id"))
+      .select(col("vec_id"), col("nn_id"),
+        round(cosine("v1", "v2"), 6).as("cos_sim"))
   }
 
   /** Recall@1 of an ANN result (vec_id, nn_id, cos_sim) against the
     * brute-force truth over the scale-invariant probe sample — the
-    * shared audit harness of q_ann_recall / q_ann_graph_recall and
-    * the frontier sweep.
+    * shared audit harness of q_ann_recall, q_ann_graph_recall and
+    * q_ann_graph2_recall.
     */
   private[graft] def annRecallOf(s: SparkSession, dir: String,
       annDf: DataFrame): DataFrame = {
-    CosineSim.register(s)
     val emb = embeddings(s, dir)
     val ann = annDf.select(col("vec_id"), col("cos_sim").as("ann_cos"))
     // Session-materialized (r14): the brute-force truth table is one
@@ -458,7 +380,6 @@ object Similarity {
     */
   private[graft] def retrainAnchors(s: SparkSession, dir: String,
       scored: DataFrame): DataFrame = {
-    CosineSim.register(s)
     val stats = scored.agg(count(lit(1)).as("n"),
         sum(when(col("is_outlier"), 1L).otherwise(0L)).as("n_out"))
       .where(col("n_out") * lit(100L) >= lit(RetrainPct.toLong) * col("n"))
@@ -533,9 +454,10 @@ object Similarity {
     */
   val KmIters = 4
 
-  /** Column form of the native expression; [[graft.Tables]] registers
-    * it on the session (Column construction from a raw Expression is
-    * private[sql] in Spark 4 — the function registry is the public door).
+  /** Column form of the native expression, which
+    * [[graft.functions.GraftExtensions]] injects into the session
+    * (Column construction from a raw Expression is private[sql] in
+    * Spark 4 — the function registry is the public door).
     */
   private def cosine(a: String, b: String): Column =
     call_function("cosine_sim", col(a), col(b))
@@ -802,7 +724,6 @@ object Similarity {
     // self-join sides, the dedup funnel's semantic stage, and the
     // corpus-release capstone — before this each consumer re-ran the
     // n·K centroid crossJoin. Billed as shared_semdedup in Bench.
-    CosineSim.register(s)
     val emb = embeddings(s, dir)
     val k = semSeedCount(n)
     val cents = broadcast(emb.where(col("vec_id") < k)
@@ -1050,7 +971,6 @@ object Similarity {
     */
   private[graft] def sharedIvfCand(s: SparkSession, dir: String): DataFrame =
     Scratch.materialize(s, s"ivf_cand_$dir") {
-      CosineSim.register(s)
       val probed = ivfShardedProbed(s, dir)
       probed.select(col("anchor_id"), col("shard"),
           col("vec_id"), col("v").as("v1"))
@@ -1083,7 +1003,6 @@ object Similarity {
   private[ops] def dedupEmbeddingExact(
       s: SparkSession, dir: String,
       maxRows: Long = ExactDedupMaxRows): DataFrame = {
-    CosineSim.register(s)
     // metadata-only parquet row count — no scan, no caching
     val n = Tables(s, dir, "embeddings").count()
     val effective = math.min(n, AuditSliceRows)
@@ -1162,7 +1081,6 @@ object Similarity {
     // cell aggregation (see q_embedding_centroid). avg is rounded to 6
     // (merge-order drift ~1e-16); cos itself is bit-exact.
     "q_kmeans_step" -> ((s, dir) => {
-      CosineSim.register(s)
       val emb = embeddings(s, dir)
       val KSeeds = 8
       val cents = broadcast(emb.where(col("vec_id") < KSeeds)
@@ -1191,7 +1109,6 @@ object Similarity {
     // unrolled recursive oracle carry bit-identical values. Output =
     // final-round centroid cells + member counts.
     "q_kmeans" -> ((s, dir) => {
-      CosineSim.register(s)
       val session = s
       import session.implicits._
       val emb = embeddings(s, dir)
@@ -1286,7 +1203,6 @@ object Similarity {
     // cosine + id tie-breaks; ADC is integer L2²). Top-10 by
     // (adc_dist, vec_id) among candidates.
     "q_ivf_pq_search" -> ((s, dir) => {
-      CosineSim.register(s)
       val probed = ivfProbed(s, dir) // shared two-level IVF quantizer
       val qAnchors = probed.where(col("vec_id") === 0)
         .select(col("anchor_id")).distinct()
@@ -1513,7 +1429,6 @@ object Similarity {
 
     // Brute-force cosine top-10 neighbors of vec_id = 0.
     "q_sim_search" -> ((s, dir) => {
-      CosineSim.register(s)
       val emb = embeddings(s, dir)
       val probe = broadcast(emb.where(col("vec_id") === 0).select(col("v").as("p")))
       emb.where(col("vec_id") =!= 0)
@@ -1537,7 +1452,6 @@ object Similarity {
     // argmax, and the oracle unrolls the identical MmrK rounds, so
     // the full greedy trajectory is hash-exact.
     "q_mmr_diversify" -> ((s, dir) => {
-      CosineSim.register(s)
       // pool + K×K sims are session-materialized (one corpus top-K
       // scan ever; ≤ MmrPoolK² rows of scratch)
       val pool = Scratch.materialize(s, s"mmr_pool_$dir") {
@@ -1591,7 +1505,6 @@ object Similarity {
     // (new topic mix, encoder change) moves cell occupancy before any
     // scalar column moves.
     "q_embedding_drift" -> ((s, dir) => {
-      CosineSim.register(s)
       val counts = ivfProbed(s, dir)
         .select((col("anchor_id") % 10).cast("int").as("bin"),
           col("vec_id"))
@@ -1613,7 +1526,6 @@ object Similarity {
     // runs over the B=√n bucket SUMMARY (never the postings), the
     // q_sequence_gaps bounded-summary-window contract.
     "q_cluster_balance" -> ((s, dir) => {
-      CosineSim.register(s)
       val n = Tables(s, dir, "embeddings").count()
       val m = fineCount(n)
       val cap = IvfSaturationFactor * NProbe * ((n + m - 1L) / m)
@@ -1648,7 +1560,6 @@ object Similarity {
     // re-train the quantizer). Cosines round to 6 before the argmax
     // rank (anchor_id tiebreak) — deterministic, oracle hash-exact.
     "q_semantic_outliers" -> ((s, dir) => {
-      CosineSim.register(s)
       outlierScore(ivfProbed(s, dir), anchorTable(s, dir))
         .orderBy(col("vec_id"))
     }),
@@ -1661,7 +1572,6 @@ object Similarity {
     // equal q_semantic_outliers row-for-row and SHARE its oracle.
     // Per-bid idempotent flag writes; restart tested.
     "q_stream_outliers" -> ((s, dir) => {
-      CosineSim.register(s)
       val work = graft.util.WorkDirs.temp("graft_stream_outliers")
       graft.streaming.Streams.outliersIngest(s, dir, work)
     }),
@@ -1675,7 +1585,6 @@ object Similarity {
     // over the union candidate set), so the hash gate proves the
     // incremental update equals the full re-index exactly.
     "q_ivf_retrain" -> ((s, dir) => {
-      CosineSim.register(s)
       retrainMerged(s, dir).orderBy(col("vec_id"))
     }),
 
@@ -1686,7 +1595,6 @@ object Similarity {
     // Streams.Store retry discipline). Census of the UPDATED store;
     // the oracle replays probed-minus-moved-plus-new.
     "q_stream_ivf_retrain" -> ((s, dir) => {
-      CosineSim.register(s)
       val work = graft.util.WorkDirs.temp("graft_stream_ivf_rt")
       graft.streaming.Streams.ivfRetrainIngest(s, dir, work)
     }),
@@ -1707,7 +1615,6 @@ object Similarity {
     // 1/(60+r_lex) + 1/(60+r_vec) is a fixed-order 2-term double sum
     // — deterministic and oracle hash-exact.
     "q_rrf_fusion" -> ((s, dir) => {
-      CosineSim.register(s)
       val lexTop = TextAnalysis.bm25Scores(s, dir)
         .where(col("doc_id") =!= 0)
         .orderBy(col("bm25").desc, col("doc_id")).limit(FusionTopK)
@@ -1741,7 +1648,6 @@ object Similarity {
     // Every coarse anchor id is also a fine anchor id, so each coarse
     // bucket owns ≥ 1 fine anchor (its own) — full coverage holds.
     "q_sim_ann" -> ((s, dir) => {
-      CosineSim.register(s)
       // the shared two-level quantizer + saturation shard, candidate
       // pairs session-materialized (see sharedIvfCand)
       val cand = sharedIvfCand(s, dir)
@@ -1764,7 +1670,6 @@ object Similarity {
     // rows this plan is the production form: assignment O(n^1.25),
     // verify bounded by bucket products, broadcast only anchors.
     "q_dedup_embedding_ivf" -> ((s, dir) => {
-      CosineSim.register(s)
       val probed = ivfShardedProbed(s, dir)
       probed.select(col("anchor_id"), col("shard"),
           col("vec_id").as("doc1"), col("v").as("v1"))
@@ -1796,7 +1701,6 @@ object Similarity {
     // same plan (with SampleMod raised) is the production audit at
     // 10⁹ rows.
     "q_ann_recall" -> ((s, dir) => {
-      CosineSim.register(s)
       val emb = embeddings(s, dir)
       // The audited ANN is the UNFILTERED q_sim_ann — pre-filtering
       // its probe side to the sample was tried and measured SLOWER
@@ -1883,7 +1787,6 @@ object Similarity {
     // sums in DECIMAL(28,20) (util.Exact discipline) so MRR is
     // order-independent and hash-exact.
     "q_retrieval_eval" -> ((s, dir) => {
-      CosineSim.register(s)
       val n = Tables(s, dir, "embeddings").count()
       // one projection, not embeddings() ⋈ labels — the label lives in
       // the same row, and a join below the crossJoin would put an
@@ -1932,7 +1835,6 @@ object Similarity {
     // + one per-probe aggregate + one 1-row reduce; the truncated
     // cosine runs on array slices inside the same codegen expression.
     "q_matryoshka_trunc" -> ((s, dir) => {
-      CosineSim.register(s)
       val emb = embeddings(s, dir)
       val n = Tables(s, dir, "embeddings").count()
       val probes = emb.where(probeSampled(col("vec_id"), n))
@@ -1975,7 +1877,6 @@ object Similarity {
     // quantizer cells × label as the block key, multi-probe for
     // boundary recall.
     "q_knn_graph" -> ((s, dir) => {
-      CosineSim.register(s)
       // the label block is a FILTER of the shared candidate table:
       // same-bucket pairs with equal labels (cos already rounded
       // before the shared distinct, so the heap's tie-break operates
@@ -2010,7 +1911,6 @@ object Similarity {
     // cosine, then smaller label), so the oracle replays hash-exactly;
     // hit = pred == held-out truth makes the row self-auditing.
     "q_label_propagation" -> ((s, dir) => {
-      CosineSim.register(s)
       // shared two-level IVF quantizer + saturation shard
       val probed = ivfShardedProbed(s, dir)
       val lbl = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"))
@@ -2062,7 +1962,6 @@ object Similarity {
     // production runs it: IVF routing + per-src top-k + one bounded
     // vote, all shuffles on bucket / src keys.
     "q_bitext_mine" -> ((s, dir) => {
-      CosineSim.register(s)
       val probed = ivfShardedProbed(s, dir)
       val lang = Tables(s, dir, "documents")
         .select(col("doc_id").as("vec_id"), col("lang"))
@@ -2112,7 +2011,6 @@ object Similarity {
     // negative gaps are the pairs worth training on. Deterministic
     // ranking on rounded cosines ⇒ hash-exact.
     "q_contrastive_pairs" -> ((s, dir) => {
-      CosineSim.register(s)
       val e = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           col("embedding").cast("array<double>").as("v"))
@@ -2169,7 +2067,6 @@ object Similarity {
     // oracle replays the batch CTE chain ⇒ streaming ≡ batch is
     // hash-checked. See Streams.ivfIngest for the state story.
     "q_stream_ivf" -> ((s, dir) => {
-      CosineSim.register(s)
       val work = graft.util.WorkDirs.temp("graft_stream_ivf")
       graft.streaming.Streams.ivfIngest(s, dir, work)
     })

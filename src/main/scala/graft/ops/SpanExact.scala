@@ -300,7 +300,6 @@ object SpanExact {
     val persisted = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val tag = if (toTrain) "t" else "e"
     try Scratch.materialize(s, s"span_sa_contam|$dir|h${horizon(s)}|$tag") {
-      graft.functions.Registry.ensure(s)
       val targetCnt = if (toTrain) col("ct") else col("cnt") - col("ct")
       val census = sharedPass(s, dir).where(col("kind") === 0)
         .select(col("g"), targetCnt.as("tc"))
@@ -353,7 +352,6 @@ object SpanExact {
     */
   private[graft] def saAdjacency(s: SparkSession, dir: String): DataFrame =
     Scratch.materialize(s, s"span_sa_adjlcp|$dir|h${horizon(s)}") {
-      graft.functions.Registry.ensure(s)
       val pass = sharedPass(s, dir)
       val toked = Tables.fanout(Tables(s, dir, "documents")
           .select(col("doc_id"), col("text")))
@@ -482,7 +480,6 @@ object SpanExact {
     */
   private def saGroupLcp(s: SparkSession, dir: String): DataFrame =
     Scratch.materialize(s, s"span_sa_glcp|$dir|h${horizon(s)}") {
-      graft.functions.Registry.ensure(s)
       val sizes = Tables.fanout(Tables(s, dir, "documents")
           .select(col("doc_id"), col("text")))
         .select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"))

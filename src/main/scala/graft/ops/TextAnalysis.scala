@@ -1461,7 +1461,6 @@ object TextAnalysis {
     // the census release-incremental (KMV merge law — see
     // q_theta_delta).
     "q_distinct_ngrams_theta" -> ((s, dir) => {
-      graft.functions.Registry.ensure(s)
       val g = ngramHashes(Tables.fanout(Tables(s, dir, "documents")
         .select(col("source"), col("text"))))
       ngramThetaCensus(g.groupBy(col("source"), col("n"))

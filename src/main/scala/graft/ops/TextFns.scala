@@ -40,7 +40,7 @@ object TextFns {
       .otherwise(array().cast("array<string>"))
 
   /** Deterministic 60-bit hash — the native [[graft.functions.H60]]
-    * expression (registered by [[graft.Tables]]); DuckDB mirror is
+    * expression (injected by [[graft.functions.GraftExtensions]]); DuckDB mirror is
     * [[sqlH60]], and the composed Spark form
     * `conv(substring(md5(c),1,15),16,10)` is bit-identical.
     */

@@ -14,8 +14,7 @@ import org.apache.spark.sql.graft.PlanBridge
 /** Native as-of join — the full custom-operator ladder rung (c) of
   * SURVEY §2.9/§7.5: a dedicated [[LogicalPlan]] node, a
   * [[SparkStrategy]] and a physical [[SparkPlan]], registered through
-  * `SparkSessionExtensions` (`GraftExtensions`) or session-locally via
-  * `experimental.extraStrategies`.
+  * `SparkSessionExtensions` (`GraftExtensions`).
   *
   * Semantics (reference: the "latest order at-or-before the event"
   * lookup of `q_asof_join`, cf. dags/ETL.py:37-154's
@@ -186,7 +185,6 @@ object AsOfJoin {
       leftTimeCol: String, rightTimeCol: String,
       tiebreakCols: Seq[String] = Nil): DataFrame = {
     val spark = left.sparkSession
-    PlanBridge.registerStrategy(spark, AsOfJoinStrategy)
     val lp = PlanBridge.analyzed(left)
     val rp = PlanBridge.analyzed(right)
     // resolve like the analyzer: honor spark.sql.caseSensitive and

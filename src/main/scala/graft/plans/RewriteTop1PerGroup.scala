@@ -44,10 +44,9 @@ import org.apache.spark.sql.types._
   * The rewritten plan preserves the Window output schema (rn becomes
   * a literal 1) and every attribute id, so parent plans resolve
   * unchanged. Kill switch: `spark.graft.rewriteTop1PerGroup=false`.
-  * Registered by `GraftExtensions.injectOptimizerRule`
-  * ([[graft.GraftSession.create]], spark-submit users), else by
-  * [[graft.functions.Registry.ensure]] (session-local experimental
-  * optimization) — never both.
+  * Registered only by `GraftExtensions.injectOptimizerRule`
+  * ([[graft.GraftSession.create]], or `spark.sql.extensions` for
+  * spark-submit users).
   */
 object RewriteTop1PerGroup extends Rule[LogicalPlan] {
 

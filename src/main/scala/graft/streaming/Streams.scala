@@ -233,7 +233,6 @@ object Streams {
 
   private def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = graft.util.Parquet.schema(spark, s"$dir/events.parquet")
     // file-source basePath must be a directory; glob-filter the table.
     // The WIDE glob (events*.parquet, admitting staged events_* shards
@@ -1175,7 +1174,6 @@ object Streams {
   private[streaming] def outliersRun(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.Similarity
-    graft.functions.CosineSim.register(spark)
     val (coarse0, fineBucket0) = Similarity.ivfQuantizer(spark, dir)
     val coarse = coarse0.cache()
     val fineBucket = fineBucket0.cache()
@@ -1313,7 +1311,6 @@ object Streams {
   private[streaming] def thetaRun(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.Govern
-    graft.functions.Registry.ensure(spark)
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       sketchAndPostings(batch, workDir, bid, ThetaSketches, ThetaPostings)
     }
@@ -1374,7 +1371,6 @@ object Streams {
   private[streaming] def ngramThetaRun(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.{Govern, TextAnalysis}
-    graft.functions.Registry.ensure(spark)
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       val g = TextAnalysis.ngramHashes(
         batch.select(col("source"), col("text"))).cache()
@@ -1439,7 +1435,6 @@ object Streams {
   private[streaming] def thetaDeltaStage(spark: SparkSession, dir: String,
       workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
     import graft.ops.{Dedup, Govern}
-    graft.functions.Registry.ensure(spark)
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
     val v1 = docs.where(col("doc_id") % 4 =!= 0)
@@ -1472,7 +1467,6 @@ object Streams {
   private[streaming] def thetaDeltaRun(spark: SparkSession, dir: String,
       workDir: String): DataFrame = withStatePartitions(spark) {
     import graft.ops.Govern
-    graft.functions.Registry.ensure(spark)
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       sketchAndPostings(batch, workDir, bid, DeltaSketches, DeltaPostings)
     }
@@ -1693,7 +1687,6 @@ object Streams {
       // store-merge ≡ full recompute against
       // graft.ops.Govern.sharedThetaSketches)
       if (needTheta) {
-        graft.functions.Registry.ensure(spark)
         V1Theta.write(
           sh.join(v1.select(col("doc_id"), col("source")), Seq("doc_id"))
             .groupBy(col("source"))

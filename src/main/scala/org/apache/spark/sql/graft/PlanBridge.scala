@@ -37,21 +37,6 @@ object PlanBridge {
       : org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** Session-local physical-strategy registration (idempotent), for
-    * sessions not built with the `GraftExtensions` hook. Checks the
-    * planner's FULL strategy list, so an extensions-wired session is
-    * left untouched; synchronized because `extraStrategies` is a
-    * plain read-modify-write var.
-    */
-  def registerStrategy(spark: SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit =
-    synchronized {
-      val cs = spark.asInstanceOf[classic.SparkSession]
-      if (!cs.sessionState.planner.strategies.contains(strategy))
-        cs.experimental.extraStrategies =
-          cs.experimental.extraStrategies :+ strategy
-    }
-
   /** The map output bytes of a run shuffle stage, the total AQE's
     * partition coalescing sizes its partitions by (`None` before it
     * has run).

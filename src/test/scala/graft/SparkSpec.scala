@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites. */
+/** One shared local session for all suites, built the way every
+  * deployment builds its session: through [[GraftSession.create]].
+  */
 trait SparkSpec {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -38,17 +40,11 @@ trait SparkSpec {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the GraftSession.create default: JVM case mapping, not ICU's
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("spark-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a spark.* system property reaches the session's SparkConf; the
+    // forked test JVM already disables the UI the same way (build.sbt)
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("spark-warehouse").toString)
+    val s = GraftSession.create("local[4]", "graft-spec", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

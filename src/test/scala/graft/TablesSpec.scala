@@ -70,11 +70,10 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
 
   // Tables pins the schema its footer names; it must be exactly the
   // one a schema-less read infers, under either NTZ inference setting
-  // (events with nanosAsLong on, as Tables reads it)
+  // (events with nanosAsLong on, as every GraftSession reads it)
   for (sf <- Seq("sf0.001", "sf0.01"); t <- Tables.all) {
     test(s"pinned schema equals the inferred schema: $sf $t") {
       val path = java.nio.file.Paths.get(dir).resolveSibling(sf).resolve(s"$t.parquet").toString
-      if (t == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
       try for (on <- Seq("false", "true")) {
         spark.conf.set(ntz, on)
@@ -110,7 +109,7 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
 
   test("native functions register once per session") {
     val reg = spark.sessionState.functionRegistry
-    def registered() = graft.functions.Registry.builders.map { case (n, _) =>
+    def registered() = graft.functions.Registry.builders.map { case (n, _, _) =>
       val id = org.apache.spark.sql.catalyst.FunctionIdentifier(n)
       (n, reg.lookupFunction(id).get, reg.lookupFunctionBuilder(id).get)
     }

@@ -10,7 +10,6 @@ class MisraGriesSpec extends AnyFunSuite with SparkSpec {
   // low-index items are heavy and the tail is long.
   private def fixture = {
     import spark.implicits._
-    Registry.ensure(spark)
     (1L to 3000L).flatMap(i => (1 to 30).filter(w => i % w == 0).map(w => s"w$w"))
       .toDF("item")
   }

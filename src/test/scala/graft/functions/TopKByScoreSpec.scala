@@ -9,7 +9,6 @@ class TopKByScoreSpec extends AnyFunSuite with SparkSpec {
 
   private def fixture = {
     import spark.implicits._
-    Registry.ensure(spark)
     // scores with deliberate ties (i % 7) so the id tiebreak is exercised
     (1L to 200L).map(i => (s"g${i % 5}", i, (i % 7).toDouble))
       .toDF("grp", "id", "score")
@@ -39,7 +38,6 @@ class TopKByScoreSpec extends AnyFunSuite with SparkSpec {
 
   test("groups smaller than k return the whole group, best-first") {
     import spark.implicits._
-    Registry.ensure(spark)
     val tiny = Seq(("a", 1L, 0.5), ("a", 2L, 0.9)).toDF("grp", "id", "score")
     val out = tiny.groupBy("grp")
       .agg(expr("top_k_by_score(score, id, 10)").as("top"))

@@ -30,7 +30,6 @@ object GovernProperties extends Properties("ops.govern") with SparkSpec {
       Gen.listOf(Gen.chooseNum(0L, 30L)),       // tight range -> many dups
       Gen.chooseNum(1, 8),                       // k
       Gen.chooseNum(1, 5)) { (xs, k, parts) =>
-      graft.functions.Registry.ensure(spark)
       val want = xs.distinct.sorted.take(k)
       val got =
         if (xs.isEmpty) Seq.empty[Long]

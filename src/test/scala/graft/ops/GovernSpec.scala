@@ -23,7 +23,6 @@ class GovernSpec extends AnyFunSuite with SparkSpec {
 
   test("kmv_min_k dedups in-sketch and returns ascending distinct minima") {
     import spark.implicits._
-    graft.functions.Registry.ensure(spark)
     val got = Seq(5L, 5L, 5L, 1L, 9L, 1L, 7L).toDF("h")
       .agg(call_function("kmv_min_k", col("h"), lit(3)))
       .head().getSeq[Long](0)

@@ -68,7 +68,6 @@ object JaccardProperties extends Properties("ops.jaccard") with SparkSpec {
 
   property("inverted-index jaccardPairs == local reference model") =
     forAll(genCorpus) { docs =>
-      graft.functions.Registry.ensure(spark)
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val got = Dedup.jaccardPairs(df, T).collect()

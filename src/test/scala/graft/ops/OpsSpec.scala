@@ -163,7 +163,6 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
 
   test("jaccardPairs dispatches by df distribution: prefix on heavy, inverted on flat") {
     import spark.implicits._
-    graft.functions.Registry.ensure(spark) // h60 — normally via Tables
 
     // Heavy-df corpus: every doc shares a 6-token stop-phrase (df = n
     // for its 4 pure-stop shingles, so Σ df²/Σ df ≈ n/2 >>
@@ -476,7 +475,6 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     // documents the round-6 claim that existing IVF results are
     // unchanged: the largest real bucket is ~2.3× expected, the cap
     // is 4× — so every nShards == 1 and every shard == 0
-    graft.functions.CosineSim.register(spark)
     val sharded = Similarity.ivfShardedProbed(spark, "/root/testdata/sf0.001")
     assert(sharded.agg(max(col("shard"))).head().getLong(0) == 0L)
   }
@@ -1822,7 +1820,6 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
   test("ivf retrain: fires on the fixture, strictly improves moved coverage") {
     import graft.ops.Similarity
     val dir = "/root/testdata/sf0.001"
-    graft.functions.CosineSim.register(spark)
     val scoredRows = Similarity.queries("q_semantic_outliers")(spark, dir)
       .collect()
     val nOut = scoredRows.count(_.getBoolean(3)).toLong
@@ -2318,38 +2315,6 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(r(1L) == 1L * 2 + 2L, r.toString)
     assert(r(0L) == (4 + 4) + (3 + 5) + 10L, r.toString)
     assert(!r.contains(16L) && !r.contains(32L) && !r.contains(64L))
-  }
-
-  test("graph2 path pre-rank param: candidates subset the exact walk, top-1 bounded both sides") {
-    val dir = "/root/testdata/sf0.001"
-    // the pre-ranked walk can only PRUNE: each hop's survivors are a
-    // subset of the exact frontier expansion, so the candidate set and
-    // the per-query top-1 are dominated by the exact 2-hop form —
-    // while still dominating the IVF-only baseline (cand ⊆ acc)
-    val pre = Similarity.annGraphCandidates(spark, dir,
-        Similarity.GraphDegree, 2, Similarity.GraphPreRankR)
-      .select("vec_id", "nn_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val full = Similarity.annGraphCandidates(spark, dir,
-        Similarity.GraphDegree, 2)
-      .select("vec_id", "nn_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pre.subsetOf(full),
-      s"pre-ranked walk invented ${(pre -- full).size} pairs")
-    assert(pre.size < full.size, "pre-rank pruned nothing — vacuous")
-    val top = (q: org.apache.spark.sql.DataFrame) => q.collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val preTop = top(Similarity.annGraphSearch(spark, dir,
-      Similarity.GraphDegree, 2, Similarity.GraphPreRankR))
-    val fullTop = top(Similarity.annGraphSearch(spark, dir,
-      Similarity.GraphDegree, 2))
-    val ivfTop = top(Similarity.queries("q_sim_ann")(spark, dir)
-      .select("vec_id", "nn_id", "cos_sim"))
-    preTop.foreach { case (v, c) =>
-      assert(c <= fullTop(v), s"vec $v: pre top-1 $c beats exact ${fullTop(v)}")
-      ivfTop.get(v).foreach(i =>
-        assert(c >= i, s"vec $v: pre top-1 $c below IVF baseline $i"))
-    }
   }
 
   test("q_ann_graph: expansion candidates are a superset, recall can only improve") {

@@ -1,35 +1,24 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{GraftSession, SparkSpec}
+import graft.SparkSpec
 
-/** The runtime rule that sorts a small aggregate in one partition,
-  * in a session built by [[GraftSession.create]] (the shared suite
-  * session carries no extensions).
+/** The runtime rule that sorts a small aggregate in one partition, as
+  * the shared suite session (a [[graft.GraftSession.create]] session)
+  * runs it.
   */
 class SortSmallResultSpec extends AnyFunSuite with SparkSpec {
-
-  private lazy val gs: SparkSession = {
-    val prev = spark // keep the shared suite session to restore
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try GraftSession.create("local[2]", "sort-small-result-spec", 4)
-    finally {
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
-    }
-  }
 
   /** An `orders`-shaped table the size of sf0.001's: 1,500 orders over
     * 100 customers.
     */
-  private def orders: DataFrame = gs.range(1500).select(
+  private def orders: DataFrame = spark.range(1500).select(
     col("id").as("o_orderkey"),
     (col("id") % 100).as("o_custkey"),
     ((col("id") * 7919) % 100000 / 100.0).as("o_totalprice"))
@@ -44,7 +33,7 @@ class SortSmallResultSpec extends AnyFunSuite with SparkSpec {
     * aggregates shuffle a few MB, more than AQE's 1 MB min partition
     * size and less than its 64 MB advisory size.
     */
-  private def midSortedAgg: DataFrame = gs.range(200000)
+  private def midSortedAgg: DataFrame = spark.range(200000)
     .select(((col("id") * 7919) % 200000).as("k"), (hash(col("id")) % 100000 / 100.0).as("v"))
     .groupBy(col("k")).agg(sum(col("v")).as("total"), count(lit(1)).as("n"))
     .orderBy(col("total").desc, col("k"))
@@ -69,8 +58,8 @@ class SortSmallResultSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    kvs.foreach { case (k, v) => gs.conf.set(k, v) }
-    try body finally kvs.foreach { case (k, _) => gs.conf.unset(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   test("a small sorted aggregate sorts in one partition: 2 jobs, no range exchange") {
@@ -135,7 +124,7 @@ class SortSmallResultSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("GraftSession.create registers the rule once, as an AQE runtime rule") {
-    val rules = gs.sessionState.adaptiveRulesHolder.runtimeOptimizerRules
+    val rules = spark.sessionState.adaptiveRulesHolder.runtimeOptimizerRules
     assert(rules.count(_.isInstanceOf[SortSmallResultInOnePartition]) == 1, rules)
   }
 }

@@ -459,7 +459,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("ivf retrain: the store update replaces exactly the moved vectors' rows") {
     import graft.ops.Similarity
-    graft.functions.CosineSim.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft_ivf_rt").toString
     Streams.ivfRetrainIngest(spark, dir, work)
     val before = spark.read.parquet(s"$work/postings_b*")
@@ -478,7 +477,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("foreachBatch ivf ingest: streamed postings == batch assignment row-for-row") {
-    graft.functions.CosineSim.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft_sivf_spec").toString
     val census = Streams.ivfIngest(spark, dir, work)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -515,7 +513,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // bid-keyed idempotent postings must survive a checkpoint resume —
     // drain a 2-shard prefix, "crash", stage the third, resume, and
     // the drained store must STILL equal the batch assignment.
-    graft.functions.CosineSim.register(spark)
     import graft.ops.Similarity
     val work = java.nio.file.Files.createTempDirectory("graft_sivf_resume").toString
     val emb = Similarity.embeddings(spark, dir)
@@ -831,7 +828,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // (graft.ops.Govern.sharedThetaSketches). This is the loop the
     // governance family and the release store close.
     import graft.ops.{Dedup, Govern}
-    graft.functions.Registry.ensure(spark)
     val work = java.nio.file.Files
       .createTempDirectory("graft_v1theta").toString
     Streams.releaseStage(spark, dir, work, 3)
