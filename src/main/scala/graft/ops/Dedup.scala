@@ -379,17 +379,10 @@ object Dedup {
     // not a .cache() — a cache built inside a once-per-session
     // materialize would pin executor storage with zero future readers
     // (every later consumer scans the pairs parquet).
-    val vec = Scratch.materialize(s, s"minhash_vec_$dir") {
-      // per-doc minima are invariant to the postings dedup, so the
-      // shared materialized postings replace the raw shingle pass
-      val hm = sharedShinglePostings(s, dir)
-        .select(col("doc_id"), (col("h") % P).as("hm"))
-      val mhAggs = (0 until K).map(i =>
-        min((lit(aCoef(i)) * col("hm") + lit(bCoef(i))) % P).as(s"mh_$i"))
-      hm.groupBy("doc_id").agg(mhAggs.head, mhAggs.tail: _*)
-        .select(col("doc_id"),
-          array((0 until K).map(i => col(s"mh_$i")): _*).as("v"))
-    }
+    // per-doc minima are invariant to the postings dedup, so the
+    // shared materialized postings replace the raw shingle pass
+    val vec = Scratch.materialize(s, s"minhash_vec_$dir")(
+      minhashSignaturesOfHashes(sharedShinglePostings(s, dir)))
     val bands = minhashLiveBands(minhashBands(vec))
     val cand = bands.select(col("band"), col("sig"), col("doc_id").as("doc1"))
       .join(bands.select(col("band"), col("sig"), col("doc_id").as("doc2")),
@@ -601,8 +594,6 @@ object Dedup {
       require(rounds <= 64, "star rounds exceeded 2·log2(maxLong) — non-convergence bug")
       val next = smallStar(largeStar(e)).localCheckpoint()
       val nextSig = signature(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"starComponents round=$rounds edges=${nextSig._1} sig=${nextSig._2}")
       e = next
       converged = nextSig == sig
       sig = nextSig

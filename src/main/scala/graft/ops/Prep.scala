@@ -31,62 +31,6 @@ object Prep {
   val MinScore = 0.5
   val MinTokens = 10
 
-  /** Conf key flipping q_budget_fill to [[budgetFillTwoPass]]. */
-  val BudgetFillTwoPassConf = "spark.graft.budgetFillTwoPass"
-
-  /** Shard count for the two-pass cumulative sum — each source's
-    * seeded-hash order splits into this many consecutive h-range
-    * segments, so the widest window partition is ~|mega-source|/64
-    * instead of the whole source. Production sizes it like
-    * `semSeedCount` (grow with the corpus); fixed here because the
-    * admitted set is shard-invariant (proven in OpsSpec), so the
-    * constant is NOT an oracle convention — any value yields the
-    * same rows.
-    */
-  val BudgetFillShards = 64L
-
-  /** The mega-source escape hatch for q_budget_fill's per-source
-    * cumulative window (r11 verdict item 3): the same (h, doc_id)
-    * admission order, cumsum'd in two bounded passes instead of one
-    * corpus-wide window partition.
-    *
-    *   1. shard = h div (2⁶⁰/64): h60 is uniform on [0, 2⁶⁰), so the
-    *      64 h-ranges are ~equal consecutive SEGMENTS of each
-    *      source's order (ties in h share a shard by construction —
-    *      a boundary can never split equal keys);
-    *   2. pass A: per-(source, shard) partial token sums and row
-    *      counts — one map-side-combined aggregate, 64·|sources|
-    *      output rows;
-    *   3. offsets: exclusive prefix sums over those partials, a
-    *      window over ≤64 rows per source (bounded by construction);
-    *   4. pass B: shard-local cumsum + row_number (each partition
-    *      ~source/64), plus the broadcast shard offsets.
-    *
-    * cum_tok and pos are exactly the window form's values — segment
-    * concatenation is associative — so the admitted set, every output
-    * column, and the oracle hash are unchanged (OpsSpec proves
-    * equality on the gated corpus and on a crafted mega-source).
-    */
-  private[ops] def budgetFillTwoPass(withBudget: DataFrame): DataFrame = {
-    val span = (1L << 60) / BudgetFillShards
-    val sharded = withBudget.withColumn("shard", expr(s"h div $span"))
-    val parts = sharded.groupBy(col("source"), col("shard"))
-      .agg(sum(col("n_tok")).as("st"), count(lit(1)).as("cn"))
-    val offW = Window.partitionBy(col("source")).orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = parts
-      .select(col("source"), col("shard"),
-        coalesce(sum(col("st")).over(offW), lit(0L)).as("start_tok"),
-        coalesce(sum(col("cn")).over(offW), lit(0L)).as("start_pos"))
-    val local = Window.partitionBy(col("source"), col("shard"))
-      .orderBy(col("h"), col("doc_id"))
-    sharded.join(broadcast(offs), Seq("source", "shard"))
-      .withColumn("cum_tok", col("start_tok") + sum(col("n_tok")).over(local
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("pos",
-        (col("start_pos") + row_number().over(local)).cast("int"))
-  }
-
   val queries: Map[String, Q] = Map(
     "q_prep_pipeline" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
@@ -178,12 +122,7 @@ object Prep {
     // run materializes `base` once instead), one |1|-row broadcast
     // for the budget, one cumulative-sum window partitioned BY
     // SOURCE. A single mega-source makes that partition wide; the
-    // 100 TB escape hatch is [[budgetFillTwoPass]] (per-shard partial
-    // token sums → per-shard start offsets → shard-local cumsum) —
-    // executable behind `spark.graft.budgetFillTwoPass`, admitted set
-    // proven equal to the window form in OpsSpec (the q_ivf_retrain
-    // incremental-≡-full precedent). The window form stays the gated
-    // default because it IS the declarative contract.
+    // window form stays because it IS the declarative contract.
     "q_budget_fill" -> ((s, dir) => {
       val base = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"),
@@ -193,18 +132,12 @@ object Prep {
         countDistinct(col("source")).as("n_sources"))
       val withBudget = base.crossJoin(broadcast(tot))
         .withColumn("budget", expr("total_tok div (2 * n_sources)"))
-      val filled =
-        if (s.conf.get(BudgetFillTwoPassConf, "false").toBoolean)
-          budgetFillTwoPass(withBudget)
-        else {
-          val order = Window.partitionBy(col("source"))
-            .orderBy(col("h"), col("doc_id"))
-          withBudget
-            .withColumn("cum_tok", sum(col("n_tok")).over(order
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-            .withColumn("pos", row_number().over(order))
-        }
-      filled
+      val order = Window.partitionBy(col("source"))
+        .orderBy(col("h"), col("doc_id"))
+      withBudget
+        .withColumn("cum_tok", sum(col("n_tok")).over(order
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("pos", row_number().over(order))
         .where(col("cum_tok") <= col("budget"))
         .select(col("source"), col("pos"), col("doc_id"), col("n_tok"),
           col("cum_tok"), col("budget"))

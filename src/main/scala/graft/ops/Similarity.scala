@@ -145,15 +145,14 @@ object Similarity {
   private[graft] def annGraphCandidates(s: SparkSession, dir: String,
       hops: Int): DataFrame = {
     val cand = sharedIvfCand(s, dir)
-    // the stored graph: top-G per vector WITH the edge weight (the
-    // exact cosine the IVF index already paid for), bounded heap —
-    // no window over the candidate stream
+    // the stored graph: top-G per vector by the exact cosine the IVF
+    // index already paid for, bounded heap — no window over the
+    // candidate stream; the walk reads only the edge ends
     val graph = cand.groupBy(col("vec_id"))
       .agg(expr(s"top_k_by_score(cos_sim, nn_id, $GraphDegree)").as("top"))
       .select(col("vec_id").as("hop_id"),
         explode(col("top")).as("t"))
-      .select(col("hop_id"), col("t.doc_id").as("nn_id"),
-        col("t.score").as("edge_cos"))
+      .select(col("hop_id"), col("t.doc_id").as("nn_id"))
     val emb = embeddings(s, dir)
     // r13 (guide §2.3 "shuffle keys instead of payloads"): the
     // walk enumerates PAIRS ONLY — two longs per

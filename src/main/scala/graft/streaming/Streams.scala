@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import graft.util.Exact._
@@ -58,18 +58,26 @@ case class SessionOut(user_id: Long, sess_start: java.sql.Timestamp,
   */
 object Streams {
 
-  /** Conf override for [[StatePartitions]]. Stateful micro-batch
-    * drains pay a per-partition state-store cost every trigger (one
-    * store instance per shuffle partition), so a test-scale stream with
-    * 32 shuffle partitions spends more time opening/committing stores
-    * than processing rows: [[withStatePartitions]] right-sizes the
-    * state partitioning for the drain and restores the session setting
-    * after. Production sizes this to stream volume (a stateful query
-    * pins it into its checkpoint at first start anyway).
+  /** Conf override for [[StatePartitions]], the shuffle (and so
+    * state-store) partition count of every streaming twin's query.
+    * Stateful micro-batch drains pay a per-partition state-store cost
+    * every trigger (one store instance per shuffle partition), so a
+    * test-scale stream with 32 shuffle partitions spends more time
+    * opening/committing stores than processing rows. Production sizes
+    * this to stream volume (a stateful query pins it into its
+    * checkpoint at first start anyway).
     */
   val StatePartitionsConf = "spark.graft.streaming.statePartitions"
 
   private val StatePartitions = 4
+
+  /** Micro-batches every staged twin replays its source as. */
+  private val Shards = 3
+
+  /** [[sessionizeTimeoutToTable]]'s data shards; its two sentinel
+    * batches are the shard ids after them.
+    */
+  private val SessionShards = 4
 
   /** Largest micro-batch shingle-posting table (rows, two BIGINTs
     * each) the crossmodal ingest guard will broadcast as the probe
@@ -77,33 +85,21 @@ object Streams {
     * ingest burst can never blow the driver/executor broadcast limit.
     */
   private val CrossmodalBroadcastMaxRows = 2000000L
-  /** Drain-scoped conf window: right-sized state partitioning for
-    * every twin, plus — where the call site passes `aqeOff = true` —
-    * AQE disabled for the foreachBatch batch queries inside the drain.
-    *
-    * AQE history (measure, don't assume): round 8 tried AQE OFF
-    * globally here and REVERTED it (q_stream_crossmodal regressed
-    * 7.6 → 11.5 s on its then-current plan). Round 13 re-measured
-    * per-twin with an interleaved A/B (fresh work dir per rep,
-    * staging untimed): the release drain is 2.4 s FASTER with AQE off
-    * (median 8.2 vs 10.6 s — its per-trigger plan has 10+ tiny
-    * exchanges and each AQE stage materialization is an extra
-    * sequentially-scheduled job), crossmodal is now neutral-to-
-    * positive (7.5 vs 7.9 s — the r8 plan changed: pinned schemas,
-    * broadcast probe), and the theta twins are within noise. So the
-    * per-twin choice is fixed at each call site: AQE off for the
-    * release and crossmodal drains, on for every other twin.
+
+  /** The session conf a streaming query starts and runs under:
+    * [[StatePartitionsConf]] shuffle partitions, and AQE on unless
+    * `aqeOff`.
     */
-  private def withStatePartitions[T](spark: SparkSession,
-      aqeOff: Boolean = false)(body: => T): T =
-    withConfs(spark,
-      "spark.sql.shuffle.partitions" ->
-        spark.conf.get(StatePartitionsConf, StatePartitions.toString),
-      "spark.sql.adaptive.enabled" -> (!aqeOff).toString)(body)
+  private def queryConfs(spark: SparkSession,
+      aqeOff: Boolean): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" ->
+      spark.conf.get(StatePartitionsConf, StatePartitions.toString),
+    "spark.sql.adaptive.enabled" -> (!aqeOff).toString)
 
   /** Run `body` with `confs` set on the session, then put every key
     * back: its prior value where it had one set, unset where it had
-    * none.
+    * none. Only the two runners, [[drain]] and [[toMemory]], call it,
+    * so a twin changes session conf only while its query runs.
     */
   private def withConfs[T](spark: SparkSession,
       confs: (String, String)*)(body: => T): T = {
@@ -129,15 +125,37 @@ object Streams {
     * twins never come here and deliberately KEEP processAllAvailable
     * ([[toMemory]]) — the stateful-window ones' final-eviction
     * semantics depend on the default trigger's extra cycle.
+    *
+    * The query starts and runs inside [[queryConfs]]'s window, so the
+    * batch queries of `body` see the state-partition count and, where
+    * the twin passes `aqeOff = true`, AQE disabled; the caller's values
+    * are back once the drain returns or throws. Work a twin runs
+    * before or after its drain runs at the session's own settings.
+    *
+    * AQE history (measure, don't assume): round 8 tried AQE OFF
+    * globally here and REVERTED it (q_stream_crossmodal regressed
+    * 7.6 → 11.5 s on its then-current plan). Round 13 re-measured
+    * per-twin with an interleaved A/B (fresh work dir per rep,
+    * staging untimed): the release drain is 2.4 s FASTER with AQE off
+    * (median 8.2 vs 10.6 s — its per-trigger plan has 10+ tiny
+    * exchanges and each AQE stage materialization is an extra
+    * sequentially-scheduled job), crossmodal is now neutral-to-
+    * positive (7.5 vs 7.9 s — the r8 plan changed: pinned schemas,
+    * broadcast probe), and the theta twins are within noise. So the
+    * per-twin choice is fixed at each call site: AQE off for the
+    * release and crossmodal drains, on for every other twin.
     */
-  private def drain(stream: DataFrame, workDir: String)(
-      body: (DataFrame, Long) => Unit): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch(body)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try { q.awaitTermination(); () } finally q.stop()
+  private[streaming] def drain(stream: DataFrame, workDir: String,
+      aqeOff: Boolean = false)(body: (DataFrame, Long) => Unit): Unit = {
+    val spark = stream.sparkSession
+    withConfs(spark, queryConfs(spark, aqeOff): _*) {
+      val q = stream.writeStream
+        .option("checkpointLocation", s"$workDir/ckpt")
+        .foreachBatch(body)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try { q.awaitTermination(); () } finally q.stop()
+    }
   }
 
   /** [[drain]] over the shards staged in `srcDir` ([[stageShards]]),
@@ -145,9 +163,10 @@ object Streams {
     * head every staged foreachBatch twin shares.
     */
   private def drainStaged(spark: SparkSession, srcDir: String,
-      workDir: String)(body: (DataFrame, Long) => Unit): Unit =
+      workDir: String, aqeOff: Boolean = false)(
+      body: (DataFrame, Long) => Unit): Unit =
     drain(spark.readStream.schema(graft.util.Parquet.schema(spark, srcDir))
-      .option("maxFilesPerTrigger", "1").parquet(srcDir), workDir)(body)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir), workDir, aqeOff)(body)
 
   /** A foreachBatch twin's standing store: the parquet directory
     * `workDir/<prefix>`, or one `workDir/<prefix><bid>` directory per
@@ -220,15 +239,22 @@ object Streams {
   private val PostingsDdl = "source STRING, h BIGINT"
 
   /** Run a memory-sink twin's query to completion and return its sink
-    * table: `processAllAvailable` (not [[drain]]'s AvailableNow — the
+    * table: `df` streams in `outputMode` to the memory table `table`,
+    * `processAllAvailable` (not [[drain]]'s AvailableNow — the
     * stateful-window twins' final eviction depends on the default
-    * trigger's extra cycle), then stop.
+    * trigger's extra cycle), then stop. The query starts and runs
+    * inside [[queryConfs]]'s window (AQE on) plus the twin's `extra`
+    * confs; the caller's values are back once it returns or throws.
     */
-  private def toMemory(w: org.apache.spark.sql.streaming.DataStreamWriter[Row],
-      table: String): DataFrame = {
-    val q = w.format("memory").queryName(table).start()
-    try q.processAllAvailable() finally q.stop()
-    q.sparkSession.table(table)
+  private def toMemory(df: DataFrame, outputMode: String, table: String,
+      extra: (String, String)*): DataFrame = {
+    val spark = df.sparkSession
+    withConfs(spark, queryConfs(spark, aqeOff = false) ++ extra: _*) {
+      val q = df.writeStream.outputMode(outputMode)
+        .format("memory").queryName(table).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    spark.table(table)
   }
 
   private def eventsStream(spark: SparkSession, dir: String,
@@ -275,11 +301,11 @@ object Streams {
     * are scored the moment they land, and only survivors reach the
     * expensive dedup/embedding stages downstream.
     */
-  def qualityCountsToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def qualityCountsToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     val agg = graft.ops.TextAnalysis.gopherFlags(docsStream(spark, dir))
       .where(col("keep"))
       .groupBy(col("lang")).agg(count(lit(1)).as("n_kept"))
-    toMemory(agg.writeStream.outputMode("complete"), table)
+    toMemory(agg, "complete", table)
   }
 
   /** Streaming PII redaction gate: the batch scrub projection
@@ -295,9 +321,9 @@ object Streams {
     * scrub is deterministic, so a downstream idempotent sink
     * converges).
     */
-  def piiToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def piiToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     val scrubbed = graft.ops.TextAnalysis.piiScrub(docsStream(spark, dir))
-    toMemory(scrubbed.writeStream.outputMode("append"), table)
+    toMemory(scrubbed, "append", table)
   }
 
   /** Streaming watermark-detection census — the foreachBatch
@@ -313,15 +339,14 @@ object Streams {
     * own idempotent per-bid partial (at-least-once safe). One oracle
     * text grades both forms.
     */
-  def watermarkIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
+  def watermarkIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
     // the CANONICAL documents staging projection — watermark, doremi,
     // crossmodal and contamination all stage this exact frame, so the
     // staging cache key coincides and the shard files are built once per
     // session for the whole documents-twin family
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
-    stageShards(docs, workDir, shards, keyCol = "doc_id",
+    stageShards(docs, workDir, Shards, keyCol = "doc_id",
       cacheKey = Some(s"$dir|documents"))
     watermarkRun(spark, workDir)
   }
@@ -334,7 +359,7 @@ object Streams {
     * doremiRun shape).
     */
   private[streaming] def watermarkRun(spark: SparkSession,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.TextAnalysis
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       // one staged file = one partition — spread the bigram explode
@@ -359,27 +384,27 @@ object Streams {
     * never changes mid-query. At 100 TB/day the same plan runs with
     * the dim refreshed per batch via a Delta/parquet snapshot path.
     */
-  def enrichToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def enrichToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     val dim = broadcast(graft.Tables(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment")))
     val agg = eventsStream(spark, dir)
       .join(dim, col("user_id") === col("c_custkey")) // stream-static inner
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
-    toMemory(agg.writeStream.outputMode("complete"), table)
+    toMemory(agg, "complete", table)
   }
 
   /** Streaming tumbling 1-hour aggregation with a 1-hour watermark,
     * drained to a memory table.
     */
-  def tumblingToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def tumblingToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     val agg = eventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("total_value"))
-    toMemory(agg.writeStream.outputMode("complete"), table)
+    toMemory(agg, "complete", table)
   }
 
   /** Custom sessionization via flatMapGroupsWithState — the
@@ -393,7 +418,7 @@ object Streams {
     * query in StreamingSpec.
     */
   def sessionsToTable(spark: SparkSession, dir: String, table: String,
-      gapMinutes: Int = 30): DataFrame = withStatePartitions(spark) {
+      gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
     val gapMicros = gapMinutes * 60L * 1000000L
     val perUser = eventsStream(spark, dir)
@@ -427,7 +452,7 @@ object Streams {
           }
           sessions.iterator
       }
-    toMemory(perUser.toDF().writeStream.outputMode("append"), table)
+    toMemory(perUser.toDF(), "append", table)
   }
 
   /** Timeout-closed streaming sessionization — the form of
@@ -454,7 +479,7 @@ object Streams {
     * session_window convention).
     */
   def sessionizeTimeoutToTable(spark: SparkSession, dir: String,
-      table: String, gapMinutes: Int = 30, shards: Int = 4): DataFrame = withStatePartitions(spark) {
+      table: String, gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
     val ev = graft.Tables(spark, dir, "events")
@@ -472,12 +497,13 @@ object Streams {
         (expr(s"timestamp_micros($maxUs)") + expr(s"interval $daysAfter days")).as("ts"),
         lit(uid).as("event_id"))
     // one staging pass: the ts-range shards, then the two sentinels
-    // as shards `shards` and `shards + 1`
+    // as the shard ids after them
     stageIntoBy(ev.unionByName(sentinel(-1L, 2)).unionByName(sentinel(-2L, 4)),
-      streamDir, shards + 2, None,
-      when(col("user_id") === -1L, shards)
-        .when(col("user_id") === -2L, shards + 1)
-        .otherwise(rangeShard(expr("unix_micros(ts)"), minUs, maxUs + 1, shards)))
+      streamDir, SessionShards + 2, None,
+      when(col("user_id") === -1L, SessionShards)
+        .when(col("user_id") === -2L, SessionShards + 1)
+        .otherwise(rangeShard(expr("unix_micros(ts)"), minUs, maxUs + 1,
+          SessionShards)))
     val schema = graft.util.Parquet.schema(spark, streamDir.toString)
     val raw = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -533,8 +559,8 @@ object Streams {
           }
       }
     toMemory(sessions.toDF()
-      .where(col("user_id") >= 0) // sentinels are harness plumbing
-      .writeStream.outputMode("append"), table)
+      .where(col("user_id") >= 0), // sentinels are harness plumbing
+      "append", table)
   }
 
   /** Streaming exact deduplication: first-seen row per
@@ -547,10 +573,9 @@ object Streams {
     * Which row is first-seen depends on arrival order, so only the
     * KEY SET is deterministic — q_stream_dedup projects keys only.
     */
-  def dedupToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def dedupToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     toMemory(eventsStream(spark, dir)
-      .dropDuplicates("user_id", "event_type")
-      .writeStream.outputMode("append"), table)
+      .dropDuplicates("user_id", "event_type"), "append", table)
   }
 
   /** Horizon-bounded streaming dedup — `dropDuplicatesWithinWatermark`,
@@ -563,11 +588,11 @@ object Streams {
     * only that window regardless of corpus size.
     */
   def dedupWithinWatermarkToTable(spark: SparkSession, dir: String,
-      table: String, delay: String): DataFrame = withStatePartitions(spark) {
+      table: String, delay: String): DataFrame = {
     toMemory(eventsStream(spark, dir)
       .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .writeStream.outputMode("append"), table)
+      .dropDuplicatesWithinWatermark("user_id", "event_type"),
+      "append", table)
   }
 
   /** Watermarked stream-stream interval join: views matched to the
@@ -580,7 +605,7 @@ object Streams {
     * result is deterministic and oracle-checkable (unlike the
     * first-seen row of [[dedupToTable]]).
     */
-  def intervalJoinToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def intervalJoinToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     val views = eventsStream(spark, dir)
       .where(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id"), col("ts").as("v_ts"))
@@ -592,8 +617,7 @@ object Streams {
       .withWatermark("b_ts", "1 hour")
     val joined = views.join(buys,
       expr("user_id = b_user AND b_ts >= v_ts AND b_ts <= v_ts + interval 1 hour"))
-    toMemory(joined.select(col("view_id"), col("buy_id"))
-      .writeStream.outputMode("append"), table)
+    toMemory(joined.select(col("view_id"), col("buy_id")), "append", table)
   }
 
   /** LEFT OUTER watermarked stream-stream join — the semantics the
@@ -613,7 +637,7 @@ object Streams {
     * StreamingSpec.
     */
   def leftOuterIntervalJoinToTable(spark: SparkSession, dir: String,
-      table: String): DataFrame = withStatePartitions(spark) {
+      table: String): DataFrame = {
     // only the two participating event types and the four columns the
     // join touches are staged — anything else would be pruned
     // in-stream anyway, so the harness skips writing and re-reading it
@@ -679,11 +703,10 @@ object Streams {
     // no-data micro-batch would only re-apply sentinel-2's watermark
     // to evict the sentinels themselves (filtered out below) — skip
     // that fourth stateful batch for the finite drain.
-    withConfs(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      toMemory(joined.select(col("view_id"), col("buy_id"))
-        .where(col("view_id") >= 0) // sentinels are harness plumbing
-        .writeStream.outputMode("append"), table)
-    }
+    toMemory(joined.select(col("view_id"), col("buy_id"))
+        .where(col("view_id") >= 0), // sentinels are harness plumbing
+      "append", table,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
   }
 
   /** Streaming incremental exact-dedup ingest — the foreachBatch
@@ -703,7 +726,7 @@ object Streams {
     * corpus.
     */
   def incrementalDedupIngest(spark: SparkSession, srcDir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     // the kept rows are the staged source's own rows
     val kept = Store("kept", graft.util.Parquet.schema(spark, srcDir))
     drainStaged(spark, srcDir, workDir) { (batch, bid) =>
@@ -749,15 +772,15 @@ object Streams {
     * shuffles only the batch.
     */
   def minhashDedupIngest(spark: SparkSession, dir: String,
-      workDir: String, shards: Int = 3): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.Dedup
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
     require(!bounds.isNullAt(0), "documents table is empty — nothing to ingest")
     val srcDir = java.nio.file.Paths.get(workDir, "stream")
-    stageIntoBy(docs, srcDir, shards, None, rangeShard(col("doc_id"),
-      bounds.getLong(0), bounds.getLong(1) + 1, shards))
+    stageIntoBy(docs, srcDir, Shards, None, rangeShard(col("doc_id"),
+      bounds.getLong(0), bounds.getLong(1) + 1, Shards))
     drainStaged(spark, srcDir.toString, workDir) { (batch, bid) =>
       // cache: consumed by bands, the estimate join, and the store
       // write — without it the shingle+hash pipeline runs per use
@@ -837,32 +860,31 @@ object Streams {
     * binning in SQL, so streaming ≡ batch is hash-checked. State
     * derivation follows the [[Store]] restart/retry discipline
     * (previous version from DISK, strictly below the current bid).
-    * Degenerate streams (timestamp span < shards µs, so the first
+    * Degenerate streams (timestamp span < [[Shards]] µs, so the first
     * ts-range shard stages empty) fail LOUDLY at the
     * reference require below rather than monitoring drift against a
     * smoothing-only baseline — the sessionizeTimeoutToTable
     * empty-input convention.
     */
-  def driftIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    driftStage(spark, dir, workDir, shards)
+  def driftIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    driftStage(spark, dir, workDir)
     driftRun(spark, workDir)
   }
 
-  /** Stage the events table as `shards` ts-range shards (shard 0 = the
+  /** Stage the events table as [[Shards]] ts-range shards (shard 0 = the
     * earliest third — the reference period). `upTo` stages only a
     * prefix; shards already on disk are kept (deterministic staging,
     * the [[stageIntoBy]] crash-resume convention), so the restart test
     * can stage 2, drain, "crash", stage the third, and resume.
     */
   private[streaming] def driftStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     val ev = graft.Tables(spark, dir, "events")
       .select(expr("unix_micros(ts)").as("us"), col("value"))
     val bounds = ev.agg(min(col("us")).as("lo"), max(col("us")).as("hi")).head()
     require(!bounds.isNullAt(0), "events table is empty — nothing to monitor")
-    stageIntoBy(ev, java.nio.file.Paths.get(workDir, "stream"), shards, upTo,
-      rangeShard(col("us"), bounds.getLong(0), bounds.getLong(1) + 1, shards))
+    stageIntoBy(ev, java.nio.file.Paths.get(workDir, "stream"), Shards, upTo,
+      rangeShard(col("us"), bounds.getLong(0), bounds.getLong(1) + 1, Shards))
     ()
   }
 
@@ -873,7 +895,7 @@ object Streams {
     * continues the fold exactly where the committed batches left it.
     */
   private[streaming] def driftRun(spark: SparkSession,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     // bins clamped to [0, 9]: CURRENT values may fall outside the
     // reference-fixed edge range
     def binCol(mn: Double, mx: Double): org.apache.spark.sql.Column =
@@ -930,13 +952,13 @@ object Streams {
     * table is written once and kept (deterministic).
     */
   private[streaming] def doremiStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     if (!Lm.exists(workDir))
       Lm.write(graft.ops.TextAnalysis.lmProbs(graft.ops.TextAnalysis
         .docBigrams(graft.Tables(spark, dir, "documents"))), workDir)
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
-    stageShards(docs, workDir, shards, upTo, keyCol = "doc_id",
+    stageShards(docs, workDir, Shards, upTo, keyCol = "doc_id",
       cacheKey = Some(s"$dir|documents"))
     ()
   }
@@ -954,7 +976,7 @@ object Streams {
     * overwrites its own idempotent partial.
     */
   private[streaming] def doremiRun(spark: SparkSession,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.TextAnalysis
     val lm = Lm.read(spark, workDir)
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
@@ -983,9 +1005,8 @@ object Streams {
     "source STRING, n_docs BIGINT, n_bg BIGINT, ces DECIMAL(38,20)")
 
   /** Stage + drain in one call — the q_stream_doremi entry point. */
-  def doremiIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    doremiStage(spark, dir, workDir, shards)
+  def doremiIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    doremiStage(spark, dir, workDir)
     doremiRun(spark, workDir)
   }
 
@@ -1000,18 +1021,17 @@ object Streams {
     * Standing state is Dim longs per committed batch — nothing
     * corpus-sized, nothing rescanned per trigger.
     */
-  def pcaIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    pcaStage(spark, dir, workDir, shards)
+  def pcaIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    pcaStage(spark, dir, workDir)
     pcaRun(spark, workDir)
   }
 
   private[streaming] def pcaStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     val emb = graft.ops.Similarity.embeddings(spark, dir)
     require(emb.limit(1).count() > 0,
       "embeddings table is empty — nothing to iterate")
-    stageShards(emb, workDir, shards, upTo, keyCol = "vec_id",
+    stageShards(emb, workDir, Shards, upTo, keyCol = "vec_id",
       cacheKey = Some(s"$dir|embeddings"))
     ()
   }
@@ -1021,7 +1041,7 @@ object Streams {
     * corpus dir, so a caller can't believe the drain rescans it).
     */
   private[streaming] def pcaRun(spark: SparkSession,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       // per-bid overwrite: foreachBatch is at-least-once, the
       // overwrite makes a replayed batch idempotent (the [[Store]]
@@ -1051,15 +1071,14 @@ object Streams {
     * state is the append-only postings store (the index itself), never
     * rescanned during ingest.
     */
-  def ivfIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
+  def ivfIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
     import graft.ops.Similarity
     // the canonical batch-side projection — shared, so the input frame
     // cannot drift between the pair
     val emb = Similarity.embeddings(spark, dir)
     require(emb.limit(1).count() > 0,
       "embeddings table is empty — nothing to index")
-    stageShards(emb, workDir, shards, keyCol = "vec_id",
+    stageShards(emb, workDir, Shards, keyCol = "vec_id",
       cacheKey = Some(s"$dir|embeddings"))
     ivfRun(spark, dir, workDir)
   }
@@ -1073,7 +1092,7 @@ object Streams {
     * the committed batches used.
     */
   private[streaming] def ivfRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.Similarity
     // train the quantizer ONCE, before the stream starts — cache +
     // materialize both tiny (≤√n-row) tables so the per-batch
@@ -1148,9 +1167,8 @@ object Streams {
     * verbatim. At 100 TB the probe is broadcast-only; per batch the
     * only exchange is the batch-local rank-1 window.
     */
-  def outliersIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    outliersStage(spark, dir, workDir, shards)
+  def outliersIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    outliersStage(spark, dir, workDir)
     outliersRun(spark, dir, workDir)
   }
 
@@ -1158,9 +1176,9 @@ object Streams {
     * the checkpoint-restart test.
     */
   private[streaming] def outliersStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     val emb = graft.ops.Similarity.embeddings(spark, dir)
-    stageShards(emb, workDir, shards, upTo, keyCol = "vec_id",
+    stageShards(emb, workDir, Shards, upTo, keyCol = "vec_id",
       cacheKey = Some(s"$dir|embeddings"))
     ()
   }
@@ -1172,7 +1190,7 @@ object Streams {
     * resumed run scores against the IDENTICAL index.
     */
   private[streaming] def outliersRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.Similarity
     val (coarse0, fineBucket0) = Similarity.ivfQuantizer(spark, dir)
     val coarse = coarse0.cache()
@@ -1216,9 +1234,8 @@ object Streams {
     * shingle distinct and the final per-doc count-distinct, both over
     * the batch's own rows only.
     */
-  def contaminationIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    contaminationStage(spark, dir, workDir, shards)
+  def contaminationIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    contaminationStage(spark, dir, workDir)
     contaminationRun(spark, dir, workDir)
   }
 
@@ -1226,7 +1243,7 @@ object Streams {
     * shards; `upTo` stages a prefix for the checkpoint-restart test.
     */
   private[streaming] def contaminationStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     // canonical documents staging projection, UNFILTERED — the train
     // slice (doc_id % 50 <> 0) is applied by contaminationRun's batch
     // body instead, so this family member shares the one staged
@@ -1234,7 +1251,7 @@ object Streams {
     // (shard membership is doc_id % n, independent of the filter)
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
-    stageShards(docs, workDir, shards, upTo, keyCol = "doc_id",
+    stageShards(docs, workDir, Shards, upTo, keyCol = "doc_id",
       cacheKey = Some(s"$dir|documents"))
     ()
   }
@@ -1247,7 +1264,7 @@ object Streams {
     * the committed batches did.
     */
   private[streaming] def contaminationRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.Dedup
     // r14: the static eval index is the session-materialized corpus
     // postings table filtered to the eval slice (the doc_id filter
@@ -1295,9 +1312,8 @@ object Streams {
     * the exact-audit postings store is the harness's truth column,
     * not something a monitor ships.
     */
-  def thetaIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    thetaStage(spark, dir, workDir, shards)
+  def thetaIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    thetaStage(spark, dir, workDir)
     thetaRun(spark, dir, workDir)
   }
 
@@ -1305,11 +1321,11 @@ object Streams {
     * same projection and cache key as the contamination twin).
     */
   private[streaming] def thetaStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit =
-    contaminationStage(spark, dir, workDir, shards, upTo)
+      workDir: String, upTo: Option[Int] = None): Unit =
+    contaminationStage(spark, dir, workDir, upTo)
 
   private[streaming] def thetaRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.Govern
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       sketchAndPostings(batch, workDir, bid, ThetaSketches, ThetaPostings)
@@ -1362,14 +1378,13 @@ object Streams {
     * slices at drain — the gated-SF harness truth a production
     * monitor drops.
     */
-  def ngramThetaIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    thetaStage(spark, dir, workDir, shards)
+  def ngramThetaIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    thetaStage(spark, dir, workDir)
     ngramThetaRun(spark, dir, workDir)
   }
 
   private[streaming] def ngramThetaRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.{Govern, TextAnalysis}
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       val g = TextAnalysis.ngramHashes(
@@ -1422,9 +1437,8 @@ object Streams {
     * sources × k longs plus the v1 postings store the exact audit
     * reads at drain.
     */
-  def thetaDeltaIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    thetaDeltaStage(spark, dir, workDir, shards)
+  def thetaDeltaIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    thetaDeltaStage(spark, dir, workDir)
     thetaDeltaRun(spark, dir, workDir)
   }
 
@@ -1433,7 +1447,7 @@ object Streams {
     * (doc_id % 4 == 0, releaseStage's split) staged as doc shards.
     */
   private[streaming] def thetaDeltaStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     import graft.ops.{Dedup, Govern}
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
@@ -1458,14 +1472,14 @@ object Streams {
         .groupBy(col("source"))
         .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
           .as("mins")), workDir)
-    stageShards(docs.where(col("doc_id") % 4 === 0), workDir, shards,
+    stageShards(docs.where(col("doc_id") % 4 === 0), workDir, Shards,
       upTo, keyCol = "doc_id",
       cacheKey = if (upTo.isEmpty) Some(s"$dir|documents_rel4") else None)
     ()
   }
 
   private[streaming] def thetaDeltaRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.Govern
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       sketchAndPostings(batch, workDir, bid, DeltaSketches, DeltaPostings)
@@ -1513,9 +1527,8 @@ object Streams {
     * join riding the arriving batch (no shuffle, no accumulated
     * state beyond three longs per batch).
     */
-  def forgetIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    forgetStage(spark, dir, workDir, shards)
+  def forgetIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    forgetStage(spark, dir, workDir)
     forgetRun(spark, dir, workDir)
   }
 
@@ -1523,13 +1536,13 @@ object Streams {
     * the checkpoint-restart test.
     */
   private[streaming] def forgetStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     // the CANONICAL events staging projection — forget, upsert and
     // mv_merge share one staged shard set; each run projects by name
     val ev = graft.Tables(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
-    stageShards(ev, workDir, shards, upTo,
+    stageShards(ev, workDir, Shards, upTo,
       cacheKey = Some(s"$dir|events"))
     ()
   }
@@ -1541,7 +1554,7 @@ object Streams {
     * resumed run probes the IDENTICAL list the committed batches did.
     */
   private[streaming] def forgetRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     import graft.ops.TextFns.h60
     // the ONE deletion-list definition, shared with the batch audit
     // and the physical delete
@@ -1626,9 +1639,8 @@ object Streams {
     * batch's own rows shuffle — v1 is scanned and probed, never
     * reshuffled.
     */
-  def releaseIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    releaseStage(spark, dir, workDir, shards)
+  def releaseIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    releaseStage(spark, dir, workDir)
     releaseRun(spark, dir, workDir)
   }
 
@@ -1637,7 +1649,7 @@ object Streams {
     * stages a prefix for the checkpoint-restart test.
     */
   private[streaming] def releaseStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     import graft.ops.Dedup
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
@@ -1650,7 +1662,7 @@ object Streams {
     // run in order.
     buildV1Hash(spark, workDir, v1)
     buildV1ShingleStores(spark, dir, workDir, v1)
-    stageCrawlShards(spark, workDir, docs, shards, upTo)
+    stageCrawlShards(spark, workDir, docs, upTo)
   }
 
   private def buildV1Hash(spark: SparkSession, workDir: String,
@@ -1735,16 +1747,16 @@ object Streams {
   private val BatchHash = Store("bhash_b", "ch STRING")
 
   private def stageCrawlShards(spark: SparkSession, workDir: String,
-      docs: DataFrame, shards: Int, upTo: Option[Int]): Unit = {
+      docs: DataFrame, upTo: Option[Int]): Unit = {
     // both backward-looking rules (in-batch keeper, smaller-id near
     // neighbor) need arrival order == id order, so the batch stages as
     // range shards ([[rangeShard]])
     val batch = docs.where(col("doc_id") % 4 === 0)
     val bounds = batch.agg(min(col("doc_id")), max(col("doc_id"))).head()
     require(!bounds.isNullAt(0), "empty crawl batch — nothing to admit")
-    stageIntoBy(batch, java.nio.file.Paths.get(workDir, "stream"), shards,
+    stageIntoBy(batch, java.nio.file.Paths.get(workDir, "stream"), Shards,
       upTo, rangeShard(col("doc_id"), bounds.getLong(0), bounds.getLong(1) + 1,
-        shards))
+        Shards))
     ()
   }
 
@@ -1754,12 +1766,12 @@ object Streams {
     * and all per-bid state live on DISK.
     */
   private[streaming] def releaseRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame =
-    withStatePartitions(spark, aqeOff = true) {
+      workDir: String): DataFrame = {
     import graft.ops.{Dedup, Prep}
     val v1Hash = V1Hash.read(spark, workDir).withColumn("v1_hit", lit(1))
     val v1Sig = V1Sig.read(spark, workDir)
-    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+    drainStaged(spark, s"$workDir/stream", workDir, aqeOff = true) {
+      (batch, bid) =>
       // one staged file = one partition — spread the shingle work
       val bdf = batch.repartition(spark.sparkContext.defaultParallelism)
       // cached: local flags feed the keeper agg, the flag joins and
@@ -1897,9 +1909,8 @@ object Streams {
     * at production scale the postings store is bucketed on h so the
     * batch-side probe prunes to matching buckets.
     */
-  def crossmodalIngest(spark: SparkSession, dir: String, workDir: String,
-      shards: Int = 3): DataFrame = {
-    crossmodalStage(spark, dir, workDir, shards)
+  def crossmodalIngest(spark: SparkSession, dir: String, workDir: String): DataFrame = {
+    crossmodalStage(spark, dir, workDir)
     crossmodalRun(spark, dir, workDir)
   }
 
@@ -1907,12 +1918,12 @@ object Streams {
     * checkpoint-restart test.
     */
   private[streaming] def crossmodalStage(spark: SparkSession, dir: String,
-      workDir: String, shards: Int, upTo: Option[Int] = None): Unit = {
+      workDir: String, upTo: Option[Int] = None): Unit = {
     // canonical documents staging projection (see watermarkIngest) —
     // the run side only touches doc_id/text by name
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
-    stageShards(docs, workDir, shards, upTo, keyCol = "doc_id",
+    stageShards(docs, workDir, Shards, upTo, keyCol = "doc_id",
       cacheKey = Some(s"$dir|documents"))
     ()
   }
@@ -1923,10 +1934,10 @@ object Streams {
     * per-bid on disk.
     */
   private[streaming] def crossmodalRun(spark: SparkSession, dir: String,
-      workDir: String): DataFrame =
-    withStatePartitions(spark, aqeOff = true) {
+      workDir: String): DataFrame = {
     import graft.ops.{Dedup, Multimodal}
-    drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
+    drainStaged(spark, s"$workDir/stream", workDir, aqeOff = true) {
+      (batch, bid) =>
       import spark.implicits._
       // a micro-batch arrives as ONE staged file = one partition —
       // spread it so the shingle explode and the image decode use
@@ -2237,7 +2248,7 @@ object Streams {
     val ev = graft.Tables(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
-    stageShards(ev, workDir, 3, cacheKey = Some(s"$dir|events"))
+    stageShards(ev, workDir, Shards, cacheKey = Some(s"$dir|events"))
     upsertRun(spark, workDir)
   }
 
@@ -2248,7 +2259,7 @@ object Streams {
     * ([[Store.latestBelow]]), not from any driver-side state.
     */
   private[streaming] def upsertRun(spark: SparkSession,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       val part = batch.groupBy(col("user_id")).agg(max(struct(col("ts"),
         col("event_id"), col("event_type"), col("value"))).as("s"))
@@ -2281,7 +2292,7 @@ object Streams {
     * writes idempotent under micro-batch retry.
     */
   def asofEnrichIngest(spark: SparkSession, dir: String,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     val ords = graft.Tables(spark, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"))
       // date <= timestamp coerces date → midnight; make the cast
@@ -2323,7 +2334,7 @@ object Streams {
     val ev = graft.Tables(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
-    stageShards(ev, workDir, 3, cacheKey = Some(s"$dir|events"))
+    stageShards(ev, workDir, Shards, cacheKey = Some(s"$dir|events"))
     mvMergeRun(spark, workDir)
   }
 
@@ -2334,7 +2345,7 @@ object Streams {
     * micro-batch retry both land on exactly-once output.
     */
   private[streaming] def mvMergeRun(spark: SparkSession,
-      workDir: String): DataFrame = withStatePartitions(spark) {
+      workDir: String): DataFrame = {
     drainStaged(spark, s"$workDir/stream", workDir) { (batch, bid) =>
       val partial = batch.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("total"),
@@ -2367,7 +2378,7 @@ object Streams {
     * batch window form row-for-row (asserted in StreamingSpec), so
     * q_stream_transitions shares q_transitions' oracle.
     */
-  def transitionsToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def transitionsToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     import spark.implicits._
     val ev = eventsStream(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -2383,7 +2394,7 @@ object Streams {
           if (sorted.nonEmpty) state.update(sorted.last._4)
           types.sliding(2).collect { case Seq(a, b) => TransPair(a, b) }
       }
-    toMemory(pairs.toDF().writeStream.outputMode("append"), table)
+    toMemory(pairs.toDF(), "append", table)
   }
 
   /** Streaming top-k: complete-mode aggregation with sort+limit INSIDE
@@ -2392,11 +2403,11 @@ object Streams {
     * Deterministic tie-break on the key keeps the k-th row stable.
     */
   def topkToTable(spark: SparkSession, dir: String, table: String,
-      k: Int): DataFrame = withStatePartitions(spark) {
+      k: Int): DataFrame = {
     val agg = eventsStream(spark, dir)
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("event_type")).limit(k)
-    toMemory(agg.writeStream.outputMode("complete"), table)
+    toMemory(agg, "complete", table)
   }
 
   /** Streaming strict-order funnel (view → click → purchase) — the
@@ -2415,7 +2426,7 @@ object Streams {
     * Emits one presence-flag row per user per batch; flags are
     * monotone, so the drained table ORs per user before counting.
     */
-  def funnelToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def funnelToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     import spark.implicits._
     val ev = eventsStream(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -2446,7 +2457,7 @@ object Streams {
           state.update((tv, tc, tp))
           Iterator.single(FunnelProbe(user, tv.isDefined, tc.isDefined, tp.isDefined))
       }
-    toMemory(probes.toDF().writeStream.outputMode("append"), table)
+    toMemory(probes.toDF(), "append", table)
   }
 
   /** Streaming last-touch attribution — the stateful-streaming form of
@@ -2460,7 +2471,7 @@ object Streams {
     * aggregate to exactly the batch attribution table, so
     * q_stream_attribution shares q_attribution's oracle.
     */
-  def attributionToTable(spark: SparkSession, dir: String, table: String): DataFrame = withStatePartitions(spark) {
+  def attributionToTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     import spark.implicits._
     val ev = eventsStream(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"),
@@ -2486,15 +2497,14 @@ object Streams {
           touch.foreach(state.update)
           out.iterator
       }
-    toMemory(credited.toDF("touch_type", "value", "wait_us")
-      .writeStream.outputMode("append"), table)
+    toMemory(credited.toDF("touch_type", "value", "wait_us"), "append", table)
   }
 
   /** Custom keyed state via mapGroupsWithState: per-user running event
     * totals (the KeyValueGroupedDataset stateful surface).
     */
   def userTotalsToTable(spark: SparkSession, dir: String, table: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStatePartitions(spark) {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val perUser = eventsStream(spark, dir, maxFilesPerTrigger)
       .select(col("user_id").cast("long"))
@@ -2511,7 +2521,7 @@ object Streams {
     // total, strictly increasing across a user's emissions) so the
     // result is correct however the source files batch up — same
     // robustness contract as [[userStatsTwsToTable]].
-    toMemory(perUser.toDF().writeStream.outputMode("update"), table)
+    toMemory(perUser.toDF(), "update", table)
       .groupBy(col("user_id"))
       .agg(max(col("n")).as("n"))
   }
@@ -2519,36 +2529,36 @@ object Streams {
   /** [[UserStatProcessor]] driven over the event stream: the
     * transformWithState execution path (requires the RocksDB state
     * store provider — virtual-column-family state layout). The
-    * provider swap is scoped to this drain; a production job sets it
-    * once in the session conf.
+    * provider swap and the checkpoint root are scoped to this query's
+    * run ([[toMemory]]); a production job sets them once in the
+    * session conf.
     */
   def userStatsTwsToTable(spark: SparkSession, dir: String, table: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStatePartitions(spark) {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val perUser = eventsStream(spark, dir, maxFilesPerTrigger)
-        .select(col("user_id").cast("long"),
-          (dec(col("value")) * 100).cast("long").as("cents"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new UserStatProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = toMemory(perUser.toDF().writeStream.outputMode("update")
-        .option("checkpointLocation",
-          graft.util.WorkDirs.temp("graft_tws")), table)
-      // The update-mode memory sink accumulates one row per user per
-      // micro-batch; reduce to each user's FINAL update so the result
-      // doesn't depend on the source arriving as exactly one batch
-      // (extra files / maxFilesPerTrigger would otherwise duplicate
-      // users). n strictly increases across a user's updates — every
-      // emission follows ≥1 new event — so max_by(…, n) is the last
-      // one.
-      sink.groupBy(col("user_id"))
-        .agg(max_by(struct(col("n"), col("total_cents")), col("n")).as("s"))
-        .select(col("user_id"), col("s.n").as("n"),
-          col("s.total_cents").as("total_cents"))
-    }
+    val perUser = eventsStream(spark, dir, maxFilesPerTrigger)
+      .select(col("user_id").cast("long"),
+        (dec(col("value")) * 100).cast("long").as("cents"))
+      .as[(Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new UserStatProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+    val sink = toMemory(perUser.toDF(), "update", table,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.checkpointLocation" ->
+        graft.util.WorkDirs.temp("graft_tws"))
+    // The update-mode memory sink accumulates one row per user per
+    // micro-batch; reduce to each user's FINAL update so the result
+    // doesn't depend on the source arriving as exactly one batch
+    // (extra files / maxFilesPerTrigger would otherwise duplicate
+    // users). n strictly increases across a user's updates — every
+    // emission follows ≥1 new event — so max_by(…, n) is the last
+    // one.
+    sink.groupBy(col("user_id"))
+      .agg(max_by(struct(col("n"), col("total_cents")), col("n")).as("s"))
+      .select(col("user_id"), col("s.n").as("n"),
+        col("s.total_cents").as("total_cents"))
   }
 }

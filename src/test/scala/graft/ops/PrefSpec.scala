@@ -83,12 +83,15 @@ class PrefSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("q_budget_fill equals an independent hash-order replay") {
-    val got = Prep.queries("q_budget_fill")(spark, Dir).collect()
+  /** q_budget_fill's rows on the corpus at `dir`, its independent
+    * hash-order replay, and the corpus's doc count.
+    */
+  private def budgetFill(dir: String) = {
+    val got = Prep.queries("q_budget_fill")(spark, dir).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[Int]("pos"),
         r.getAs[Long]("doc_id"), r.getAs[Int]("n_tok"),
-        r.getAs[Long]("cum_tok"), r.getAs[Long]("budget")))
-    val docs = graft.Tables(spark, Dir, "documents")
+        r.getAs[Long]("cum_tok"), r.getAs[Long]("budget"))).toSeq
+    val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1),
         r.getString(2).toLowerCase.split("\\s+").count(_.nonEmpty)))
@@ -102,36 +105,27 @@ class PrefSpec extends AnyFunSuite with SparkSpec {
           (src, i + 1, doc, nt, cum, budget)
       }
     }.sortBy(e => (e._1, e._2))
-    assert(got.toSeq == expect)
-    assert(expect.nonEmpty && expect.size < docs.length) // truncation bites
+    (got, expect, docs.length)
   }
 
-  test("q_budget_fill two-pass cumsum admits the identical set (gated corpus + mega-source)") {
+  test("q_budget_fill equals an independent hash-order replay") {
+    val (got, expect, nDocs) = budgetFill(Dir)
+    assert(got == expect)
+    assert(expect.nonEmpty && expect.size < nDocs) // truncation bites
+  }
+
+  test("q_budget_fill equals the hash-order replay on a mega-source corpus") {
     import spark.implicits._
-    def rows(dir: String) = {
-      val r = Prep.queries("q_budget_fill")(spark, dir).collect()
-        .map(r => (r.getAs[String]("source"), r.getAs[Int]("pos"),
-          r.getAs[Long]("doc_id"), r.getAs[Int]("n_tok"),
-          r.getAs[Long]("cum_tok"), r.getAs[Long]("budget"))).toSeq
-      assert(r.nonEmpty); r
-    }
-    def twoPass[A](body: => A): A = {
-      spark.conf.set(Prep.BudgetFillTwoPassConf, "true")
-      try body finally spark.conf.unset(Prep.BudgetFillTwoPassConf)
-    }
-    // the gated corpus: window form ≡ two-pass form, row for row
-    val win = rows(Dir)
-    assert(twoPass(rows(Dir)) == win)
-    // a crafted mega-source (one source dominating — the partition
-    // the two-pass exists to split) with token counts varied enough
-    // that cum_tok crosses shard boundaries mid-budget
-    val dir = java.nio.file.Files.createTempDirectory("bf2p").toString
+    // one source dominating (the wide window partition) with token
+    // counts varied enough that cum_tok climbs unevenly to the budget
+    val dir = java.nio.file.Files.createTempDirectory("bfmega").toString
     (0 until 400).map { i =>
       val src = if (i % 20 == 0) "minor" else "mega"
       (i.toLong, Seq.fill(1 + i % 7)("w").mkString(" "), src)
     }.toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val w2 = rows(dir)
-    assert(twoPass(rows(dir)) == w2)
+    val (got, expect, nDocs) = budgetFill(dir)
+    assert(got == expect)
+    assert(expect.nonEmpty && expect.size < nDocs)
   }
 }

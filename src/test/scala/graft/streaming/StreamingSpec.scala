@@ -542,10 +542,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // a 2-shard prefix, "crash", stage the third, resume — the folded
     // mixture weights must STILL equal the batch q_doremi_step row set
     val work = java.nio.file.Files.createTempDirectory("graft_doremi_resume").toString
-    Streams.doremiStage(spark, dir, work, 3, upTo = Some(2))
+    Streams.doremiStage(spark, dir, work, upTo = Some(2))
     Streams.doremiRun(spark, work)               // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work/per_b1").exists())
-    Streams.doremiStage(spark, dir, work, 3)     // shard 2 appears
+    Streams.doremiStage(spark, dir, work)     // shard 2 appears
     val streamed = Streams.doremiRun(spark, work) // run 2: resumes, batch 2 only
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
@@ -597,10 +597,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("foreachBatch theta monitor: kill after 2 of 3 batches, restart == batch sketch") {
     val work = java.nio.file.Files.createTempDirectory("graft_theta_resume").toString
-    Streams.thetaStage(spark, dir, work, 3, upTo = Some(2))
+    Streams.thetaStage(spark, dir, work, upTo = Some(2))
     Streams.thetaRun(spark, dir, work)   // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work/sk_b1").exists())
-    Streams.thetaStage(spark, dir, work, 3)
+    Streams.thetaStage(spark, dir, work)
     def key(r: org.apache.spark.sql.Row) = (r.getString(0), r.getInt(1),
       if (r.isNullAt(2)) -1L else r.getLong(2), r.getDouble(3),
       r.getLong(4), r.getDouble(5))
@@ -636,10 +636,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("foreachBatch ngram-theta monitor: kill after 2 of 3 batches, restart == batch census") {
     val work = java.nio.file.Files
       .createTempDirectory("graft_ngt_resume").toString
-    Streams.thetaStage(spark, dir, work, 3, upTo = Some(2))
+    Streams.thetaStage(spark, dir, work, upTo = Some(2))
     Streams.ngramThetaRun(spark, dir, work) // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work/ngsk_b1").exists())
-    Streams.thetaStage(spark, dir, work, 3)
+    Streams.thetaStage(spark, dir, work)
     def key(r: org.apache.spark.sql.Row) = (r.getString(0), r.getInt(1),
       r.getLong(2), r.getInt(3),
       if (r.isNullAt(4)) -1L else r.getLong(4), r.getDouble(5),
@@ -671,10 +671,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("foreachBatch pca monitor: kill after 2 of 3 batches, restart == batch iterate") {
     val work = java.nio.file.Files.createTempDirectory("graft_pca_resume").toString
-    Streams.pcaStage(spark, dir, work, 3, upTo = Some(2))
+    Streams.pcaStage(spark, dir, work, upTo = Some(2))
     Streams.pcaRun(spark, work)   // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work/pca_b1").exists())
-    Streams.pcaStage(spark, dir, work, 3)
+    Streams.pcaStage(spark, dir, work)
     val streamed = Streams.pcaRun(spark, work)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(new java.io.File(s"$work/pca_b2").exists())
@@ -693,12 +693,12 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // q_theta_delta row-for-row (shared projection + shared oracle)
     val work = java.nio.file.Files
       .createTempDirectory("graft_tdelta_resume").toString
-    Streams.thetaDeltaStage(spark, dir, work, 3, upTo = Some(2))
+    Streams.thetaDeltaStage(spark, dir, work, upTo = Some(2))
     Streams.thetaDeltaRun(spark, dir, work) // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work/dsk_b1").exists())
     assert(new java.io.File(s"$work/v1_theta").exists(),
       "the release must ship its governance sketch artifact")
-    Streams.thetaDeltaStage(spark, dir, work, 3)
+    Streams.thetaDeltaStage(spark, dir, work)
     def key(r: org.apache.spark.sql.Row) = (r.getString(0),
       r.getDouble(1), r.getDouble(2), r.getDouble(3),
       r.getLong(4), r.getLong(5))
@@ -714,10 +714,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("foreachBatch contamination guard: kill after 2 of 3 batches, restart == batch scan") {
     val work = java.nio.file.Files.createTempDirectory("graft_contam_resume").toString
-    Streams.contaminationStage(spark, dir, work, 3, upTo = Some(2))
+    Streams.contaminationStage(spark, dir, work, upTo = Some(2))
     Streams.contaminationRun(spark, dir, work)   // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work/flag_b1").exists())
-    Streams.contaminationStage(spark, dir, work, 3)
+    Streams.contaminationStage(spark, dir, work)
     val streamed = Streams.contaminationRun(spark, dir, work)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(new java.io.File(s"$work/flag_b2").exists())
@@ -743,10 +743,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(streamed == batchEvents && streamed.head._3 > 0)
     assert(streamed.head._2 > 0, "deletion list hit no events — guard vacuous")
     val work2 = java.nio.file.Files.createTempDirectory("graft_sfg_resume").toString
-    Streams.forgetStage(spark, dir, work2, 3, upTo = Some(2))
+    Streams.forgetStage(spark, dir, work2, upTo = Some(2))
     Streams.forgetRun(spark, dir, work2)         // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work2/audit_b1").exists())
-    Streams.forgetStage(spark, dir, work2, 3)
+    Streams.forgetStage(spark, dir, work2)
     val resumed = Streams.forgetRun(spark, dir, work2)
       .collect().map(key).toSeq
     assert(new java.io.File(s"$work2/audit_b2").exists())
@@ -765,10 +765,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .collect().map(key).toSeq
     assert(streamed == batch && streamed.nonEmpty)
     val work2 = java.nio.file.Files.createTempDirectory("graft_sso_resume").toString
-    Streams.outliersStage(spark, dir, work2, 3, upTo = Some(2))
+    Streams.outliersStage(spark, dir, work2, upTo = Some(2))
     Streams.outliersRun(spark, dir, work2)       // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work2/flags_b1").exists())
-    Streams.outliersStage(spark, dir, work2, 3)
+    Streams.outliersStage(spark, dir, work2)
     val resumed = Streams.outliersRun(spark, dir, work2)
       .collect().map(key).toSeq
     assert(new java.io.File(s"$work2/flags_b2").exists())
@@ -830,7 +830,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import graft.ops.{Dedup, Govern}
     val work = java.nio.file.Files
       .createTempDirectory("graft_v1theta").toString
-    Streams.releaseStage(spark, dir, work, 3)
+    Streams.releaseStage(spark, dir, work)
     val v1Sk = spark.read.schema("source STRING, mins ARRAY<BIGINT>")
       .parquet(s"$work/v1_theta")
     val docs = graft.Tables(spark, dir, "documents")
@@ -873,10 +873,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(streamed.map(r => (2 to 8).map(i => r(i).asInstanceOf[Long]).sum)
       .sum > 0, "no stage dropped anything — cascade vacuous")
     val work2 = java.nio.file.Files.createTempDirectory("graft_rel_resume").toString
-    Streams.releaseStage(spark, dir, work2, 3, upTo = Some(2))
+    Streams.releaseStage(spark, dir, work2, upTo = Some(2))
     Streams.releaseRun(spark, dir, work2)        // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work2/census_b1").exists())
-    Streams.releaseStage(spark, dir, work2, 3)
+    Streams.releaseStage(spark, dir, work2)
     val resumed = rows(Streams.releaseRun(spark, dir, work2))
     assert(new java.io.File(s"$work2/census_b2").exists())
     assert(!new java.io.File(s"$work2/census_b3").exists(),
@@ -897,10 +897,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .collect().map(key).toSeq
     assert(streamed == batch && streamed.nonEmpty)
     val work2 = java.nio.file.Files.createTempDirectory("graft_xm_resume").toString
-    Streams.crossmodalStage(spark, dir, work2, 3, upTo = Some(2))
+    Streams.crossmodalStage(spark, dir, work2, upTo = Some(2))
     Streams.crossmodalRun(spark, dir, work2)     // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work2/pairs_b1").exists())
-    Streams.crossmodalStage(spark, dir, work2, 3)
+    Streams.crossmodalStage(spark, dir, work2)
     val resumed = Streams.crossmodalRun(spark, dir, work2)
       .collect().map(key).toSeq
     assert(new java.io.File(s"$work2/pairs_b2").exists())
@@ -911,10 +911,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("foreachBatch drift monitor: kill after 2 of 3 batches, restart == full replay") {
     val work = java.nio.file.Files.createTempDirectory("graft_drift_resume").toString
-    Streams.driftStage(spark, dir, work, 3, upTo = Some(2))
+    Streams.driftStage(spark, dir, work, upTo = Some(2))
     Streams.driftRun(spark, work)                // run 1: batches 0,1 commit
     assert(new java.io.File(s"$work/cur_v1").exists())
-    Streams.driftStage(spark, dir, work, 3)
+    Streams.driftStage(spark, dir, work)
     val resumed = Streams.driftRun(spark, work)  // run 2: resumes, only batch 2
       .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(new java.io.File(s"$work/cur_v2").exists())
@@ -996,13 +996,121 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "range-shard boundary arithmetic outside rangeShard")
     // the checkpoint and the foreachBatch sink live in the drain helper
     // that drainStaged wraps — no twin sets up its own drain
-    val drainAt = src.indexOf("private def drain(")
+    val drainAt = src.indexOf("def drain(")
     val drainEnd = src.indexOf("private def drainStaged(")
     assert(drainAt >= 0 && drainEnd > drainAt)
     for (s <- Seq("\"$workDir/ckpt\"", ".foreachBatch(")) {
       val hits = at(s)
       assert(hits.size == 1 && hits.forall(i => i > drainAt && i < drainEnd),
         s"$s outside the drain helper at offsets $hits")
+    }
+  }
+
+  /** Streams.scala with its comments removed (string literals kept). */
+  private def streamsCode(): String = {
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala"))
+    val out = new StringBuilder
+    var i = 0
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        while (i < src.length && src(i) != '\n') i += 1
+      } else if (src.startsWith("/*", i)) {
+        i = src.indexOf("*/", i + 2) + 2
+      } else if (src(i) == '"') {
+        val end = Iterator.from(i + 1)
+          .find(j => src(j) == '"' && src(j - 1) != '\\').get
+        out ++= src.substring(i, end + 1); i = end + 1
+      } else { out += src(i); i += 1 }
+    }
+    out.toString
+  }
+
+  test("the two runners are the only code that sets a streaming query's conf") {
+    val code = streamsCode()
+    def at(s: String): Seq[Int] =
+      Iterator.iterate(code.indexOf(s))(i => code.indexOf(s, i + 1))
+        .takeWhile(_ >= 0).toSeq
+    assert(at("withStatePartitions").isEmpty)
+    // a member of object Streams runs from its definition to the next
+    // one at the same indentation
+    val members = "(?m)^  \\S".r.findAllMatchIn(code).map(_.start).toSeq :+
+      code.length
+    def span(name: String): (Int, Int) = {
+      val from = s"def $name[\\[(]".r.findFirstMatchIn(code)
+        .getOrElse(fail(s"no def $name")).start
+      (from, members.find(_ > from).get)
+    }
+    val runners = Seq("withConfs", "drain", "toMemory").map(span)
+    for (s <- Seq("withConfs(", "conf.set(")) {
+      val hits = at(s)
+      assert(hits.nonEmpty)
+      val outside = hits.filterNot(i => runners.exists { case (a, b) => i > a && i < b })
+      assert(outside.isEmpty, s"$s outside withConfs/drain/toMemory at offsets $outside")
+    }
+    // the replay shard count is a constant: no twin takes it
+    val takesShards = "def (\\w+)(\\[[^\\]]*\\])?\\(([^)]*)\\)".r
+      .findAllMatchIn(code)
+      .filter(m => "\\bshards\\s*:".r.findFirstIn(m.group(3)).isDefined)
+      .map(_.group(1)).toSet
+    assert(takesShards == Set("rangeShard"), s"shards parameters on $takesShards")
+  }
+
+  test("drain runs its body at the state partitions (AQE off on request) and restores the caller's conf") {
+    val parts = "spark.sql.shuffle.partitions"
+    val aqe = "spark.sql.adaptive.enabled"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val before = spark.conf.getAll
+    // caller values that differ from every value a runner sets
+    spark.conf.set(parts, "7")
+    spark.conf.set(aqe, "true")
+    spark.conf.set(Streams.StatePartitionsConf, "2")
+    def callers(): Unit = {
+      assert(spark.conf.get(parts) == "7")
+      assert(spark.conf.get(aqe) == "true")
+      assert(!spark.conf.getAll.contains(noData))
+    }
+    try {
+      val src = java.nio.file.Files.createTempDirectory("graft_drain_src")
+      stageFile(spark.range(5).toDF("id"), src, "a")
+      val stream = spark.readStream.schema("id BIGINT").parquet(src.toString)
+      def drained(aqeOff: Boolean): Seq[(String, String, String, String)] = {
+        val seen = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, String)]
+        val work = java.nio.file.Files.createTempDirectory("graft_drain_wk").toString
+        Streams.drain(stream, work, aqeOff) { (batch, _) =>
+          seen += ((spark.conf.get(parts), spark.conf.get(aqe),
+            batch.sparkSession.conf.get(parts), batch.sparkSession.conf.get(aqe)))
+          ()
+        }
+        seen.toSeq
+      }
+      assert(drained(aqeOff = false) == Seq(("2", "true", "2", "true")))
+      callers()
+      assert(drained(aqeOff = true) == Seq(("2", "false", "2", "false")))
+      callers()
+      // a body that throws fails the query, and the caller's values are back
+      val work = java.nio.file.Files.createTempDirectory("graft_drain_err").toString
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        Streams.drain(stream, work, aqeOff = true) { (_, _) =>
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("body failed")), e)
+      callers()
+      // and after twins return: a foreachBatch one, an AQE-off one, and
+      // a memory-sink one with an extra conf
+      Streams.pcaIngest(spark, dir,
+        java.nio.file.Files.createTempDirectory("graft_drain_pca").toString)
+      callers()
+      Streams.crossmodalIngest(spark, dir,
+        java.nio.file.Files.createTempDirectory("graft_drain_xm").toString)
+      callers()
+      Streams.leftOuterIntervalJoinToTable(spark, dir, "loj_conf_spec")
+      callers()
+    } finally {
+      for (k <- Seq(parts, aqe, Streams.StatePartitionsConf))
+        before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 }
